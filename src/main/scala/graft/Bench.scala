@@ -212,6 +212,9 @@ object Bench {
     }
     Queries.clearComparisonCache()
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    // A query that threw has no timing: it is listed here, left out of
+    // `queries` and of the total, so a crash never reads as a fast run.
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val vitals = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val vt = new Vitals(spark)
     val expected = SparkEntry.queries.size
@@ -223,7 +226,8 @@ object Bench {
     def render(complete: Boolean): String = {
       val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
       val vs = vitals.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec","queries":$qs,"vitals":$vs,"sf":"$sfDir","complete":$complete,"expected_queries":$expected}"""
+      val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+      s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec","queries":$qs,"failed":$fs,"vitals":$vs,"sf":"$sfDir","complete":$complete,"expected_queries":$expected}"""
     }
     // Mirror partial timings after EVERY query (atomic rewrite): round 2's
     // JVM died mid-measurement and, because the mirror was written only at
@@ -249,9 +253,14 @@ object Bench {
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       vt.reset()
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).queryExecution.toRdd.count()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-      results += name -> (System.nanoTime() - t0) / 1e9
+      try {
+        fn(spark, sfDir).queryExecution.toRdd.count()
+        results += name -> (System.nanoTime() - t0) / 1e9
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+      }
       vitals += name -> vt.snapshot()
       // Release ORPHANED iteration caches (pageRank / connectedComponents /
       // negativeSample localCheckpoints — RDD-level persistence CacheManager

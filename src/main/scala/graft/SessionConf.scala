@@ -1,0 +1,26 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** Scoped session configuration. */
+private[graft] object SessionConf {
+
+  /** Cached plans keep their output partitioning visible to the planner
+    * only while this is "false" (the PageRank lesson, `Graphs.scala`).
+    */
+  val CachedLayout = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+  /** Run `body` with the given session confs set, then restore each one's
+    * previous value (or unset it). The session is shared: other threads
+    * see the values while `body` runs.
+    */
+  def scoped[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+}

@@ -7,7 +7,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.Constants._
+import graft.SessionConf
 import graft.config.{DatasetParams, TestParams}
+import graft.functions.NestedChecksum
+import graft.functions.NestedChecksum.containsMap
 
 /** The four comparison reports for one dataset.
   *
@@ -68,15 +71,16 @@ final case class ComparisonResult(
   *    slim shape completes the same rung in bounded scratch;
   *  - the slim sides are cached PRE-PARTITIONED by the primary keys — ONE
   *    exchange per side for the whole engine. The full-outer join runs on
-  *    the co-partitioned layouts (sorts only), and the match stats, side
-  *    counts (the reference's four per-side actions,
-  *    `comparison_job.py:67-84`, as exchange-free per-key aggregations),
-  *    duplicate window, and fold-back all reuse them. Eager actions:
-  *    two cache fills + the slim stats job, then — only when mismatch
-  *    keys exist — the tolerance stats job over the refetched mismatch
-  *    set (`comparison_job.py:101-118`). A CLEAN compare (the common case
-  *    for a 100 TB regression gate) never materializes a full-width row
-  *    past the checksum scan. Overall and column-level reports are built
+  *    the co-partitioned layouts (sorts only), and the match stats,
+  *    duplicate window, and fold-back all reuse them. Eager actions: two
+  *    concurrent cache fills, each of which also returns its side's total
+  *    and duplicate-key counts (the reference's four per-side actions,
+  *    `comparison_job.py:67-84`, as one per-key aggregation over the
+  *    layout it fills), then the slim stats job, then — only when
+  *    mismatch keys exist — the tolerance stats job over the refetched
+  *    mismatch set (`comparison_job.py:101-118`). A CLEAN compare (the
+  *    common case for a 100 TB regression gate) never materializes a
+  *    full-width row past the checksum scan. Overall and column-level reports are built
   *    driver-side from the collected values; the row-level report stays
   *    lazy — vs the reference's seven-plus full-table jobs;
   *  - persisted frames use MEMORY_AND_DISK and are surfaced for explicit
@@ -121,24 +125,16 @@ object Comparison {
     case _ => false
   }
 
-  /** True when the type holds a MapType at any depth. Spark 4's `xxhash64`
-    * REJECTS maps (DATATYPE_MISMATCH unless the legacy allowHashOnMapType
-    * flag is set) and `<=>`/`=` reject them too (maps are unorderable), so
-    * the structural no-flag path cannot take map-bearing columns natively —
-    * they are routed through `to_json` automatically (checksum, per-column
-    * predicate, AND the unmatched extracts, whose `distinct()` is a set
-    * operation maps are also banned from).
-    */
-  private def containsMap(dt: DataType): Boolean = dt match {
-    case _: MapType => true
-    case s: StructType => s.fields.exists(f => containsMap(f.dataType))
-    case a: ArrayType => containsMap(a.elementType)
-    case _ => false
-  }
-
   /** Column `c` must go through `to_json` everywhere the engine touches it:
     * either the caller asked for JSON-canonical nested semantics, or the
-    * type carries a map Spark can neither hash nor equality-compare.
+    * type carries a map ([[containsMap]]) Spark can neither hash nor
+    * equality-compare. Spark 4's `xxhash64` REJECTS maps (DATATYPE_MISMATCH
+    * unless the legacy allowHashOnMapType flag is set) and `<=>`/`=` reject
+    * them too (maps are unorderable), so the structural no-flag path cannot
+    * take map-bearing columns natively: their checksum goes through the
+    * [[NestedChecksum]] kernel, and their per-column predicate AND unmatched
+    * extracts (whose `distinct()` is a set operation maps are also banned
+    * from) through the canonical JSON text.
     */
   private def jsonRouted(dt: DataType, params: TestParams): Boolean =
     isNested(dt) && (params.canonicalizeNestedTypes || containsMap(dt))
@@ -178,76 +174,21 @@ object Comparison {
 
   /** The engine's one JSON rendering: canonicalized (maps key-sorted) then
     * `to_json` — per-column predicates and unmatched extracts agree on it.
-    * The ROW CHECKSUM of JSON-routed columns hashes [[hashableNested]]
-    * instead (r16): a native canonical form exactly as fine as this text,
-    * without materializing a string per row in the one unavoidable
-    * full-width scan.
-    */
-  private def jsonCanonical(c: Column, dt: DataType): Column = to_json(canonMaps(c, dt))
-
-  /** Native canonical form of a JSON-routed value for the ROW CHECKSUM
-    * (guide §4 — keep the hot full-width scan on expressions, not on
-    * per-row Jackson string rendering). The value is rewrapped as
-    * `(isnull-marker, value)` structs at EVERY level, maps become
-    * key-sorted entry arrays (same comparator as [[canonMaps]], so the
-    * same unorderable-map-key limit applies: physical entry order is kept
-    * at that level), and float/double leaves carry an explicit
-    * sign-of-zero marker. The wrapping makes hash equality of the result
-    * EXACTLY as fine as equality of the canonical JSON text, which is
-    * what keeps every report identical to the `to_json` checksum it
-    * replaces:
+    * The ROW CHECKSUM of JSON-routed columns hashes the value with the
+    * [[NestedChecksum]] kernel instead: one codegen'd walk per row, at
+    * least as fine as this text, without materializing a string per row
+    * in the one unavoidable full-width scan.
     *
-    *  - `xxhash64` contributes nothing for a NULL input and nothing for
-    *    an empty container, so without the per-level markers `[NULL]` vs
-    *    `[]`, a NULL struct vs an all-NULL-fields struct, and a value
-    *    shifting across a NULL element would all FALSELY checksum-match
-    *    where the JSON text distinguishes them — a checksum-matched row
-    *    never reaches the per-column pass, so a false match would be
-    *    silent. The markers render every null explicitly, like the JSON
-    *    text does.
-    *  - Spark's hash (and `<=>`) normalize `-0.0` to `0.0` while the JSON
-    *    text keeps the sign; the zero-sign marker (string-cast begins with
-    *    `-`, evaluated only inside the `x = 0` branch — a division probe
-    *    would trip ANSI's DIVIDE_BY_ZERO) restores the distinction.
-    *  - All NaN bit patterns collapse in BOTH paths (the hash goes through
-    *    `doubleToLongBits`, the JSON writer prints one `NaN`), so no
-    *    marker is needed there.
-    *  - Maps never reach the hash as MapType (Spark 4 rejects hashing
-    *    maps); the sorted entry array is hashable and order-canonical.
-    *
-    * The finer-only direction is also safe BY CONSTRUCTION: a checksum
-    * mismatch on JSON-equal values (impossible under the mapping above,
-    * but the argument matters for future edits) would only route the key
-    * through the tolerance refetch, whose per-column predicate still uses
-    * [[jsonCanonical]] — the key comes back "rescued" and every report is
-    * unchanged; only a false MATCH could alter results, and the markers
+    * The finer-only direction is safe BY CONSTRUCTION: a checksum mismatch
+    * on JSON-equal values (a timestamp differing below the text's
+    * millisecond precision, say) only routes the key through the
+    * tolerance refetch, whose per-column predicate uses this text — the
+    * key comes back "rescued" and every report is unchanged. Only a false
+    * MATCH could alter results, and the kernel's per-slot NULL markers,
+    * container lengths, key-sorted map entries and sign-keeping float bits
     * exist to rule exactly that out.
     */
-  private def hashableNested(c: Column, dt: DataType): Column = dt match {
-    case m: MapType =>
-      val entries =
-        if (containsMap(m.keyType)) map_entries(c)
-        else array_sort(map_entries(c), (l, r) =>
-          when(l("key") < r("key"), -1).when(l("key") > r("key"), 1).otherwise(0))
-      val wrapped = transform(entries, e => struct(
-        hashableNested(e("key"), m.keyType).as("k"),
-        hashableNested(e("value"), m.valueType).as("v")))
-      struct(isnull(c).cast(IntegerType).as("n"), wrapped.as("v"))
-    case a: ArrayType =>
-      struct(
-        isnull(c).cast(IntegerType).as("n"),
-        transform(c, x => hashableNested(x, a.elementType)).as("v"))
-    case s: StructType =>
-      struct(
-        isnull(c).cast(IntegerType).as("n"),
-        struct(s.fields.toSeq.map(f =>
-          hashableNested(c.getField(f.name), f.dataType).as(f.name)): _*).as("v"))
-    case FloatType | DoubleType =>
-      val negZero = when(c === lit(0.0) && c.cast(StringType).startsWith("-"), 1).otherwise(0)
-      struct(isnull(c).cast(IntegerType).as("n"), c.as("v"), negZero.as("z"))
-    case _ =>
-      struct(isnull(c).cast(IntegerType).as("n"), c.as("v"))
-  }
+  private[graft] def jsonCanonical(c: Column, dt: DataType): Column = to_json(canonMaps(c, dt))
 
   /** Per-column match predicate (`comparison_job.py:19-34`): numerics match
     * within tolerance (NULL-vs-NULL numeric pairs yield NULL, kept — SURVEY
@@ -472,9 +413,10 @@ object Comparison {
     * across a NULL struct field — still collides, because Spark's hash
     * skips NULL elements/fields inside a container; set
     * `canonicalizeNestedTypes` (JSON text renders NULL elements
-    * explicitly) where that class matters. Map-bearing columns always go
-    * through `to_json` (see [[containsMap]]) — their NULL-vs-empty is
-    * already distinct (`NULL` vs `"{}"`).
+    * explicitly) where that class matters. JSON-routed columns (every
+    * map-bearing column, see [[jsonRouted]]) hash through the
+    * [[NestedChecksum]] kernel, which marks NULLs at every level and so has
+    * none of these collisions.
     */
   private def transformSide(
       df: DataFrame,
@@ -484,14 +426,15 @@ object Comparison {
     val schemaByName = df.schema.fields.map(f => f.name -> f.dataType).toMap
     val chkInputs = nonKeyCols.flatMap { c =>
       val dt = schemaByName(c)
-      // JSON-routed columns hash the NATIVE canonical form (r16): the
+      // JSON-routed columns hash through the codegen'd kernel: the
       // checksum scan is the one unavoidable pass over the full-width
-      // table, and rendering a JSON string per row there cost an order of
-      // magnitude over hashing expressions; hashableNested is exactly as
+      // table, and a JSON string (or a lambda-built canonical form) per row
+      // there costs several times the hashing; the kernel is at least as
       // fine as the canonical text, so match classification — and every
-      // report — is unchanged. Predicates and extracts (mismatch-pruned,
-      // tiny) keep the JSON rendering.
-      if (jsonRouted(dt, params)) Seq(hashableNested(col(c), dt))
+      // report — is unchanged. Both checksum halves hash the kernel's 16
+      // bytes, which subexpression elimination computes once per row.
+      // Predicates and extracts (mismatch-pruned, tiny) keep the JSON text.
+      if (jsonRouted(dt, params)) Seq(NestedChecksum(col(c), ChkSaltA, ChkSaltB))
       else if (isNested(dt)) Seq(isnull(col(c)).cast(IntegerType), col(c))
       else Seq(col(c))
     }
@@ -648,74 +591,51 @@ object Comparison {
     spark.conf.getOption(BroadcastMismatchKeysMaxConf)
       .map(_.toLong).getOrElse(BroadcastMismatchKeysMax)
 
-  /** The FIRST (always-run) eager job: every slim report number — per-key
-    * missing/checksum-matched/mismatch flags folded to totals, plus the
-    * reference's four per-side count actions (`comparison_job.py:67-84`)
-    * as one exchange-free per-key aggregation per side — as tagged
-    * (k, map) rows collected once.
+  /** One side's cache fill, fused with the reference's two per-side count
+    * actions (`comparison_job.py:67-84`): total = Σ per-key counts,
+    * dups = #keys with count > 1. The per-key aggregation consumes the
+    * side's hash(keys) layout in place (no exchange beyond the layout's
+    * own), and because it reads every partition of the persisted frame,
+    * the cache is fully materialized when it returns.
+    */
+  private def fillAndCountSide(slim: DataFrame, keyCols: Seq[String]): (Long, Long) = {
+    val r = slim
+      .groupBy(keyCols.map(col): _*)
+      .agg(count(lit(1)).as("c"))
+      .agg(coalesce(sum(col("c")), lit(0L)), count_if(col("c") > 1))
+      .head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** The always-run eager stats job over the joined slim frame: per-key
+    * missing/checksum-matched/mismatch flags folded to totals. Per-key
+    * `max` makes every flag duplicate-blind (the fold-back join only ever
+    * multiplies rows WITHIN a key). ZERO exchanges beyond the joined
+    * frame's own re-keying: the full-outer join runs on the co-partitioned
+    * slim caches (sorts only), and the per-key aggregation reuses that
+    * partitioning.
     *
-    * ZERO exchanges in this job beyond the two cache fills: the slim sides
-    * are cached pre-partitioned by the primary keys, so the full-outer
-    * join needs no exchange (sorts only), the per-key match aggregation
-    * reuses the join's partitioning, and each side-count aggregation runs
-    * directly on its side's cached layout. Per-key `max` makes every flag
-    * duplicate-blind (the fold-back join only ever multiplies rows WITHIN
-    * a key).
-    *
-    * Returns ((miss_src, miss_tgt, checksum-matched keys, mismatch keys),
-    * (src_total, src_dups, tgt_total, tgt_dups)).
+    * Returns (miss_src, miss_tgt, checksum-matched keys, mismatch keys).
     */
   private def collectSlimStats(
-      srcSlim: DataFrame,
-      tgtSlim: DataFrame,
       joinedSlim: DataFrame,
-      keyCols: Seq[String]): ((Long, Long, Long, Long), (Long, Long, Long, Long)) = {
-    val keyColumns = keyCols.map(col)
+      keyCols: Seq[String]): (Long, Long, Long, Long) = {
     val bothPresent =
       col(srcCol(ChkSumCol)).isNotNull && col(tgtCol(ChkSumCol)).isNotNull
-    val matchRow = joinedSlim
-      .groupBy(keyColumns: _*)
+    val r = joinedSlim
+      .groupBy(keyCols.map(col): _*)
       .agg(
         max(when(col(srcCol(ChkSumCol)).isNull, 1L).otherwise(0L)).as("ms"),
         max(when(col(tgtCol(ChkSumCol)).isNull, 1L).otherwise(0L)).as("mt"),
         max(when(col(AllRowsMatchedCol), 1L).otherwise(0L)).as("cm"),
         max(when(bothPresent && !col(AllRowsMatchedCol), 1L).otherwise(0L)).as("mk"))
       .agg(
-        coalesce(sum("ms"), lit(0L)).as("miss_src"),
-        coalesce(sum("mt"), lit(0L)).as("miss_tgt"),
-        coalesce(sum("cm"), lit(0L)).as("chk_matched"),
-        coalesce(sum("mk"), lit(0L)).as("mismatch_keys"))
-      .select(
-        lit("match").as("k"),
-        map(
-          lit("miss_src"), col("miss_src"), lit("miss_tgt"), col("miss_tgt"),
-          lit("chk_matched"), col("chk_matched"),
-          lit("mismatch_keys"), col("mismatch_keys")).as("m"))
-    // total = Σ per-key counts, dups = #keys with count > 1 — identical by
-    // construction to the reference's four side actions; each side's
-    // per-key count aggregates its own cached hash(keys) layout, no
-    // exchange, no source re-scan.
-    def sideRow(slim: DataFrame, tag: String, totalKey: String, dupsKey: String): DataFrame =
-      slim
-        .groupBy(keyColumns: _*)
-        .agg(count(lit(1)).as("c"))
-        .agg(
-          coalesce(sum(col("c")), lit(0L)).as("total"),
-          coalesce(sum(when(col("c") > 1, 1L)), lit(0L)).as("dups"))
-        .select(
-          lit(tag).as("k"),
-          map(lit(totalKey), col("total"), lit(dupsKey), col("dups")).as("m"))
-    val byK = matchRow
-      .unionByName(sideRow(srcSlim, "side_src", "src_total", "src_dups"))
-      .unionByName(sideRow(tgtSlim, "side_tgt", "tgt_total", "tgt_dups"))
-      .collect()
-      .map(r => r.getString(0) -> r.getMap[String, Long](1))
-      .toMap
-    val mk = byK("match")
-    val ss = byK("side_src")
-    val st = byK("side_tgt")
-    ((mk("miss_src"), mk("miss_tgt"), mk("chk_matched"), mk("mismatch_keys")),
-      (ss("src_total"), ss("src_dups"), st("tgt_total"), st("tgt_dups")))
+        coalesce(sum("ms"), lit(0L)),
+        coalesce(sum("mt"), lit(0L)),
+        coalesce(sum("cm"), lit(0L)),
+        coalesce(sum("mk"), lit(0L)))
+      .head()
+    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
   }
 
   /** The SECOND eager job (mismatch keys only): tolerance rescues and the
@@ -786,7 +706,7 @@ object Comparison {
   }
 
   /** Column-level report (`comparison_job.py:101-118`) built driver-side
-    * from the sums [[sideAndColumnStats]] already collected — one row per
+    * from the sums [[collectToleranceStats]] already collected — one row per
     * non-key column, in schema order, zero Spark jobs.
     */
   private def columnLevelReport(
@@ -827,19 +747,12 @@ object Comparison {
       params: DatasetParams): ComparisonResult = {
     // The slim sides are cached PRE-PARTITIONED by the primary keys, and
     // everything keyed downstream — the full-outer join, the match stats,
-    // the side counts, the fold-back — reuses that one exchange per side.
+    // the fold-back — reuses that one exchange per side.
     // InMemoryRelation only keeps a cached layout visible to the planner
     // under canChangeCachedPlanOutputPartitioning=false (the PageRank
     // lesson, Graphs.scala); scope it around construction exactly.
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevCacheConf = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "false")
-    try buildComparison(spark, sourceDf, targetDf, params)
-    finally {
-      prevCacheConf match {
-        case Some(v) => spark.conf.set(cacheKey, v)
-        case None => spark.conf.unset(cacheKey)
-      }
+    SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
+      buildComparison(spark, sourceDf, targetDf, params)
     }
   }
 
@@ -932,10 +845,12 @@ object Comparison {
     // The two fills are independent jobs; run them CONCURRENTLY (guide
     // §2.6 — actions are only sequential because the driver calls them
     // sequentially) so one side's checksum-scan tail back-fills the other
-    // side's idle cores. Both caches are still fully materialized before
-    // any downstream plan is built, which is what the co-partitioned
-    // zero-exchange planning below requires.
-    Par.runAll(Seq(() => srcSlim.count(), () => tgtSlim.count()))
+    // side's idle cores. Each fill also returns its side's counts, so the
+    // stats job below never re-reads the caches for them. Both caches are
+    // fully materialized before any downstream plan is built, which is
+    // what the co-partitioned zero-exchange planning below requires.
+    val Seq((srcTotal, srcDups), (tgtTotal, tgtDups)) = Par.runAll(Seq(
+      () => fillAndCountSide(srcSlim, keyCols), () => fillAndCountSide(tgtSlim, keyCols)))
 
     // Align the sides: the full-outer join (J1, never broadcastable) runs
     // on the co-partitioned cached layouts — sorts only, NO exchange.
@@ -959,11 +874,10 @@ object Comparison {
       .repartition(slimPartitions, keyColumns: _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // FIRST eager stats job: every slim report number (fills the
+    // FIRST eager stats job: every slim match number (fills the
     // joinedSlim persist as a side effect), including the mismatch-key
     // count that decides whether — and how — the refetch runs.
-    val ((missSrc, missTgt, chkMatched, mismatchKeyCount), sideTotals) =
-      collectSlimStats(srcSlim, tgtSlim, joinedSlim, keyCols)
+    val (missSrc, missTgt, chkMatched, mismatchKeyCount) = collectSlimStats(joinedSlim, keyCols)
 
     val bothPresent =
       col(srcCol(ChkSumCol)).isNotNull && col(tgtCol(ChkSumCol)).isNotNull
@@ -1041,7 +955,8 @@ object Comparison {
           keyCols)
     }
     val overall =
-      overallReport(spark, params.datasetName, sideTotals, missSrc, missTgt, matchedCount)
+      overallReport(spark, params.datasetName, (srcTotal, srcDups, tgtTotal, tgtDups),
+        missSrc, missTgt, matchedCount)
 
     ComparisonResult(
       overallTestReport = overall,

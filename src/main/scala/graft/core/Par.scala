@@ -58,8 +58,11 @@ private[graft] object Par {
 
   /** [[attemptAll]], rethrowing the first (argument-order) failure after
     * every task has settled — the deterministic parallel analogue of a
-    * sequential fail-fast loop.
+    * sequential fail-fast loop. Returns the results in argument order.
     */
-  def runAll(tasks: Seq[() => Unit]): Unit =
-    attemptAll(tasks).collectFirst { case Left(e) => e }.foreach(e => throw e)
+  def runAll[A](tasks: Seq[() => A]): Seq[A] = {
+    val outcomes = attemptAll(tasks)
+    outcomes.collectFirst { case Left(e) => e }.foreach(e => throw e)
+    outcomes.collect { case Right(a) => a }
+  }
 }

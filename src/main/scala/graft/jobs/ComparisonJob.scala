@@ -3,6 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Constants._
+import graft.SessionConf
 import graft.config._
 import graft.core.{Comparison, ComparisonResult}
 import graft.sources.IoUtils
@@ -11,8 +12,8 @@ import graft.sources.IoUtils
   * (`comparison_job.py:163-184, 258-292`):
   *
   *  - [[runComparisonJob]] — config-driven: read each dataset's source and
-  *    target, compare, positional-union the per-dataset reports in config
-  *    order, merge the extract maps, write everything under
+  *    target, compare, positional-union the per-dataset reports in
+  *    dataset-name order, merge the extract maps, write everything under
   *    `output_dir/job_name/<report>` (EP1);
   *  - [[runComparisonJobFromDfs]] — caller-supplied DataFrames (EP2).
   *
@@ -46,6 +47,18 @@ object ComparisonJob {
       col(DuplicateCountCol), col(MissingRowStatusCol), col(AllRowsMatchedCol))
   }
 
+  /** Write every report of `result` under `output_dir/job_name`. Rows are
+    * written in the reports' own order, with no sort: [[runComparisonJob]]
+    * unions datasets in name order, so part files list datasets in
+    * ascending name order whenever the write keeps the partitions
+    * (`no_of_partitions` ≤ 0, or 1).
+    *
+    * Union children with the same hash partitioning (the row-level reports
+    * of datasets with equal key columns and slim partition counts) would be
+    * zipped partition by partition, every part file then holding a slice of
+    * each dataset; the writes plan with that off, so the children's
+    * partitions are concatenated in union order.
+    */
   def writeResults(
       result: ComparisonResult,
       jobName: String,
@@ -54,24 +67,22 @@ object ComparisonJob {
     // Every report targets its own directory, so the writes are independent
     // jobs — overlap them (guide §2.6) instead of paying each small write's
     // commit latency serially. Failures rethrow in this argument order.
-    graft.core.Par.runAll(
+    val writes: Seq[() => Unit] =
       Seq(
         () => IoUtils.writeResult(
-          result.colLvlTestReport.orderBy(DatasetNameCol),
-          s"$base/$ColLvlTestReportDir",
-          outputConfig),
+          result.colLvlTestReport, s"$base/$ColLvlTestReportDir", outputConfig),
         () => IoUtils.writeResult(
-          result.rowLvlTestReport.orderBy(DatasetNameCol),
-          s"$base/$RowLvlTestReportDir",
-          outputConfig)) ++
+          result.rowLvlTestReport, s"$base/$RowLvlTestReportDir", outputConfig)) ++
         result.unmatchedRecords.toSeq.map { case (colName, df) =>
           () => IoUtils.writeResult(df, s"$base/${unmatchedRowsDir(colName)}", outputConfig)
         } ++
         Seq(() => IoUtils.writeResult(
-          result.overallTestReport.orderBy(DatasetNameCol),
-          s"$base/$OverallTestReportDir",
-          outputConfig)))
+          result.overallTestReport, s"$base/$OverallTestReportDir", outputConfig))
+    val spark = result.overallTestReport.sparkSession
+    SessionConf.scoped(spark, UnionOutputPartitioningConf -> "false")(graft.core.Par.runAll(writes))
   }
+
+  private val UnionOutputPartitioningConf = "spark.sql.unionOutputPartitioning"
 
   def runComparisonJobFromDfs(
       spark: SparkSession,
@@ -102,9 +113,10 @@ object ComparisonJob {
       ConfigReader.decodeDatasetParams(params),
       ConfigReader.decodeOutputConfig(outputConfig))
 
-  /** Positional union of per-dataset reports (`comparison_job.py:277-291`).
-    * With `normalizeRowKeys` the row-level reports pass through
-    * [[normalizeRowReport]] first, so heterogeneous key schemas union.
+  /** Positional union of per-dataset reports (`comparison_job.py:277-291`),
+    * in the order given. With `normalizeRowKeys` the row-level reports pass
+    * through [[normalizeRowReport]] first, so heterogeneous key schemas
+    * union.
     */
   def consolidate(
       results: Seq[ComparisonResult],
@@ -148,19 +160,16 @@ object ComparisonJob {
     // sequence back-fills cores the others' straggler tails leave idle,
     // which is where the sequential loop lost most of its wall-clock (the
     // per-dataset jobs are many and small). Outcomes come back in config
-    // order, so report order, fail-fast choice ("first" = first in config
-    // order) and the captured-failure set are identical to the sequential
-    // loop. The cached-partitioning conf that compareDataFrames scopes
-    // around each construction is HOISTED around the whole parallel
-    // section: with per-dataset set/restore, dataset A's restore could
-    // strip cached-layout visibility mid-B-planning; under the hoist every
-    // inner capture/restore sees the same "false", so the inner scoping
+    // order, so the fail-fast choice ("first" = first in config order) and
+    // the captured-failure set are identical to the sequential loop. The
+    // cached-partitioning conf that compareDataFrames scopes around each
+    // construction is HOISTED around the whole parallel section: with
+    // per-dataset set/restore, dataset A's restore could strip cached-layout
+    // visibility mid-B-planning; under the hoist every inner
+    // capture/restore sees the same "false", so the inner scoping
     // degenerates to a harmless no-op.
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevCacheConf = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "false")
     val outcomes: Seq[Either[Throwable, ComparisonResult]] =
-      try {
+      SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
         graft.core.Par.attemptAll(config.datasetConfigs.map { dc => () =>
           val r = Comparison.compareDataFrames(
             spark,
@@ -187,11 +196,6 @@ object ComparisonJob {
           }
           r
         })
-      } finally {
-        prevCacheConf match {
-          case Some(v) => spark.conf.set(cacheKey, v)
-          case None => spark.conf.unset(cacheKey)
-        }
       }
     val attempts: Seq[Either[(String, Throwable), ComparisonResult]] =
       config.datasetConfigs.zip(outcomes).map {
@@ -205,19 +209,24 @@ object ComparisonJob {
           Left(dc.params.datasetName -> e)
       }
     val failures = attempts.collect { case Left(f) => f }
-    val successes = attempts.collect { case Right(r) => r }
-    if (successes.isEmpty)
+    if (!attempts.exists(_.isRight))
       throw new IllegalStateException(
         s"all ${attempts.size} datasets failed; first error (dataset " +
           s"'${failures.head._1}') attached as cause",
         failures.head._2)
-    val consolidated = consolidate(successes, config.normalizeRowKeys)
+    // Reports union in dataset-name order (stable: equal names keep config
+    // order), the FAILED overall rows in their places, so the written part
+    // files come out in name order without a sort job per report.
+    val byName = config.datasetConfigs.map(_.params.datasetName).zip(attempts).sortBy(_._1)
+    val consolidated =
+      consolidate(byName.collect { case (_, Right(r)) => r }, config.normalizeRowKeys)
     val withFailures =
       if (failures.isEmpty) consolidated
       else consolidated.copy(
-        overallTestReport = failures.foldLeft(consolidated.overallTestReport) {
-          case (acc, (name, _)) => acc.union(Comparison.failedOverallReport(spark, name))
-        },
+        overallTestReport = byName.map {
+          case (_, Right(r)) => r.overallTestReport
+          case (name, Left(_)) => Comparison.failedOverallReport(spark, name)
+        }.reduce(_ union _),
         failures = failures.map { case (n, e) => n -> String.valueOf(e.getMessage) }.toMap)
     writeResults(withFailures, config.jobName, config.outputConfig)
     withFailures

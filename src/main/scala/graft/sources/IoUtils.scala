@@ -23,15 +23,20 @@ object IoUtils {
 
   /** Write a report DataFrame to `path` per the output config. */
   def writeResult(df: DataFrame, path: String, outputConfig: OutputConfig): Unit = {
+    val n = outputConfig.noOfPartitions
+    // coalesce avoids a shuffle when reducing parallelism; a full
+    // repartition is only paid when the caller asks for MORE output files
+    // than the plan has (io_utils.py:15-16). The plan's partition count is
+    // read from the physical plan, not from `df.rdd.getNumPartitions`: on
+    // an adaptive plan that call runs every upstream shuffle stage, and the
+    // write then runs them all again. Under AQE the planned count is the
+    // count before runtime coalescing, so a write that asks for more files
+    // than AQE leaves can get fewer. One file never needs the plan at all.
     val sized =
-      if (outputConfig.noOfPartitions > 0) {
-        // coalesce avoids a shuffle when reducing parallelism; a full
-        // repartition is only paid when the caller asks for MORE output
-        // files than the plan currently has (io_utils.py:15-16).
-        if (outputConfig.noOfPartitions < df.rdd.getNumPartitions)
-          df.coalesce(outputConfig.noOfPartitions)
-        else df.repartition(outputConfig.noOfPartitions)
-      } else df
+      if (n <= 0) df
+      else if (n == 1 || n < df.queryExecution.executedPlan.outputPartitioning.numPartitions)
+        df.coalesce(n)
+      else df.repartition(n)
     sized.write
       .options(outputConfig.sparkOptions)
       .mode(Constants.OverwriteMode)

@@ -1,0 +1,134 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+
+import scala.collection.concurrent.TrieMap
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+
+import graft.config.OutputConfig
+import graft.jobs.ComparisonJob
+import graft.sources.IoUtils
+
+/** Pins how many Spark jobs the compare path runs, and the written order of
+  * the consolidated reports. Each job is charged by the call site of the
+  * action that submitted it (`head at Comparison.scala:…` is the engine,
+  * `save at IoUtils.scala:…` the report writes).
+  */
+class JobShapeSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** The call site of every job `body` submits, in submission order. A
+    * job of a SQL query is charged to the call site of the query's root
+    * execution: adaptive query stages submit their jobs from Spark's own
+    * threads, whose own call sites name no engine file.
+    */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val execs = TrieMap.empty[Long, (Long, String)] // id -> (root id, call site)
+    val jobs = ArrayBuffer.empty[Either[Long, String]] // execution id, or own call site
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          execs(s.executionId) = (s.rootExecutionId.getOrElse(s.executionId), s.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
+        jobs += Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .map(id => Left(id.toLong))
+          .getOrElse(Right(e.stageInfos.map(_.name).lastOption.getOrElse("")))
+      }
+    }
+    TestListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; TestListenerBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.synchronized(jobs.toSeq).map {
+      case Left(id) => execs.get(id).flatMap(r => execs.get(r._1)).map(_._2).getOrElse(s"execution $id")
+      case Right(site) => site
+    }
+  }
+
+  /** Engine layer of a job's call site. */
+  private def layer(site: String): String =
+    if (site.contains("Comparison.scala")) "core"
+    else if (site.startsWith("save at IoUtils.scala")) "write"
+    else if (site.startsWith("load at IoUtils.scala")) "read"
+    else site
+
+  private def partFiles(dir: String): Seq[File] =
+    Option(new File(dir).listFiles).toSeq.flatten
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+
+  private def datasetCfg(name: String, path: String): Map[String, Any] = Map(
+    "params" -> Map("dataset_name" -> name, "primary_keys" -> Seq("id")),
+    "source_config" -> Map("path" -> path),
+    "target_config" -> Map("path" -> path))
+
+  test("a clean runComparisonJob runs 11 engine jobs and 4 write jobs") {
+    val tmp = Files.createTempDirectory("graft-jobs").toString
+    Seq.tabulate(200)(i => (i.toLong, s"v$i", i * 0.5, Map("k" -> s"m$i")))
+      .toDF("id", "s", "d", "m").write.parquet(s"$tmp/in")
+    val cfg = Map[String, Any](
+      "job_name" -> "clean",
+      "dataset_configs" -> Seq(datasetCfg("t", s"$tmp/in")),
+      "output_config" -> Map("output_dir" -> s"$tmp/out"))
+    ComparisonJob.runComparisonJob(spark, cfg).unpersist() // warm-up: same plans, cold JIT
+    var status = ""
+    val byLayer = jobsOf {
+      val r = ComparisonJob.runComparisonJob(spark, cfg)
+      status = r.overallTestReport.head().getAs[String]("test_status")
+      r.unpersist()
+    }.groupBy(layer).view.mapValues(_.size).toMap
+    assert(status == "PASSED")
+    // engine: the two cache fills, which also return the side counts, and
+    // the slim stats job (each an adaptive query of several stage jobs);
+    // writes: the three reports, with no range sort in front of any
+    assert(byLayer == Map("read" -> 2, "core" -> 11, "write" -> 4), byLayer)
+  }
+
+  test("consolidated reports are written in dataset-name order, FAILED rows included") {
+    val tmp = Files.createTempDirectory("graft-order").toString
+    Seq.tabulate(50)(i => (i.toLong, s"v$i")).toDF("id", "v").write.parquet(s"$tmp/in")
+    // config order c, a, b; b cannot be read and becomes a FAILED row
+    def run(partitions: Int): Unit = ComparisonJob.runComparisonJob(spark, Map[String, Any](
+      "job_name" -> s"order_$partitions",
+      "continue_on_error" -> true,
+      "dataset_configs" -> Seq(
+        datasetCfg("c_ds", s"$tmp/in"),
+        datasetCfg("a_ds", s"$tmp/in"),
+        datasetCfg("b_ds", s"$tmp/missing")),
+      "output_config" -> Map("output_dir" -> s"$tmp/out", "no_of_partitions" -> partitions)))
+      .unpersist()
+    for (partitions <- Seq(-1, 1)) {
+      run(partitions)
+      for ((report, expected) <- Seq(
+          "overall_test_report" -> Seq("a_ds", "b_ds", "c_ds"),
+          "row_lvl_test_report" -> Seq("a_ds", "c_ds"),
+          "col_lvl_test_report" -> Seq("a_ds", "c_ds"))) {
+        val files = partFiles(s"$tmp/out/order_$partitions/$report")
+        if (partitions == 1) assert(files.size == 1, s"$report: ${files.map(_.getName)}")
+        val names = files.flatMap(f =>
+          spark.read.parquet(f.getPath).select("dataset_name").as[String].collect().toSeq)
+        assert(names == names.sorted, s"$report (no_of_partitions $partitions): $names")
+        assert(names.distinct == expected, s"$report (no_of_partitions $partitions): $names")
+      }
+    }
+  }
+
+  test("a no_of_partitions 1 write runs no job before its own and writes one file") {
+    import org.apache.spark.sql.functions.{col, count}
+    val tmp = Files.createTempDirectory("graft-write").toString
+    def frame = Seq.tabulate(400)(i => (i % 37, i)).toDF("g", "v")
+      .groupBy("g").agg(count(col("v")).as("n")).orderBy("g")
+    val direct = jobsOf(frame.coalesce(1).write.parquet(s"$tmp/direct")).size
+    val viaIo = jobsOf(IoUtils.writeResult(frame, s"$tmp/io", OutputConfig(s"$tmp/io", noOfPartitions = 1)))
+    assert(viaIo.size == direct, s"writeResult ran ${viaIo.size} jobs, a plain write $direct: $viaIo")
+    assert(viaIo.forall(layer(_) == "write"), viaIo)
+    assert(partFiles(s"$tmp/io").size == 1)
+    assert(spark.read.parquet(s"$tmp/io").count() == 37L)
+  }
+}
