@@ -57,10 +57,15 @@ object Bench {
   }
 
   /** Per-query JVM/engine vitals, measured over exactly the timed window:
-    * process-CPU seconds and GC ms as deltas, post-query heap / Spark
+    * process-CPU seconds and GC ms as deltas, post-GC heap / Spark
     * storage-memory occupancy and cumulative codegen-compilation count as
-    * absolutes, plus the 1-minute system load. The shared-JVM driver
-    * sequence has repeatedly inflated a ROTATING band of queries 3-5×
+    * absolutes, plus the 1-minute system load. `heap_mb` is the heap each
+    * pool held right after its most recent collection
+    * (`MemoryPoolMXBean.getCollectionUsage`, which forces no GC): what the
+    * last GC could not reclaim, without the garbage allocated since, so it
+    * tracks live data instead of how long ago the last GC ran. The
+    * shared-JVM driver sequence has repeatedly inflated a ROTATING band of
+    * queries 3-5×
     * (r11 text, r12 profile/sample, r13 graph/stream) that fresh-JVM
     * probes time at 1× on identical code, so each BENCH artifact now
     * adjudicates itself: flat cpu/gc/storage with inflated wall means the
@@ -77,6 +82,15 @@ object Bench {
       gcBeans.forEach(b => s += math.max(0L, b.getCollectionTime))
       s
     }
+    private val heapPools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+    private def postGcHeapBytes: Long = {
+      var s = 0L
+      heapPools.forEach { p =>
+        val u = if (p.getType == java.lang.management.MemoryType.HEAP) p.getCollectionUsage else null
+        if (u != null) s += u.getUsed
+      }
+      s
+    }
     private def codegenCount: Long =
       try org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       catch { case _: Throwable => -1L }
@@ -86,7 +100,7 @@ object Bench {
     def snapshot(): String = {
       val cpuSec = (osBean.getProcessCpuTime - cpu0) / 1e9
       val gcDelta = gcMsNow - gc0
-      val heapMb = (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) >> 20
+      val heapMb = postGcHeapBytes >> 20
       val storeMb =
         try spark.sparkContext.statusTracker.getExecutorInfos
           .map(e => e.usedOnHeapStorageMemory + e.usedOffHeapStorageMemory).sum >> 20

@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -32,16 +31,17 @@ final case class ComparisonResult(
   def unpersist(): Unit = cachedFrames.foreach(_.unpersist())
 }
 
-/** The comparison engine: full-outer-join source and target on the primary
-  * keys, match rows via a 128-bit salted-xxhash row checksum, re-examine
+/** The comparison engine: align source and target on the primary keys,
+  * match rows via a 128-bit salted-xxhash row checksum, re-examine
   * checksum mismatches column-by-column with a numeric tolerance, and emit
   * four reports (overall / row-level / column-level / per-column unmatched
   * extracts).
   *
-  * Faithful to the reference algorithm (`comparison_job.py:186-256`) and its
-  * pinned semantics (SURVEY §2.10: `MISSTING_AT_TARGET` literal, M·N−1
-  * row-level duplicate counts, NULL-poisoned numeric tolerance, PASSED ⇔
-  * both side counts equal matched count), but re-planned Spark-first:
+  * Faithful to the reference algorithm (`comparison_job.py:186-256`, a
+  * full-outer join on the keys) and its pinned semantics (SURVEY §2.10:
+  * `MISSTING_AT_TARGET` literal, M·N−1 row-level duplicate counts,
+  * NULL-poisoned numeric tolerance, PASSED ⇔ both side counts equal matched
+  * count), but re-planned Spark-first:
   *
   *  - non-key columns are derived AFTER select/drop projection, in schema
   *    order (deterministic; fixes the reference's latent crash when
@@ -56,53 +56,59 @@ final case class ComparisonResult(
   *    automatically (Spark 4 can neither hash nor equality-compare maps)
   *    and `canonicalizeNestedTypes` remains for JSON-canonical semantics
   *    on everything nested;
-  *  - the alignment join is SLIM: only the primary keys and a 16-byte
-  *    (two-long) row checksum per side go through the one unavoidable wide
-  *    shuffle, so its exchange ships ~24-50 bytes/row REGARDLESS of table
-  *    width. Full-width rows are touched exactly twice: the columnar scan
-  *    that derives the checksums, and — only when mismatches exist — a
-  *    PRUNED refetch of the mismatched-present keys (broadcast semi join
-  *    below [[BroadcastMismatchKeysMax]] keys, Bloom-pruned semi join
+  *  - the alignment is SLIM and COUNTED, not joined: only the primary keys,
+  *    a 16-byte (two-long) row checksum and a side tag go through the one
+  *    unavoidable wide shuffle — ONE hash(keys) exchange carrying both
+  *    sides, ~30-50 bytes/row REGARDLESS of table width. Two aggregations
+  *    consume that exchange in place and leave the per-key COUNT FRAME:
+  *    M (source rows), N (target rows) and P = Σ M_c·N_c over the key's
+  *    distinct checksums c (the checksum-matched pairs). Every number the
+  *    reference reads off its joined frame is a function of (M, N, P) and
+  *    whether the key is aligned (below), so the M·N joined pairs are
+  *    never built. Full-width rows are touched exactly twice: the columnar
+  *    scan that derives the checksums, and — only when mismatches exist —
+  *    a PRUNED refetch of the mismatched-present keys (broadcast semi join
+  *    up to [[BroadcastMismatchKeysMax]] keys, Bloom-pruned semi join
   *    above it, `operators/Pruning.scala`) that feeds the per-column
   *    tolerance pass and the extracts. The r11 predecessor carried every
   *    renamed non-key column of both sides through the full-outer shuffle
   *    and persisted the full-width joined frame — at the sf100 ladder
-  *    rung that spilled ~60 GB/side and exhausted the box's scratch; the
-  *    slim shape completes the same rung in bounded scratch;
-  *  - the slim sides are cached PRE-PARTITIONED by the primary keys — ONE
-  *    exchange per side for the whole engine. The full-outer join runs on
-  *    the co-partitioned layouts (sorts only), and the match stats,
-  *    duplicate window, and fold-back all reuse them. Eager actions: two
-  *    concurrent cache fills, each of which also returns its side's total
-  *    and duplicate-key counts (the reference's four per-side actions,
-  *    `comparison_job.py:67-84`, as one per-key aggregation over the
-  *    layout it fills), then the slim stats job, then — only when
-  *    mismatch keys exist — the tolerance stats job over the refetched
-  *    mismatch set (`comparison_job.py:101-118`). A CLEAN compare (the
-  *    common case for a 100 TB regression gate) never materializes a
-  *    full-width row past the checksum scan. Overall and column-level reports are built
+  *    rung that spilled ~60 GB/side and exhausted the box's scratch;
+  *  - the count frame is the only cache of a clean compare. Eager actions:
+  *    ONE stats job over it (which also fills it) returns all eight
+  *    overall numbers — the reference's four per-side actions
+  *    (`comparison_job.py:67-84`) plus the missing, checksum-matched and
+  *    mismatch key counts — then, only when mismatch keys exist, the
+  *    tolerance stats job over the refetched mismatch set
+  *    (`comparison_job.py:101-118`). A CLEAN compare (the common case for
+  *    a 100 TB regression gate) never materializes a full-width row past
+  *    the checksum scan. Overall and column-level reports are built
   *    driver-side from the collected values; the row-level report stays
-  *    lazy — vs the reference's seven-plus full-table jobs;
+  *    lazy, a narrow projection of the count frame — vs the reference's
+  *    seven-plus full-table jobs;
   *  - persisted frames use MEMORY_AND_DISK and are surfaced for explicit
   *    release.
   *
-  * Scale notes: the full-outer join (J1) can never broadcast — it
-  * shuffle-partitions both (slim) sides by the primary keys, and the
-  * downstream key-wise aggregations and the fold-back reuse that hash
-  * partitioning. The tolerance refetch rebuilds the M·N cross product for
+  * NULL keys: a key is ALIGNED when every key column is non-NULL and both
+  * sides hold rows for it (M > 0 and N > 0). The reference's USING join
+  * never matches a NULL key part, while grouping puts NULLs together, so a
+  * key with a NULL part is never aligned: its rows report as missing on
+  * each side that has them, and it counts once per side in the duplicate
+  * and missing figures — exactly what grouping the joined frame gave.
+  *
+  * Scale notes: the tolerance refetch rebuilds the M·N cross product for
   * MISMATCHED keys only, from the pruned full-width sides, and re-derives
   * the checksums deterministically — the rebuilt pair set is row-identical
-  * to filtering the (no longer materialized) full-width join.
+  * to filtering the (never materialized) full-width join.
   *
-  * Skew: AQE skew-join splitting (enabled in [[graft.GraftSession]],
-  * demonstrated in PlanSpec) engages on the splittable joins — notably the
-  * tolerance fold-back LEFT join, whose big (left) side Spark can split.
-  * Spark can NOT skew-split a full-outer sort-merge join (replicating
-  * either side would fabricate unmatched rows), but the alignment join is
-  * structurally protected: its keys are the PRIMARY keys, so a hot key can
-  * only come from duplicated PKs — a data-quality defect this engine
-  * exists to surface (duplicate counts in the overall/row-level reports),
-  * with the same M·N cross-product cost the reference pays by definition.
+  * Skew: a hot key can only come from duplicated PKs — a data-quality
+  * defect this engine exists to surface (duplicate counts in the
+  * overall/row-level reports). On the alignment it costs the rows
+  * counted: one hash-aggregation entry per (key, checksum) in the key's
+  * partition, never the M·N joined pairs the reference builds. The
+  * tolerance refetch does build M·N pairs for a mismatched hot key; AQE
+  * skew-join splitting (enabled in [[graft.GraftSession]], demonstrated on
+  * a left-outer join in PlanSpec) applies to its inner joins too.
   * Partition-level imbalance from hash collisions of distinct keys is
   * negligible at any corpus size.
   */
@@ -376,10 +382,10 @@ object Comparison {
 
   /** Checksum + per-side rename (`comparison_job.py:36-47`): one row
     * checksum over the non-key columns turns the N-column row match into a
-    * single compare; non-key columns get the side suffix so the full-outer
-    * join only coalesces the key columns. The checksum is a STRUCT of two
+    * single compare; non-key columns get the side suffix so the refetch's
+    * pair join only merges the key columns. The checksum is a STRUCT of two
     * differently-salted `xxhash64` longs — internal (never reported), only
-    * ever tested for null-safe equality and nullness.
+    * ever tested for equality and nullness.
     *
     * Why not the reference's `sha256(concat_ws("", cols))`
     * (`comparison_job.py:41`): (1) cost — the checksum scan is the one
@@ -463,67 +469,76 @@ object Comparison {
         .getOrElse(lit(true)))
   }
 
-  /** Row-level report (`comparison_job.py:134-161`): per key — M·N−1
-    * duplicate count over the joined cross product, missing-side status from
-    * checksum nulls (a present row always has a non-null checksum), and the
-    * final matched flag, collapsed to one row per distinct combination.
+  /** The alignment's side tag (true on source rows), and the per-key
+    * count frame's columns: source rows M, target rows N, and
+    * checksum-matched pairs P = Σ M_c·N_c over the key's checksums c; and
+    * R, a mismatched key's tolerance-passing pairs.
+    */
+  private val SideCol = "__is_src"
+  private val SrcRowsCol = "__m"
+  private val TgtRowsCol = "__n"
+  private val ChkPairsCol = "__p"
+  private val RescuedPairsCol = "__r"
+
+  /** The key is ALIGNED — its rows pair up in the reference's full-outer
+    * USING join — iff every key column is non-NULL and both sides hold
+    * rows for it (see the NULL-key rule on [[Comparison]]).
+    */
+  private def alignedKey(keyCols: Seq[String]): Column =
+    keyCols.map(col(_).isNotNull)
+      .foldLeft(col(SrcRowsCol) > 0L && col(TgtRowsCol) > 0L)(_ && _)
+
+  /** Row-level report (`comparison_job.py:134-161`): the reference's
+    * per-(key, status, matched) rows with the M·N−1 duplicate count over
+    * the joined cross product, read straight off the count frame. A
+    * narrow projection — no exchange, at most two rows per key:
     *
-    * Planned as AGGREGATE-then-window: rows collapse to one per
-    * `(key, status, matched)` combo BEFORE the duplicate-count window.
-    * Output-identical to the reference's window-then-`distinct` (status is
-    * a per-key constant — it depends only on which sides are present — and
-    * the dataset/dup-count columns are per-key constants too, so the only
-    * within-key variation is `matched`), but the window sorts ~|keys|
-    * 30-byte rows instead of the full M·N join with two 16-byte checksums
-    * aboard, and the old post-window distinct pass disappears — at the
-    * sf100 rung that sort+distinct dominated the report materialization.
-    * ONE slim exchange in the whole report, pinned explicitly (see the
-    * repartition below; PlanSpec asserts the count): the report plans on
-    * the consumer side, outside the cached-partitioning conf scope, so
-    * "reuse the slim join's partitioning" is not something the planner
-    * can see there — left to itself it exchanged the slim rows twice.
+    *  - aligned, no tolerance-passing pair: `(M·N−1, PRESENT_IN_BOTH,
+    *    true)` if any pair checksum-matched (P > 0), and `(M·N−1,
+    *    PRESENT_IN_BOTH, false)` if any did not (M·N > P);
+    *  - aligned, R > 0 tolerance-passing pairs: the reference's fold-back
+    *    left join multiplies each of the key's M·N pairs by R and marks
+    *    them all matched — one row `(M·N·R−1, PRESENT_IN_BOTH, true)`;
+    *  - not aligned: the M + N unpaired rows, `(M+N−1, MISSTING_AT_TARGET,
+    *    false)` if M > 0 and `(M+N−1, MISSING_AT_SOURCE, false)` if N > 0.
+    *
+    * `rescued` holds R per key (tolerance-passing pairs, mismatch path
+    * only), at most one row per mismatch key.
     */
   private def rowLevelReport(
       datasetName: String,
-      joined: DataFrame,
+      counts: DataFrame,
       keyCols: Seq[String],
-      nPartitions: Int): DataFrame = {
-    val keyColumns = keyCols.map(col)
-    // ONE exchange for the whole report, pinned explicitly (r15): the
-    // report is lazy and materializes on the CONSUMER side, outside the
-    // cached-partitioning conf scope compareDataFrames sets — so the
-    // planner cannot see the slim caches' hash(keys) layout there and
-    // answered with TWO slim exchanges (traced: the groupBy exchanged by
-    // (keys, status, matched), then the duplicate-count window re-exchanged
-    // the same rows by the keys alone). Repartitioning by the KEYS first
-    // costs the one exchange, and both downstream operators then consume
-    // it in place: hash(keys) satisfies the aggregation's clustering (the
-    // grouping set is a superset of the keys) and the window's partitionBy
-    // exactly. At the sf100 rung this removes a |keys|-row exchange from
-    // every row-level materialization.
-    val grouped = joined
+      rescued: Option[DataFrame]): DataFrame = {
+    val withR = rescued match {
+      case None => counts.withColumn(RescuedPairsCol, lit(0L))
+      case Some(perKey) =>
+        counts
+          .join(perKey, keyCols, LeftJoin)
+          .withColumn(RescuedPairsCol, coalesce(col(RescuedPairsCol), lit(0L)))
+    }
+    val (m, n, p, r) =
+      (col(SrcRowsCol), col(TgtRowsCol), col(ChkPairsCol), col(RescuedPairsCol))
+    val aligned = alignedKey(keyCols)
+    def entry(cond: Column, dup: Column, status: String, matched: Boolean): Column =
+      when(cond, struct(
+        dup.as(DuplicateCountCol),
+        lit(status).as(MissingRowStatusCol),
+        lit(matched).as(AllRowsMatchedCol)))
+    val entries = array(
+      entry(aligned && (r > 0L || p > 0L),
+        when(r > 0L, m * n * r).otherwise(m * n) - 1L, PresentInBothStatus, matched = true),
+      entry(aligned && r === 0L && m * n > p, m * n - 1L, PresentInBothStatus, matched = false),
+      entry(!aligned && m > 0L, m + n - 1L, MissingAtTargetStatus, matched = false),
+      entry(!aligned && n > 0L, m + n - 1L, MissingAtSourceStatus, matched = false))
+    withR
+      .select(keyCols.map(col) :+ explode(entries).as("__e"): _*)
+      .where(col("__e").isNotNull)
       .select(
-        keyColumns
-          :+ when(col(srcCol(ChkSumCol)).isNull, MissingAtSourceStatus)
-            .when(col(tgtCol(ChkSumCol)).isNull, MissingAtTargetStatus)
-            .otherwise(lit(PresentInBothStatus).cast(StringType))
-            .as(MissingRowStatusCol)
-          :+ col(AllRowsMatchedCol): _*) // project BEFORE the exchange: the
-      // checksum structs must not ride the shuffle (guide §2.3); partition
-      // count matches the slim caches' scale-derived layout (same sizing
-      // rule, same cap — see slimPartitions in buildComparison)
-      .repartition(nPartitions, keyColumns: _*)
-      .groupBy(keyColumns :+ col(MissingRowStatusCol) :+ col(AllRowsMatchedCol): _*)
-      .agg(count(lit(1)).as("__pairs"))
-    val dupWindow = Window
-      .partitionBy(keyColumns: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    grouped
-      .withColumn(DuplicateCountCol, sum(col("__pairs")).over(dupWindow) - 1)
-      .withColumn(DatasetNameCol, lit(datasetName))
-      .select(
-        col(DatasetNameCol) +: keyColumns
-          :+ col(DuplicateCountCol) :+ col(MissingRowStatusCol) :+ col(AllRowsMatchedCol): _*)
+        lit(datasetName).as(DatasetNameCol) +: keyCols.map(col)
+          :+ col(s"__e.$DuplicateCountCol").as(DuplicateCountCol)
+          :+ col(s"__e.$MissingRowStatusCol").as(MissingRowStatusCol)
+          :+ col(s"__e.$AllRowsMatchedCol").as(AllRowsMatchedCol): _*)
   }
 
   /** Per-column unmatched-record extracts (`comparison_job.py:120-132`),
@@ -591,51 +606,31 @@ object Comparison {
     spark.conf.getOption(BroadcastMismatchKeysMaxConf)
       .map(_.toLong).getOrElse(BroadcastMismatchKeysMax)
 
-  /** One side's cache fill, fused with the reference's two per-side count
-    * actions (`comparison_job.py:67-84`): total = Σ per-key counts,
-    * dups = #keys with count > 1. The per-key aggregation consumes the
-    * side's hash(keys) layout in place (no exchange beyond the layout's
-    * own), and because it reads every partition of the persisted frame,
-    * the cache is fully materialized when it returns.
+  /** The one eager stats job over the count frame (and its fill): the
+    * reference's per-side totals and duplicate-key counts
+    * (`comparison_job.py:67-84`) and its match figures, all eight as
+    * per-key folds — missing rows count the keys that are not aligned and
+    * have rows on the other side, checksum-matched keys the aligned keys
+    * with P > 0, mismatch keys the aligned keys with an unmatched pair
+    * (M·N > P). Grouping puts NULL key parts together, so a key counts once
+    * per side, as it did when the joined frame was grouped.
     */
-  private def fillAndCountSide(slim: DataFrame, keyCols: Seq[String]): (Long, Long) = {
-    val r = slim
-      .groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum(col("c")), lit(0L)), count_if(col("c") > 1))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  private final case class CountStats(
+      srcTotal: Long, tgtTotal: Long, srcDups: Long, tgtDups: Long,
+      missSrc: Long, missTgt: Long, chkMatched: Long, mismatchKeys: Long)
 
-  /** The always-run eager stats job over the joined slim frame: per-key
-    * missing/checksum-matched/mismatch flags folded to totals. Per-key
-    * `max` makes every flag duplicate-blind (the fold-back join only ever
-    * multiplies rows WITHIN a key). ZERO exchanges beyond the joined
-    * frame's own re-keying: the full-outer join runs on the co-partitioned
-    * slim caches (sorts only), and the per-key aggregation reuses that
-    * partitioning.
-    *
-    * Returns (miss_src, miss_tgt, checksum-matched keys, mismatch keys).
-    */
-  private def collectSlimStats(
-      joinedSlim: DataFrame,
-      keyCols: Seq[String]): (Long, Long, Long, Long) = {
-    val bothPresent =
-      col(srcCol(ChkSumCol)).isNotNull && col(tgtCol(ChkSumCol)).isNotNull
-    val r = joinedSlim
-      .groupBy(keyCols.map(col): _*)
+  private def collectCountStats(counts: DataFrame, keyCols: Seq[String]): CountStats = {
+    val (m, n, p) = (col(SrcRowsCol), col(TgtRowsCol), col(ChkPairsCol))
+    val aligned = alignedKey(keyCols)
+    val r = counts
       .agg(
-        max(when(col(srcCol(ChkSumCol)).isNull, 1L).otherwise(0L)).as("ms"),
-        max(when(col(tgtCol(ChkSumCol)).isNull, 1L).otherwise(0L)).as("mt"),
-        max(when(col(AllRowsMatchedCol), 1L).otherwise(0L)).as("cm"),
-        max(when(bothPresent && !col(AllRowsMatchedCol), 1L).otherwise(0L)).as("mk"))
-      .agg(
-        coalesce(sum("ms"), lit(0L)),
-        coalesce(sum("mt"), lit(0L)),
-        coalesce(sum("cm"), lit(0L)),
-        coalesce(sum("mk"), lit(0L)))
+        coalesce(sum(m), lit(0L)), coalesce(sum(n), lit(0L)),
+        count_if(m > 1L), count_if(n > 1L),
+        count_if(!aligned && n > 0L), count_if(!aligned && m > 0L),
+        count_if(aligned && p > 0L), count_if(aligned && m * n > p))
       .head()
-    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    CountStats(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+      r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))
   }
 
   /** The SECOND eager job (mismatch keys only): tolerance rescues and the
@@ -687,19 +682,16 @@ object Comparison {
   private def overallReport(
       spark: SparkSession,
       datasetName: String,
-      sideTotals: (Long, Long, Long, Long),
-      missSrc: Long,
-      missTgt: Long,
+      stats: CountStats,
       matchedCount: Long): DataFrame = {
     import spark.implicits._
-    val (srcTotal, srcDups, tgtTotal, tgtDups) = sideTotals
     Seq((
       datasetName,
-      Map(SourceCol -> srcTotal, TargetCol -> tgtTotal),
+      Map(SourceCol -> stats.srcTotal, TargetCol -> stats.tgtTotal),
       matchedCount,
-      Map(SourceCol -> srcDups, TargetCol -> tgtDups),
-      Map(SourceCol -> missSrc, TargetCol -> missTgt),
-      if (srcTotal == matchedCount && tgtTotal == matchedCount) PassedStatus
+      Map(SourceCol -> stats.srcDups, TargetCol -> stats.tgtDups),
+      Map(SourceCol -> stats.missSrc, TargetCol -> stats.missTgt),
+      if (stats.srcTotal == matchedCount && stats.tgtTotal == matchedCount) PassedStatus
       else FailedStatus))
       .toDF(DatasetNameCol, CountCol, MatchedCountCol, DuplicateCountCol,
         MissingRowsCol, TestStatusCol)
@@ -745,12 +737,11 @@ object Comparison {
       sourceDf: DataFrame,
       targetDf: DataFrame,
       params: DatasetParams): ComparisonResult = {
-    // The slim sides are cached PRE-PARTITIONED by the primary keys, and
-    // everything keyed downstream — the full-outer join, the match stats,
-    // the fold-back — reuses that one exchange per side.
-    // InMemoryRelation only keeps a cached layout visible to the planner
-    // under canChangeCachedPlanOutputPartitioning=false (the PageRank
-    // lesson, Graphs.scala); scope it around construction exactly.
+    // The count frame keeps exactly the derived partition count of its
+    // alignment exchange only under
+    // canChangeCachedPlanOutputPartitioning=false: the cached plan's final
+    // shuffle is then never coalesced (the PageRank lesson, Graphs.scala);
+    // scope it around construction exactly.
     SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
       buildComparison(spark, sourceDf, targetDf, params)
     }
@@ -765,9 +756,9 @@ object Comparison {
     val keyColumns = keyCols.map(col)
     val rawSrc = project(sourceDf, params)
     val rawTgt = project(targetDf, params)
-    // Width-mixed columns (keys included — the slim sides' co-partitioning
-    // requires identical key types) cast to the common type on BOTH sides
-    // before anything hashes, joins or compares: checksum, predicate and
+    // Width-mixed columns (keys included — the slim union and the refetch
+    // join require identical key types) cast to the common type on BOTH
+    // sides before anything hashes, joins or compares: checksum, predicate and
     // extracts all see one representation, so width-mixed equal datasets
     // keep the clean-compare fast path and the reports show the widened
     // values the tolerance pass compares anyway.
@@ -790,45 +781,36 @@ object Comparison {
     val srcFull = transformSide(projectedSrc, srcCol, nonKeyCols, params.testParams)
     val tgtFull = transformSide(projectedTgt, tgtCol, nonKeyCols, params.testParams)
 
-    // Slim sides: (keys, 16-byte checksum), hash-partitioned by the keys
-    // and cached columnar. Materialized EAGERLY before any downstream plan
-    // is built — an unmaterialized InMemoryRelation does not report its
-    // partitioning, and every keyed consumer below (join, stats, side
-    // counts) would plan its own exchange of the very rows this layout
-    // exists to shuffle once (the sf100 profile measured the previous
-    // shape's separate side-count subtree at ~80 s of re-scan + re-shuffle).
-    def slimProjected(full: DataFrame, chk: String): DataFrame =
-      full.select(keyColumns :+ col(chk): _*)
-    // SCALE-ADAPTIVE slim layout width (guide §2.2): the cached layout's
-    // partition count is derived from the ESTIMATED slim bytes (Catalyst
-    // plan stats — key columns + 16-byte checksum, so ~30 B/row at any
-    // table width), targeting [[SlimPartitionBytes]] per partition and
-    // capped at the session's shuffle partitions. The previous shape used
-    // spark.sql.shuffle.partitions unconditionally — right at cluster
-    // scale (the cap keeps that behavior bit-identical there), but at
-    // small inputs it spread kilobyte partitions over dozens of tasks and
-    // every downstream stage (join, stats, window, fold-back) paid a full
-    // task-launch wave for microseconds of work per task; AQE cannot
-    // repair it because the engine deliberately pins cached-plan
+    // Slim rows: (keys, 16-byte checksum, side tag) of BOTH sides, one
+    // union, so the whole alignment is ONE hash(keys) exchange.
+    def slimRows(full: DataFrame, chk: String, isSource: Boolean): DataFrame =
+      full.select(keyColumns :+ col(chk).as(ChkSumCol) :+ lit(isSource).as(SideCol): _*)
+    val slim = slimRows(srcFull, srcCol(ChkSumCol), isSource = true)
+      .union(slimRows(tgtFull, tgtCol(ChkSumCol), isSource = false))
+    // SCALE-ADAPTIVE alignment width (guide §2.2): the exchange's (and the
+    // cached count frame's) partition count is derived from the ESTIMATED
+    // slim bytes (Catalyst plan stats — key columns + 16-byte checksum +
+    // tag, so ~30 B/row at any table width), targeting
+    // [[SlimPartitionBytes]] per partition and capped at the session's
+    // shuffle partitions. At cluster scale the cap keeps the layout at
+    // spark.sql.shuffle.partitions; at small inputs the estimate stops
+    // kilobyte partitions from paying a full task-launch wave per stage.
+    // AQE cannot repair that here because the engine pins cached-plan
     // partitioning (canChangeCachedPlanOutputPartitioning=false), which
-    // also disables coalescing inside the cached plans. Both sides use
-    // the SAME count, so the full-outer join stays exchange-free.
+    // also disables coalescing inside the cached plan.
     val slimPartitions: Int = {
       val targetBytes = spark.conf.getOption(SlimPartitionBytesConf)
         .map(_.toLong).getOrElse(SlimPartitionBytes)
-      val est = Seq(
-        slimProjected(srcFull, srcCol(ChkSumCol)),
-        slimProjected(tgtFull, tgtCol(ChkSumCol)))
-        .map(_.queryExecution.optimizedPlan.stats.sizeInBytes).max
+      val est = slim.queryExecution.optimizedPlan.stats.sizeInBytes
       val wanted = (est + targetBytes - 1) / targetBytes
       // Parallelism floor of min(4, defaultParallelism): plan-stats bytes
       // are a rough LOWER bound on useful parallelism (projection-scaled
       // scan sizes underestimate the checksum-bearing slim rows), and an
-      // underestimate serializes every keyed stage of the engine onto one
-      // core — measured +0.3-0.7 s on the flat-column scenarios at sf0.1.
-      // The floor bounds that harm at the cost of at most 3 extra tasks
-      // per stage wave (~10 ms each); at any real size the bytes-derived
-      // count dominates and the floor is inert.
+      // underestimate serializes the alignment onto one core — measured
+      // +0.3-0.7 s on the flat-column scenarios at sf0.1. The floor bounds
+      // that harm at the cost of at most 3 extra tasks per stage wave
+      // (~10 ms each); at any real size the bytes-derived count dominates
+      // and the floor is inert.
       val floor = BigInt(math.min(4, spark.sparkContext.defaultParallelism))
       wanted
         .max(floor)
@@ -836,51 +818,28 @@ object Comparison {
         .max(BigInt(1))
         .toInt
     }
-    def slimSide(full: DataFrame, chk: String): DataFrame =
-      slimProjected(full, chk)
-        .repartition(slimPartitions, keyColumns: _*)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val srcSlim = slimSide(srcFull, srcCol(ChkSumCol))
-    val tgtSlim = slimSide(tgtFull, tgtCol(ChkSumCol))
-    // The two fills are independent jobs; run them CONCURRENTLY (guide
-    // §2.6 — actions are only sequential because the driver calls them
-    // sequentially) so one side's checksum-scan tail back-fills the other
-    // side's idle cores. Each fill also returns its side's counts, so the
-    // stats job below never re-reads the caches for them. Both caches are
-    // fully materialized before any downstream plan is built, which is
-    // what the co-partitioned zero-exchange planning below requires.
-    val Seq((srcTotal, srcDups), (tgtTotal, tgtDups)) = Par.runAll(Seq(
-      () => fillAndCountSide(srcSlim, keyCols), () => fillAndCountSide(tgtSlim, keyCols)))
-
-    // Align the sides: the full-outer join (J1, never broadcastable) runs
-    // on the co-partitioned cached layouts — sorts only, NO exchange.
-    // Primary row match = checksum null-safe equality; a present row
-    // always has a non-null checksum.
-    //
-    // The joined cache is RE-KEYED before the persist (r16): Spark reports
-    // UnknownPartitioning for a full-outer SMJ's output (the coalesced key
-    // columns' clustering is real but unmodeled), so every keyed consumer
-    // of this cache — the match-stats aggregation, the mismatch-key frame —
-    // planned its own |keys|-row exchange of the very rows the cache holds
-    // (traced r16 at sf0.1: two 150k-row exchanges per mismatch scenario).
-    // The explicit repartition satisfies the in-plan aggregation's
-    // clustering directly (no extra exchange in the stats job — it
-    // REPLACES the one the aggregation would have inserted) and, once the
-    // cache is filled, mkInfo's groupBy consumes the cached layout with no
-    // exchange at all. Same derived partition count as the slim sides.
-    val joinedSlim = srcSlim
-      .join(tgtSlim, keyCols, FullOuterJoin)
-      .withColumn(AllRowsMatchedCol, col(srcCol(ChkSumCol)) <=> col(tgtCol(ChkSumCol)))
+    // The per-key COUNT FRAME: both aggregations consume the hash(keys)
+    // exchange in place (hash(keys) clusters any superset of the keys), so
+    // nothing past the exchange moves again. The first counts each side's
+    // rows per (key, checksum); the second folds a key's checksums into
+    // M, N and the checksum-matched pairs P = Σ M_c·N_c. This frame is the
+    // engine's only cache on the clean path: the stats job, the row-level
+    // report and the refetch's mismatch keys all read it.
+    val counts = slim
       .repartition(slimPartitions, keyColumns: _*)
+      .groupBy(keyColumns :+ col(ChkSumCol): _*)
+      .agg(count_if(col(SideCol)).as("__mc"), count_if(!col(SideCol)).as("__nc"))
+      .groupBy(keyColumns: _*)
+      .agg(
+        sum("__mc").as(SrcRowsCol),
+        sum("__nc").as(TgtRowsCol),
+        sum(col("__mc") * col("__nc")).as(ChkPairsCol))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // FIRST eager stats job: every slim match number (fills the
-    // joinedSlim persist as a side effect), including the mismatch-key
-    // count that decides whether — and how — the refetch runs.
-    val (missSrc, missTgt, chkMatched, mismatchKeyCount) = collectSlimStats(joinedSlim, keyCols)
-
-    val bothPresent =
-      col(srcCol(ChkSumCol)).isNotNull && col(tgtCol(ChkSumCol)).isNotNull
+    // FIRST eager job: every overall number (fills the count frame as a
+    // side effect), including the mismatch-key count that decides whether
+    // — and how — the refetch runs.
+    val stats = collectCountStats(counts, keyCols)
 
     // SECOND eager job, skipped entirely on a clean compare: refetch FULL
     // rows for the mismatched-present keys and run the per-column
@@ -888,20 +847,18 @@ object Comparison {
     // filtering the full-width join (checksums re-derive
     // deterministically; the !(chk <=> chk) filter drops the
     // checksum-matched pairs a duplicated PK smuggles back in).
-    val (rescued, colSums, afterTolOpt, phase2Cached) =
-      if (mismatchKeyCount == 0L)
-        (0L, nonKeyCols.map(_ -> 0L).toMap, Option.empty[DataFrame], Seq.empty[DataFrame])
+    val broadcastable = stats.mismatchKeys <= broadcastMismatchKeysMax(spark)
+    val (rescued, colSums, afterTolOpt) =
+      if (stats.mismatchKeys == 0L)
+        (0L, nonKeyCols.map(_ -> 0L).toMap, Option.empty[DataFrame])
       else {
-        val mkInfo = joinedSlim
-          .groupBy(keyColumns: _*)
-          .agg(
-            max(when(col(AllRowsMatchedCol), 1L).otherwise(0L)).as("__chkm"),
-            max(when(bothPresent && !col(AllRowsMatchedCol), 1L).otherwise(0L)).as("__mm"))
-          .filter(col("__mm") === 1L)
-          .select(keyColumns :+ (col("__chkm") === 1L).as(ChkMatchedKeyCol): _*)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val (m, n, p) = (col(SrcRowsCol), col(TgtRowsCol), col(ChkPairsCol))
+        // Aligned keys with an unmatched pair — a filter of the filled
+        // count frame, no exchange.
+        val mkInfo = counts
+          .filter(alignedKey(keyCols) && m * n > p)
+          .select(keyColumns :+ (p > 0L).as(ChkMatchedKeyCol): _*)
         val mkKeys = mkInfo.select(keyColumns: _*)
-        val broadcastable = mismatchKeyCount <= broadcastMismatchKeysMax(spark)
         // The prune need not be exact here: the mkInfo inner join below is
         // an exact filter on the mismatch key set, so the Bloom path skips
         // the semi join's second shuffle of the pruned side and lets its
@@ -909,7 +866,7 @@ object Comparison {
         def prune(sideFull: DataFrame): DataFrame =
           if (broadcastable) sideFull.join(broadcast(mkKeys), keyCols, LeftSemiJoin)
           else graft.operators.Pruning.bloomPruneFilter(
-            sideFull, mkKeys, keyCols, keyCols, mismatchKeyCount)
+            sideFull, mkKeys, keyCols, keyCols, stats.mismatchKeys)
         val mismatchedPresent = prune(srcFull)
           .join(prune(tgtFull), keyCols, InnerJoin)
           .filter(!(col(srcCol(ChkSumCol)) <=> col(tgtCol(ChkSumCol))))
@@ -918,32 +875,22 @@ object Comparison {
           withPerColumnMatches(mismatchedPresent, nonKeyFields, params.testParams)
             .persist(StorageLevel.MEMORY_AND_DISK)
         val (resc, sums) = collectToleranceStats(afterTolerance, keyCols, nonKeyCols)
-        (resc, sums, Some(afterTolerance), Seq(mkInfo, afterTolerance))
+        (resc, sums, Some(afterTolerance))
       }
-    val matchedCount = chkMatched + rescued
+    val matchedCount = stats.chkMatched + rescued
 
-    // Fold tolerance passes back in for the row-level report (left join on
-    // keys reuses the slim join's hash partitioning — no second wide
-    // shuffle); stays lazy, like the report it feeds.
-    val joined = afterTolOpt match {
-      case None => joinedSlim
-      case Some(afterTolerance) =>
-        joinedSlim
-          .join(
-            afterTolerance
-              .filter(col(AllRowsMatchedAfterTolCol))
-              .select((keyCols :+ AllRowsMatchedAfterTolCol).map(col): _*),
-            keyCols,
-            LeftJoin)
-          .withColumn(
-            AllRowsMatchedCol,
-            col(AllRowsMatchedCol) ||
-              coalesce(col(AllRowsMatchedAfterTolCol), lit(false).cast(BooleanType)))
+    // Tolerance-passing pairs per key, for the row-level report's
+    // fold-back (broadcast, like the refetch's key set, when it is small);
+    // stays lazy, like the report it feeds.
+    val rescuedPairs = afterTolOpt.map { afterTolerance =>
+      val perKey = afterTolerance
+        .filter(col(AllRowsMatchedAfterTolCol))
+        .groupBy(keyColumns: _*)
+        .agg(count(lit(1)).as(RescuedPairsCol))
+      if (broadcastable) broadcast(perKey) else perKey
     }
-
+    val rowLvl = rowLevelReport(params.datasetName, counts, keyCols, rescuedPairs)
     val colLvl = columnLevelReport(spark, params.datasetName, nonKeyCols, colSums)
-    val rowLvl = rowLevelReport(params.datasetName, joined, keyCols, slimPartitions)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val offending = nonKeyCols.filter(c => colSums(c) > 0)
     val extracts = afterTolOpt match {
       case None => Map.empty[String, DataFrame]
@@ -954,15 +901,12 @@ object Comparison {
           offending,
           keyCols)
     }
-    val overall =
-      overallReport(spark, params.datasetName, (srcTotal, srcDups, tgtTotal, tgtDups),
-        missSrc, missTgt, matchedCount)
 
     ComparisonResult(
-      overallTestReport = overall,
+      overallTestReport = overallReport(spark, params.datasetName, stats, matchedCount),
       rowLvlTestReport = rowLvl,
       colLvlTestReport = colLvl,
       unmatchedRecords = extracts,
-      cachedFrames = Seq(srcSlim, tgtSlim, joinedSlim) ++ phase2Cached ++ Seq(rowLvl))
+      cachedFrames = counts +: afterTolOpt.toSeq)
   }
 }

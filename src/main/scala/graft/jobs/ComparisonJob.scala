@@ -171,11 +171,13 @@ object ComparisonJob {
     val outcomes: Seq[Either[Throwable, ComparisonResult]] =
       SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
         graft.core.Par.attemptAll(config.datasetConfigs.map { dc => () =>
-          val r = Comparison.compareDataFrames(
-            spark,
-            IoUtils.readDataframe(spark, dc.sourceConfig),
-            IoUtils.readDataframe(spark, dc.targetConfig),
-            dc.params)
+          // Each read runs its own schema job (parquet footers); overlap
+          // them. runAll rethrows in argument order, so a dataset whose
+          // source and target both fail reports the source's error.
+          val Seq(src, tgt) = graft.core.Par.runAll(Seq(
+            () => IoUtils.readDataframe(spark, dc.sourceConfig),
+            () => IoUtils.readDataframe(spark, dc.targetConfig)))
+          val r = Comparison.compareDataFrames(spark, src, tgt, dc.params)
           if (config.continueOnError) {
             // Force the dataset's LAZY outputs while still inside its own
             // attempt: the row-level report and the unmatched extracts
@@ -184,9 +186,9 @@ object ComparisonJob {
             // (cache eviction forcing a source re-read that now errors, a
             // transient storage fault) would abort the whole consolidated
             // write and lose every completed dataset, which is exactly
-            // the outcome this flag exists to prevent. The count() fills
-            // the row report's persist (the write then reads the cache),
-            // and the extract counts run each lazy filter over the
+            // the outcome this flag exists to prevent. The count() runs
+            // the row report over the already-filled count frame, and the
+            // extract counts run each lazy filter over the
             // already-materialized tolerance frame — cheap cached scans,
             // paid only under continue_on_error. Failures surfacing in
             // the shared write itself (output-path I/O) remain job-level

@@ -507,8 +507,8 @@ class ComparisonSpec extends SparkSpec {
       DatasetParams("json_chk_deep", Seq("id"), TestParams(canonicalizeNestedTypes = true)))
     assert(resD.overallTestReport.collect().head.getAs[String]("test_status") == "PASSED",
       "key-order-swapped deep nesting must checksum-match (order-canonical native form)")
-    assert(resD.unmatchedRecords.isEmpty && resD.cachedFrames.size == 4,
-      "an order-swapped equal compare must keep the clean fast path (no refetch)")
+    assert(resD.unmatchedRecords.isEmpty)
+    assertNoRefetch(resD, "an order-swapped equal compare must keep the clean fast path (no refetch)")
     resA.unpersist(); resB.unpersist(); resC.unpersist(); resD.unpersist()
   }
 
@@ -536,18 +536,16 @@ class ComparisonSpec extends SparkSpec {
     val o = res.overallTestReport.collect().head
     assert(o.getAs[String]("test_status") == "PASSED")
     assert(o.getAs[Long]("matched_count") == 3L)
-    // the mismatch-refetch phase is SKIPPED structurally: only the two slim
-    // sides, the slim join, and the row-level report are ever persisted
-    // (a mismatching compare persists the mkInfo + tolerance frames too),
+    // the mismatch-refetch phase is SKIPPED structurally: no refetch frame
+    // is persisted (a mismatching compare persists its tolerance frame),
     // and no extracts exist
-    assert(res.cachedFrames.size == 4,
-      s"clean compare must not build phase-2 frames: ${res.cachedFrames.size}")
+    assertNoRefetch(res, "clean compare must not build phase-2 frames")
     assert(res.unmatchedRecords.isEmpty)
     assert(res.colLvlTestReport.collect().forall(_.getAs[Long]("unmatched_rows_count") == 0L))
     val dirty = Comparison.compareDataFrames(spark, df,
       df.withColumn("v", when(col("id") === 2L, lit("Z")).otherwise(col("v"))),
       DatasetParams("dirty", Seq("id")))
-    assert(dirty.cachedFrames.size == 6, "mismatching compare persists the phase-2 frames")
+    assert(refetchFrames(dirty).nonEmpty, "mismatching compare persists the phase-2 frames")
     res.unpersist(); dirty.unpersist()
   }
 
@@ -573,8 +571,7 @@ class ComparisonSpec extends SparkSpec {
     val res = Comparison.compareDataFrames(spark, src, wideTgt, DatasetParams("wide", Seq("id")))
     val o = res.overallTestReport.collect().head
     assert(o.getAs[String]("test_status") == "PASSED", o.toString)
-    assert(res.cachedFrames.size == 4,
-      s"width-mixed equal dataset must keep the clean fast path: ${res.cachedFrames.size}")
+    assertNoRefetch(res, "width-mixed equal dataset must keep the clean fast path")
     res.unpersist()
   }
 
@@ -594,14 +591,14 @@ class ComparisonSpec extends SparkSpec {
     val resNull = Comparison.compareDataFrames(spark, strict, loose,
       DatasetParams("null_drift", Seq("id")))
     assert(resNull.overallTestReport.collect().head.getAs[String]("test_status") == "PASSED")
-    assert(resNull.cachedFrames.size == 4, "nullability-only drift keeps the clean fast path")
+    assertNoRefetch(resNull, "nullability-only drift keeps the clean fast path")
     // array<int> vs array<bigint>: the top-level numeric-width allowance
     // recurses into element types — widen, compare, clean fast path
     val wide = strict.select(col("id"), col("arr").cast("array<bigint>").as("arr"))
     val resWide = Comparison.compareDataFrames(spark, strict, wide,
       DatasetParams("nested_width", Seq("id")))
     assert(resWide.overallTestReport.collect().head.getAs[String]("test_status") == "PASSED")
-    assert(resWide.cachedFrames.size == 4, "nested width mix keeps the clean fast path")
+    assertNoRefetch(resWide, "nested width mix keeps the clean fast path")
     // array<int> vs array<string>: genuinely irreconcilable — upfront, loud
     val bad = strict.select(col("id"), col("arr").cast("array<string>").as("arr"))
     val e = intercept[IllegalArgumentException] {
@@ -623,7 +620,7 @@ class ComparisonSpec extends SparkSpec {
     val r1 = Comparison.compareDataFrames(spark, decSide, longSide,
       DatasetParams("dec_vs_long", Seq("id")))
     assert(r1.overallTestReport.collect().head.getAs[String]("test_status") == "PASSED")
-    assert(r1.cachedFrames.size == 4, "decimal-vs-integral equal values keep the clean path")
+    assertNoRefetch(r1, "decimal-vs-integral equal values keep the clean path")
     // decimal(12,2) vs double: double (decimal precision cannot absorb a
     // fractional type) — equal values still clean
     val dec2 = Seq((1L, "7.25")).toDF("id", "x")
@@ -632,7 +629,7 @@ class ComparisonSpec extends SparkSpec {
     val r2 = Comparison.compareDataFrames(spark, dec2, dbl,
       DatasetParams("dec_vs_double", Seq("id")))
     assert(r2.overallTestReport.collect().head.getAs[String]("test_status") == "PASSED")
-    assert(r2.cachedFrames.size == 4, "decimal-vs-double equal values keep the clean path")
+    assertNoRefetch(r2, "decimal-vs-double equal values keep the clean path")
     r1.unpersist(); r2.unpersist()
   }
 
@@ -700,7 +697,7 @@ class ComparisonSpec extends SparkSpec {
       "metadata-only drift must not inject a cast")
     val res = Comparison.compareDataFrames(spark, src, tgt, DatasetParams("meta", Seq("id")))
     assert(res.overallTestReport.collect().head.getAs[String]("test_status") == "PASSED")
-    assert(res.cachedFrames.size == 4, "metadata-only drift keeps the clean fast path")
+    assertNoRefetch(res, "metadata-only drift keeps the clean fast path")
     res.unpersist()
   }
 
@@ -715,8 +712,7 @@ class ComparisonSpec extends SparkSpec {
     val res = Comparison.compareDataFrames(spark, side(sorted = true), side(sorted = false),
       DatasetParams("map_order", Seq("id")))
     assert(res.overallTestReport.collect().head.getAs[String]("test_status") == "PASSED")
-    assert(res.cachedFrames.size == 4,
-      "order-only map difference must keep the clean fast path")
+    assertNoRefetch(res, "order-only map difference must keep the clean fast path")
     // the same guarantee at depth: map inside a struct AND map as an
     // array element
     def nested(sorted: Boolean) = side(sorted).select(col("id"),

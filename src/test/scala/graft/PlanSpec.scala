@@ -56,39 +56,52 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("BroadcastHashJoin FullOuter"), "full outer must not broadcast")
   }
 
-  test("slim alignment: only keys + 16-byte checksums cross the full-outer join; tolerance refetch is key-pruned") {
+  test("slim alignment: only keys, a 16-byte checksum and the side tag cross the one alignment exchange; tolerance refetch is key-pruned") {
     // The 100 TB property this engine lives on: the one unavoidable wide
-    // shuffle (the full-outer alignment) must carry ~40-70 bytes/row
-    // REGARDLESS of table width, and full-width rows may only ever be
-    // refetched for the mismatched-present key minority. A regression that
-    // re-widens the join or drops the prune re-spills full tables at scale.
-    import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftSemi}
+    // shuffle (the alignment) must carry ~30-50 bytes/row REGARDLESS of
+    // table width, and full-width rows may only ever be refetched for the
+    // mismatched-present key minority. A regression that re-widens the
+    // alignment or drops the prune re-spills full tables at scale.
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
-    import org.apache.spark.sql.types.{LongType, StructType}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.{BooleanType, LongType, StructType}
     val (src, tgt) = Queries.compareScenario(spark, sf)
     val res = graft.core.Comparison.compareDataFrames(spark, src, tgt,
       graft.config.DatasetParams("plan_audit", Seq("o_orderkey"),
         graft.config.TestParams(differenceTolerance = 0.01)))
     try {
-      // 1) the row-level report's alignment join outputs EXACTLY
-      //    (key, checksum_src, checksum_target) — and the checksums are
-      //    two-long structs (16 bytes), not hex strings (64) or sha binary
-      val fullOuterJoins = res.rowLvlTestReport.queryExecution.analyzed.collect {
-        case j: Join if j.joinType == FullOuter => j
+      // 1) the count frame's cached plan holds exactly ONE exchange, over
+      //    both sides' (key, checksum, side tag) — and the checksum is a
+      //    two-long struct (16 bytes), not a hex string (64) or sha binary
+      val counts = res.cachedFrames.head
+      val cachedPlan = counts.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r.cachedPlan
+      }.getOrElse(fail("the count frame must be cached"))
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => nodes(q.plan)
+        case other => other +: other.children.flatMap(nodes)
       }
-      assert(fullOuterJoins.nonEmpty, "row-level report lost its alignment join")
-      fullOuterJoins.foreach { j =>
-        val names = j.output.map(_.name).toSet
-        assert(names == Set("o_orderkey", "_chk_sum_src", "_chk_sum_target"),
-          s"full-outer alignment must be slim, carried: $names")
-        j.output.filter(_.name.startsWith("_chk_sum")).foreach { a =>
-          val ok = a.dataType match {
-            case st: StructType =>
-              st.fields.length == 2 && st.fields.forall(_.dataType == LongType)
+      val exchanges = nodes(cachedPlan).collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"the alignment must be ONE exchange:\n$cachedPlan")
+      val carried = exchanges.head.output
+      assert(carried.map(_.name).toSet == Set("o_orderkey", "_chk_sum", "__is_src"),
+        s"the alignment exchange must be slim, carried: ${carried.map(_.name)}")
+      carried.foreach { a =>
+        val ok = a.name match {
+          case "_chk_sum" => a.dataType match {
+            case st: StructType => st.fields.length == 2 && st.fields.forall(_.dataType == LongType)
             case _ => false
           }
-          assert(ok, s"checksum must be a two-long struct (16 bytes), was ${a.dataType}")
+          case "__is_src" => a.dataType == BooleanType
+          case _ => true
         }
+        assert(ok, s"${a.name} has type ${a.dataType}: the checksum must be a two-long " +
+          "struct (16 bytes) and the side tag a boolean")
       }
       // 2) the extracts' refetch is key-pruned: both full-width sides come
       //    in through semi joins on the mismatch key set, and the
@@ -113,44 +126,33 @@ class PlanSpec extends SparkSpec {
     } finally res.unpersist()
   }
 
-  test("row-level report: one slim exchange feeds both the aggregation and the dup window") {
-    // r15: the report materializes on the CONSUMER side, outside the
-    // cached-partitioning conf scope, where the planner answered with TWO
-    // slim exchanges (groupBy by (keys,status,matched), then the window
-    // re-exchanged by the keys). The explicit hash(keys) repartition must
-    // be the ONLY exchange — the aggregation's clustering (superset of the
-    // keys) and the window's partitionBy both consume it in place — and it
-    // must ship only (keys, status, matched), never the checksum structs.
+  test("row-level report: a narrow projection of the count frame, zero exchanges") {
+    // The report reads the per-key count frame and writes at most two rows
+    // per key: no join, no aggregation, no window — so no exchange of its
+    // own, whatever side of the cached-partitioning conf scope it is
+    // planned on. Its only input is the count frame's cache.
+    import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
     val orders = spark.read.parquet(s"$sf/orders.parquet")
     val res = graft.core.Comparison.compareDataFrames(spark, orders, orders,
       graft.config.DatasetParams("rowlvl_audit", Seq("o_orderkey")))
     try {
-      val plan = res.rowLvlTestReport.queryExecution.executedPlan.toString
-      // Scope to the report's OWN subtree: the printed tree nests every
-      // upstream cached plan (slim fills with their build exchanges) under
-      // further InMemoryTableScan nodes — the report body is what lies
-      // between its own scan (1st occurrence) and the first nested one.
-      val scans = "InMemoryTableScan".r.findAllMatchIn(plan).map(_.start).toSeq
-      assert(scans.size >= 2, s"expected the report IMR over the joined-slim IMR:\n$plan")
-      val body = plan.substring(scans.head, scans(1))
-      // r16: the joined-slim cache is itself keyed (and the report's
-      // explicit repartition carries the same scale-derived count), so
-      // when the cached layout is visible at planning time the redundant
-      // repartition is ELIDED and the report plans ZERO exchanges — the
-      // aggregation and the window consume the cache's hash(keys) layout
-      // in place. When the layout is not visible (consumer-side planning
-      // outside the conf scope) the explicit repartition executes as the
-      // single exchange. Pin: AT MOST one, never range, never carrying
-      // the checksum structs.
-      val exchanges = "Exchange (hashpartitioning|SinglePartition)".r.findAllIn(body).size
-      assert(exchanges <= 1, s"row-level report must plan at most one exchange, got $exchanges:\n$body")
-      assert(!body.contains("Exchange rangepartitioning"),
-        s"no global sort in the row-level report:\n$body")
-      body.linesIterator
-        .find(l => l.contains("Exchange hashpartitioning") || l.contains("Exchange SinglePartition"))
-        .foreach(exchangeLine =>
-          assert(!exchangeLine.contains("_chk_sum"),
-            s"the report exchange must not carry checksum structs:\n$exchangeLine"))
+      val plan = res.rowLvlTestReport.queryExecution.executedPlan
+      // the report's OWN nodes: everything above the cached scan
+      def own(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => own(a.executedPlan)
+        case scan: InMemoryTableScanExec => Seq(scan)
+        case other => other +: other.children.flatMap(own)
+      }
+      val nodes = own(plan)
+      assert(nodes.count(_.isInstanceOf[InMemoryTableScanExec]) == 1,
+        s"the report must read the count frame's cache once:\n$plan")
+      assert(!nodes.exists(_.isInstanceOf[Exchange]),
+        s"the row-level report must plan zero exchanges:\n$plan")
+      assert(!nodes.exists(_.isInstanceOf[BinaryExecNode]),
+        s"the row-level report must plan no join:\n$plan")
     } finally res.unpersist()
   }
 
@@ -159,8 +161,8 @@ class PlanSpec extends SparkSpec {
     // over a full task wave per stage — the slim layout packs to
     // SlimPartitionBytes per partition, floored at min(4,
     // defaultParallelism) (estimate-error insurance) and capped at
-    // spark.sql.shuffle.partitions. Observable on the persisted slim
-    // frames (cachedFrames head = srcSlim). A cloned session raises the
+    // spark.sql.shuffle.partitions. Observable on the persisted count
+    // frame (cachedFrames head). A cloned session raises the
     // shuffle-partitions cap so floor and cap assert different values.
     val wide = spark.newSession()
     wide.conf.set("spark.sql.shuffle.partitions", "16")
@@ -181,9 +183,9 @@ class PlanSpec extends SparkSpec {
     } finally wide.conf.unset(graft.core.Comparison.SlimPartitionBytesConf)
   }
 
-  test("a clean compare never refetches: one persisted slim frame + the row report, no extracts") {
+  test("a clean compare never refetches: one persisted count frame, no extracts") {
     // the common 100 TB regression-gate case — identical sides — must do
-    // ALL its work on the slim join: no mismatch keys, no full-width
+    // ALL its work on the slim alignment: no mismatch keys, no full-width
     // refetch, no tolerance job
     val orders = spark.read.parquet(s"$sf/orders.parquet")
     val res = graft.core.Comparison.compareDataFrames(spark, orders, orders,
@@ -192,8 +194,9 @@ class PlanSpec extends SparkSpec {
     try {
       assert(res.overallTestReport.head().getAs[String]("test_status") == "PASSED")
       assert(res.unmatchedRecords.isEmpty)
-      assert(res.cachedFrames.size == 4,
-        s"clean compare must persist only the slim sides + joinedSlim + rowLvl, got ${res.cachedFrames.size}")
+      assertNoRefetch(res, "clean compare must not persist a refetch frame")
+      assert(res.cachedFrames.size == 1,
+        s"the count frame must be the only cache of a clean compare, got ${res.cachedFrames.size}")
     } finally res.unpersist()
   }
 
