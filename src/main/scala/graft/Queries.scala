@@ -1484,7 +1484,7 @@ object Queries {
 
     // catalog-level ANN RECALL row: per query (20 of them), how many of
     // the exact brute-force top-3 the composed IVF-PQ pipeline recovered —
-    // the recall-vs-latency observable promoted from RecallSweep into the
+    // the recall-vs-latency observable of the round-9 recall sweep, in the
     // oracle-checked catalog, so a banding/probing regression shows up as
     // a hash mismatch, not a silent recall drop. Operating point chosen by
     // a parameter sweep on this corpus: nprobe 8/16 cells, m = 16 (4-dim

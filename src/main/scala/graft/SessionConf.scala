@@ -11,11 +11,13 @@ private[graft] object SessionConf {
   val CachedLayout = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
   /** Run `body` with the given session confs set, then restore each one's
-    * previous value (or unset it). The session is shared: other threads
-    * see the values while `body` runs.
+    * previous value, or unset it if the caller had not set it (`getOption`
+    * would read a registered conf's default and pin it). The session is
+    * shared: other threads see the values while `body` runs.
     */
   def scoped[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val callerSet = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> callerSet.get(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prev.foreach {

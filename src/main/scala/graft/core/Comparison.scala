@@ -107,8 +107,9 @@ final case class ComparisonResult(
   * counted: one hash-aggregation entry per (key, checksum) in the key's
   * partition, never the M·N joined pairs the reference builds. The
   * tolerance refetch does build M·N pairs for a mismatched hot key; AQE
-  * skew-join splitting (enabled in [[graft.GraftSession]], demonstrated on
-  * a left-outer join in PlanSpec) applies to its inner joins too.
+  * skew-join splitting (enabled in [[graft.GraftSession]]) splits that
+  * key's partition on both sides of the refetch's inner join, inside the
+  * persisted tolerance frame too (pinned in PlanSpec).
   * Partition-level imbalance from hash collisions of distinct keys is
   * negligible at any corpus size.
   */
@@ -582,10 +583,13 @@ object Comparison {
     * constraint is memory, not speed: a single-long-key hash relation
     * costs ~48 bytes/key, so 4M keys ≈ 200 MB — comfortably inside a
     * 16 GB executor, and the broadcast cost is flat while Bloom always
-    * pays its filter build plus a second pass. Deployments with wide
-    * composite keys or smaller executors tune the cutover DOWN via
-    * [[BroadcastMismatchKeysMaxConf]]; the sweep bench A/Bs both
-    * branches through exactly that knob.
+    * pays its filter build plus a second pass.
+    *
+    * [[BroadcastMismatchKeysMaxConf]] overrides the cutover. It has two
+    * users: deployments with wide composite keys or smaller executors tune
+    * the memory bound DOWN, and `CompareModelSpec` sets it to 0 so every
+    * refetch takes the Bloom branch, which no test input reaches at the
+    * default.
     */
   private val BroadcastMismatchKeysMax = 4000000L
   val BroadcastMismatchKeysMaxConf = "spark.graft.compare.broadcastMismatchKeysMax"

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
+import graft.SessionConf
 import graft.functions.TextAnalysis
 
 /** Deduplication operators for large-scale corpus cleaning: exact,
@@ -1012,21 +1013,10 @@ object Dedup {
       aCol: String,
       bCol: String,
       maxRounds: Int = 25,
-      smallGraphEdges: Long = 65536L): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevCacheConf = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "false")
-    val (labels, round) = try {
+      smallGraphEdges: Long = 65536L): (DataFrame, Int) =
+    SessionConf.scoped(pairs.sparkSession, SessionConf.CachedLayout -> "false") {
       connectedComponentsLoop(pairs, aCol, bCol, maxRounds, smallGraphEdges)
-    } finally {
-      prevCacheConf match {
-        case Some(v) => spark.conf.set(cacheKey, v)
-        case None => spark.conf.unset(cacheKey)
-      }
     }
-    (labels, round)
-  }
 
   /** The label-propagation loop, planned under the cached-partitioning
     * conf [[connectedComponentsWithRounds]] scopes around it.

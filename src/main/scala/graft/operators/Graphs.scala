@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.SessionConf
+
 /** Distributed undirected-graph analytics beyond the connected components
   * in [[Dedup.connectedComponents]] — the structural profile of a pair
   * graph (near-dup families, co-occurrence networks, record-linkage
@@ -356,10 +358,7 @@ object Graphs {
     // adjacency, ~10 of the query's 29 executor-CPU seconds; at the sf100
     // rung that is 239M rows per hop). With the layout visible only the
     // dwindling frontier moves per hop, at every scale.
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevCacheConf = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "false")
-    try {
+    SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
       val edges = canonicalEdges(pairs, aCol, bCol).persist()
       val adj = edges.select(col("lo").as("u"), col("hi").as("v"))
         .union(edges.select(col("hi").as("u"), col("lo").as("v")))
@@ -393,11 +392,6 @@ object Graphs {
       }
       adj.unpersist(false) // dist is checkpointed; nothing re-reads the cache
       dist
-    } finally {
-      prevCacheConf match {
-        case Some(v) => spark.conf.set(cacheKey, v)
-        case None => spark.conf.unset(cacheKey)
-      }
     }
   }
 
@@ -696,10 +690,7 @@ object Graphs {
     require(maxIters >= 1 && maxIters <= 50, s"maxIters must be in [1, 50], got $maxIters")
     require(dampPpm >= 0 && dampPpm <= 1000000, s"dampPpm must be ppm, got $dampPpm")
     val spark = pairs.sparkSession
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevCacheConf = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "false")
-    try {
+    SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
       val g = buildPrGraph(pairs, aCol, bCol, scale)
       // b0 is a broadcast 1-row frame either way; reading the scalar here
       // is the same bounded collect the iteration plans embed
@@ -728,11 +719,6 @@ object Graphs {
       }
       (ranks.select(col("node"), col("rank_scaled"))
         .withColumn("n_iters", lit(it.toLong)), it)
-    } finally {
-      prevCacheConf match {
-        case Some(v) => spark.conf.set(cacheKey, v)
-        case None => spark.conf.unset(cacheKey)
-      }
     }
   }
 
@@ -746,10 +732,7 @@ object Graphs {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     require(dampPpm >= 0 && dampPpm <= 1000000, s"dampPpm must be ppm, got $dampPpm")
     val spark = pairs.sparkSession
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevCacheConf = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "false")
-    try {
+    SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
       val g = buildPrGraph(pairs, aCol, bCol, scale)
       var ranks = prInit(g).localCheckpoint(false)
       for (_ <- 1 to iters) {
@@ -767,11 +750,6 @@ object Graphs {
         iterGc()
       }
       ranks.select(col("node"), col("rank_scaled"))
-    } finally {
-      prevCacheConf match {
-        case Some(v) => spark.conf.set(cacheKey, v)
-        case None => spark.conf.unset(cacheKey)
-      }
     }
   }
 }

@@ -15,9 +15,8 @@ import org.apache.spark.sql.types._
   * image implementation on pure-JDK `javax.imageio` (PNG/JPEG/BMP/GIF/TIFF
   * header reads, pixel decode, bilinear resample, re-encode); [[WavCodec]]
   * is the REAL audio counterpart on `javax.sound.sampled`;
-  * [[FfmpegVideoCodec]] is the video binding, resolved reflectively so it
-  * activates the moment JavaCV jars reach the executor classpath (this
-  * zero-egress build cannot ship the natives); [[FakeCodec]] remains the
+  * [[MjpegVideoCodec]] is the REAL video codec for Motion-JPEG streams on
+  * the same JDK image reader; [[FakeCodec]] remains the
   * deterministic stub behind the externally-oracle-checked demo
   * queries. All are drop-in `codec = ...` arguments with no operator
   * changes. Decode cost
@@ -762,81 +761,40 @@ object Multimodal {
         col("media_id"),
         explode(sequence(lit(0), col("n_frames") - 1, lit(stride))).as("frame_no"))
 
-  /** REAL video codec binding via JavaCV/FFmpeg, resolved REFLECTIVELY:
-    * this build ships no native codecs (zero-egress container), so the
-    * class compiles against nothing and looks up
-    * `org.bytedeco.javacv.FFmpegFrameGrabber` by name at first use inside
-    * an executor task. Drop `org.bytedeco:javacv-platform` (FFmpeg natives
-    * included) on the executor classpath and [[FfmpegVideoCodec.available]]
-    * flips true with zero code changes — the drop-in `codec = ...` argument
-    * the [[MediaCodec]] scaladoc promises, with the lazy task-local native
-    * init the trait requires (nothing touches JavaCV until the first
-    * non-empty payload of a task).
+  /** REAL, EXECUTABLE video codec on pure JDK: Motion-JPEG as a raw
+    * concatenated-JPEG frame stream (the `.mjpeg`/`mjpg` elementary stream
+    * FFmpeg writes with `-f mjpeg`, and the payload most IP cameras emit) —
+    * each frame is a complete JFIF image, frames are split by walking the
+    * actual JPEG segment structure, and per-frame decode goes through
+    * `javax.imageio`'s JPEG reader. It needs no native library, so it
+    * runs — and is oracle-checked end-to-end — in any executor container:
+    * the video codec for MJPEG streams and the proof that the video
+    * decode PLUMBING (frame iteration, band features, strided resample)
+    * works on real decoded pixels. General containers (H.264, VP9, …) need
+    * a native decoder and would plug in as another [[MediaCodec]].
     *
-    * Dims-triple reinterpretation for video: **(width, height,
-    * nVideoFrames)** — [[WavCodec]]'s precedent of re-reading the triple
-    * per modality. `features` returns per-band mean BT.601 luma in [0,1]
-    * over `dim` equal time bands of the frame sequence (the shape a real
-    * video embedding extractor plugs into; the exact analogue of
-    * [[WavCodec.features]]' RMS bands). `resample` re-encodes every
-    * ⌈1/scale⌉-th frame at (round(w·s), round(h·s)) into a Matroska
-    * container via `FFmpegFrameRecorder`.
-    *
-    * Failure contract, in precedence order: null/empty payloads degrade to
-    * (0,0,0)/zeros/pass-through BEFORE any library probe (same corrupt-
-    * media rule as every codec — one bad payload must not kill a
-    * partition); a NON-empty payload with JavaCV absent throws
-    * `IllegalStateException` naming the missing dependency — silently
-    * returning zeros there would corrupt a corpus profile while looking
-    * healthy; a non-empty payload that FFmpeg itself cannot decode degrades
-    * like any other corrupt payload.
+    * Dims-triple reinterpretation for video, after [[WavCodec]]'s precedent
+    * of re-reading the triple per modality: **(width, height, nFrames)** — width/height from the FIRST frame's
+    * header (header-only read, no pixel decode), nFrames = complete frames
+    * in the stream. `features` returns per-band mean BT.601 luma in [0,1]
+    * over `dim` equal time bands of the frame sequence; `resample` keeps
+    * every ⌈1/scale⌉-th frame, scales it through [[ImageIoCodec.resample]]
+    * (bilinear, re-encoded as JPEG in kind), and re-concatenates — a valid
+    * MJPEG stream at the reduced rate and size. Corrupt-media contract as
+    * everywhere: null/empty/no-complete-frame payloads degrade to
+    * (0,0,0)/zeros/pass-through; an individual undecodable frame is
+    * skipped, never fails the task.
     */
-  object FfmpegVideoCodec extends MediaCodec {
-    private val GrabberClass = "org.bytedeco.javacv.FFmpegFrameGrabber"
-    private val RecorderClass = "org.bytedeco.javacv.FFmpegFrameRecorder"
-    private val ConverterClass = "org.bytedeco.javacv.Java2DFrameConverter"
-    private val FrameClass = "org.bytedeco.javacv.Frame"
-
-    /** True iff the JavaCV classes resolve on THIS JVM's classpath. The
-      * probe loads only the pure-Java wrapper class — FFmpeg natives load
-      * lazily on first grabber start, per the trait's task-local-init rule.
-      */
-    def available: Boolean =
-      try { Class.forName(GrabberClass); true }
-      catch { case _: ClassNotFoundException | _: LinkageError => false }
-
-    private def requireJavacv(): Unit =
-      if (!available) throw new IllegalStateException(
-        "FfmpegVideoCodec: JavaCV is not on the classpath. Video decode " +
-          "needs native FFmpeg, which this zero-egress build cannot ship; " +
-          "add org.bytedeco:javacv-platform (bundles the ffmpeg natives " +
-          s"per-OS) to the executor classpath — $GrabberClass not found.")
-
-    /** A reflective-binding mistake (wrong constructor/method signature →
-      * `NoSuchMethodException` etc.) is a BUG in this codec's assumed JavaCV
-      * API shape, not corrupt media — swallowing it into the degrade path
-      * would contradict the fail-loudly contract. Distinguished from
-      * `InvocationTargetException`, which means the BOUND method itself
-      * threw (a decode error from inside FFmpeg) and degrades like any
-      * corrupt payload.
-      */
-    private def bindingFailure(e: ReflectiveOperationException): Nothing =
-      throw new IllegalStateException(
-        s"FfmpegVideoCodec: JavaCV reflective binding failed " +
-          s"(${e.getClass.getSimpleName}: ${e.getMessage}) — the classpath " +
-          "has JavaCV but this codec's assumed API shape does not match; " +
-          "fix the binding rather than treating the media as corrupt", e)
+  object MjpegVideoCodec extends MediaCodec {
 
     /** Band index for frame `i` of `n` over `k` equal time bands — long
       * arithmetic for the same Int-wrap reason as [[WavCodec]] (i·k
-      * overflows beyond ~33M frames). Pure; unit-tested without JavaCV.
+      * overflows beyond ~33M frames).
       */
     private[graft] def bandOf(i: Long, n: Long, k: Int): Int =
       math.min(k - 1, (i * k / math.max(1L, n)).toInt)
 
-    /** Mean BT.601 luma of a raster in [0,1]. Pure; unit-tested on plain
-      * `BufferedImage`s without JavaCV.
-      */
+    /** Mean BT.601 luma of a raster in [0,1]. */
     private[graft] def meanLuma(img: java.awt.image.BufferedImage): Double = {
       val (w, h) = (img.getWidth, img.getHeight)
       if (w == 0 || h == 0) return 0.0
@@ -854,134 +812,6 @@ object Multimodal {
       }
       sum / (w.toLong * h)
     }
-
-    /** Open a grabber over `payload`, run `f`, always `release()`. */
-    private def withGrabber[T](payload: Array[Byte])(f: (Class[_], AnyRef) => T): T = {
-      val cls = Class.forName(GrabberClass)
-      val g = cls.getConstructor(classOf[java.io.InputStream])
-        .newInstance(new java.io.ByteArrayInputStream(payload)).asInstanceOf[AnyRef]
-      try { cls.getMethod("start").invoke(g); f(cls, g) }
-      finally cls.getMethod("release").invoke(g)
-    }
-
-    override def decodeDims(payload: Array[Byte]): (Int, Int, Int) = {
-      if (payload == null || payload.isEmpty) return (0, 0, 0)
-      requireJavacv()
-      try withGrabber(payload) { (cls, g) =>
-        (cls.getMethod("getImageWidth").invoke(g).asInstanceOf[Int],
-          cls.getMethod("getImageHeight").invoke(g).asInstanceOf[Int],
-          cls.getMethod("getLengthInVideoFrames").invoke(g).asInstanceOf[Int])
-      } catch {
-        case _: java.lang.reflect.InvocationTargetException => (0, 0, 0)
-        case e: ReflectiveOperationException => bindingFailure(e)
-        case scala.util.control.NonFatal(_) => (0, 0, 0)
-      }
-    }
-
-    override def features(payload: Array[Byte], dim: Int): Array[Float] = {
-      if (payload == null || payload.isEmpty) return Array.fill(dim)(0f)
-      requireJavacv()
-      try withGrabber(payload) { (cls, g) =>
-        // container-declared frame count; 0/unknown degrades to "every
-        // grabbed frame lands in band grabbed-so-far" (n := dim)
-        val declared = cls.getMethod("getLengthInVideoFrames").invoke(g).asInstanceOf[Int]
-        val conv = Class.forName(ConverterClass).getConstructor().newInstance().asInstanceOf[AnyRef]
-        val convert = conv.getClass.getMethod("convert", Class.forName(FrameClass))
-        val grabImage = cls.getMethod("grabImage")
-        val sums = new Array[Double](dim)
-        val counts = new Array[Long](dim)
-        var i = 0L
-        var frame = grabImage.invoke(g)
-        while (frame != null) {
-          val img = convert.invoke(conv, frame).asInstanceOf[java.awt.image.BufferedImage]
-          if (img != null) {
-            val b = bandOf(i, if (declared > 0) declared.toLong else dim.toLong, dim)
-            sums(b) += meanLuma(img)
-            counts(b) += 1
-          }
-          i += 1
-          frame = grabImage.invoke(g)
-        }
-        (0 until dim).map(b =>
-          if (counts(b) == 0) 0f else (sums(b) / counts(b)).toFloat).toArray
-      } catch {
-        case _: java.lang.reflect.InvocationTargetException => Array.fill(dim)(0f)
-        case e: ReflectiveOperationException => bindingFailure(e)
-        case scala.util.control.NonFatal(_) => Array.fill(dim)(0f)
-      }
-    }
-
-    override def resample(payload: Array[Byte], scale: Double): Array[Byte] = {
-      // scale <= 0 is a degenerate request, not a downsample: without the
-      // guard, stride = max(1, round(1/0.0).toInt) truncates Long.MaxValue
-      // to -1 and every frame re-encodes at 1×1 — pass through instead,
-      // like the >= 1.0 no-op bound.
-      if (payload == null || payload.isEmpty || scale >= 1.0 || scale <= 0.0) return payload
-      requireJavacv()
-      try withGrabber(payload) { (cls, g) =>
-        val w0 = cls.getMethod("getImageWidth").invoke(g).asInstanceOf[Int]
-        val h0 = cls.getMethod("getImageHeight").invoke(g).asInstanceOf[Int]
-        if (w0 <= 0 || h0 <= 0) return payload
-        val (w, h) = (math.max(1, math.round(w0 * scale).toInt),
-          math.max(1, math.round(h0 * scale).toInt))
-        val fps = cls.getMethod("getFrameRate").invoke(g).asInstanceOf[Double]
-        val out = new java.io.ByteArrayOutputStream()
-        val rcls = Class.forName(RecorderClass)
-        val rec = rcls.getConstructor(classOf[java.io.OutputStream],
-          classOf[Int], classOf[Int]).newInstance(out, Integer.valueOf(w),
-          Integer.valueOf(h)).asInstanceOf[AnyRef]
-        try {
-          // Matroska: the one common container FFmpeg writes to a
-          // non-seekable OutputStream (mp4 needs to rewrite its moov box)
-          rcls.getMethod("setFormat", classOf[String]).invoke(rec, "matroska")
-          rcls.getMethod("setFrameRate", classOf[Double])
-            .invoke(rec, java.lang.Double.valueOf(if (fps > 0) fps else 25.0))
-          rcls.getMethod("start").invoke(rec)
-          val grabImage = cls.getMethod("grabImage")
-          val record = rcls.getMethod("record", Class.forName(FrameClass))
-          val stride = math.max(1, math.round(1.0 / scale).toInt)
-          var i = 0L
-          var frame = grabImage.invoke(g)
-          while (frame != null) {
-            // record() sws_scales the frame to the recorder's (w, h)
-            if (i % stride == 0) record.invoke(rec, frame)
-            i += 1
-            frame = grabImage.invoke(g)
-          }
-          rcls.getMethod("stop").invoke(rec)
-        } finally rcls.getMethod("release").invoke(rec)
-        val bytes = out.toByteArray
-        if (bytes.nonEmpty) bytes else payload
-      } catch { case scala.util.control.NonFatal(_) => payload }
-    }
-  }
-
-  /** REAL, EXECUTABLE video codec on pure JDK: Motion-JPEG as a raw
-    * concatenated-JPEG frame stream (the `.mjpeg`/`mjpg` elementary stream
-    * FFmpeg writes with `-f mjpeg`, and the payload most IP cameras emit) —
-    * each frame is a complete JFIF image, frames are split by walking the
-    * actual JPEG segment structure, and per-frame decode goes through
-    * `javax.imageio`'s JPEG reader. Unlike [[FfmpegVideoCodec]] (the
-    * reflective JavaCV binding for GENERAL containers, which cannot
-    * execute without natives on the classpath), this codec runs — and is
-    * oracle-checked end-to-end — in any executor container, making it the
-    * production default for MJPEG streams and the proof that the video
-    * decode PLUMBING (frame iteration, band features, strided resample)
-    * works on real decoded pixels.
-    *
-    * Same dims-triple reinterpretation as [[FfmpegVideoCodec]]:
-    * **(width, height, nFrames)** — width/height from the FIRST frame's
-    * header (header-only read, no pixel decode), nFrames = complete frames
-    * in the stream. `features` returns per-band mean BT.601 luma in [0,1]
-    * over `dim` equal time bands of the frame sequence; `resample` keeps
-    * every ⌈1/scale⌉-th frame, scales it through [[ImageIoCodec.resample]]
-    * (bilinear, re-encoded as JPEG in kind), and re-concatenates — a valid
-    * MJPEG stream at the reduced rate and size. Corrupt-media contract as
-    * everywhere: null/empty/no-complete-frame payloads degrade to
-    * (0,0,0)/zeros/pass-through; an individual undecodable frame is
-    * skipped, never fails the task.
-    */
-  object MjpegVideoCodec extends MediaCodec {
 
     /** (start, end) byte spans of the COMPLETE JPEG frames in `payload`,
       * found by walking the real segment structure — not by scanning for
@@ -1067,8 +897,8 @@ object Multimodal {
           try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(frame(payload, sp)))
           catch { case scala.util.control.NonFatal(_) => null }
         if (img != null) {
-          val b = FfmpegVideoCodec.bandOf(i, spans.length.toLong, dim)
-          sums(b) += FfmpegVideoCodec.meanLuma(img)
+          val b = bandOf(i, spans.length.toLong, dim)
+          sums(b) += meanLuma(img)
           counts(b) += 1
         }
         i += 1

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionConf
 import graft.operators.{Dedup, Skew}
 
 /** Skew stress bench: measures the skew-mitigation operators on the
@@ -132,33 +133,28 @@ object SkewBench {
       System.err.println(f"[skewbench] $name%-24s ${results(name)}%7.2f s  ($n rows)")
       n
     }
-    def withConf[T](pairs: (String, String)*)(body: => T): T = {
-      val saved = pairs.map { case (k, _) => k -> spark.conf.get(k) }
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
-    }
 
     // ---- skewed join: raw effect (AQE off, no broadcast — the 100 TB
     // shape where both sides shuffle and no runtime re-plan exists) ----
     val noAqe = Seq(
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val joinUnsalted = withConf(noAqe: _*) {
+    val joinUnsalted = SessionConf.scoped(spark, noAqe: _*) {
       measure("join_unsalted_noaqe")(lineitem.join(orders, Seq("l_orderkey")))
     }
-    val joinSalted = withConf(noAqe: _*) {
+    val joinSalted = SessionConf.scoped(spark, noAqe: _*) {
       measure("join_salted32_noaqe")(
         Skew.saltedJoin(lineitem, orders, Seq("l_orderkey"), saltFactor = 32))
     }
     // AQE's own mitigation on the same join (skew split, broadcast still off)
-    val joinAqe = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    val joinAqe = SessionConf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       measure("join_unsalted_aqe")(lineitem.join(orders, Seq("l_orderkey")))
     }
     require(joinUnsalted == joinSalted && joinUnsalted == joinAqe,
       s"salting changed the join answer: $joinUnsalted / $joinSalted / $joinAqe")
 
     // ---- skewed aggregation (AQE off) ----
-    withConf(noAqe: _*) {
+    SessionConf.scoped(spark, noAqe: _*) {
       measure("agg_unsalted_noaqe")(
         lineitem.groupBy("l_orderkey").agg(sum("l_quantity").as("sum_l_quantity")))
       measure("agg_salted32_noaqe")(

@@ -21,7 +21,8 @@ import graft.core.{Comparison, ComparisonResult}
   * Generated inputs: a single or composite key with NULL in one or every key
   * column, duplicates on both sides, keys on one side only, values equal,
   * within and outside tolerance, NULL numerics; tolerance 0 and 0.5. Every
-  * case runs with the alignment forced onto one partition and onto many.
+  * case runs with the alignment forced onto one partition and onto many,
+  * and once more with the mismatch refetch forced onto its Bloom branch.
   */
 class CompareModelSpec extends SparkSpec {
   import CompareModelSpec._
@@ -125,21 +126,34 @@ class CompareModelSpec extends SparkSpec {
       java.util.Arrays.asList(rows.map(r => Row.fromSeq(r.keys ++ r.vals)): _*), schema)
   }
 
+  private val BloomSession = "Bloom refetch"
+
   /** Sessions forcing the alignment onto one partition (shuffle cap 1) and
-    * onto many (one byte per partition, capped at 16).
+    * onto many (one byte per partition, capped at 16), plus a many-partition
+    * session whose broadcast cutover is 0 mismatched keys, so every
+    * refetch prunes through the Bloom filter.
     */
   private def sessions: Seq[(String, SparkSession)] = {
     val one = spark.newSession()
     one.conf.set("spark.sql.shuffle.partitions", "1")
-    val many = spark.newSession()
-    many.conf.set("spark.sql.shuffle.partitions", "16")
-    many.conf.set(Comparison.SlimPartitionBytesConf, "1")
-    Seq("one partition" -> one, "many partitions" -> many)
+    def many() = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", "16")
+      s.conf.set(Comparison.SlimPartitionBytesConf, "1")
+      s
+    }
+    val bloom = many()
+    bloom.conf.set(Comparison.BroadcastMismatchKeysMaxConf, "0")
+    Seq("one partition" -> one, "many partitions" -> many(), BloomSession -> bloom)
   }
 
+  /** Checks all four reports against the model; returns whether the
+    * compare refetched mismatched keys through the Bloom filter, or None
+    * when it took the clean path.
+    */
   private def check(
       s: SparkSession, label: String, composite: Boolean, tol: Double,
-      src: Seq[In], tgt: Seq[In]): Unit = {
+      src: Seq[In], tgt: Seq[In]): Option[Boolean] = {
     val keyCols = if (composite) Seq("k1", "k2") else Seq("k1")
     val res = Comparison.compareDataFrames(s, frame(s, composite, src), frame(s, composite, tgt),
       DatasetParams("ds", keyCols, TestParams(differenceTolerance = tol)))
@@ -151,6 +165,8 @@ class CompareModelSpec extends SparkSpec {
       assert(got.rowLvl == want.rowLvl, s"row-level report: $ctx")
       assert(got.colLvl == want.colLvl, s"column-level report: $ctx")
       assert(got.extracts == want.extracts, s"unmatched extracts: $ctx")
+      refetchFrames(res).headOption.map(
+        _.queryExecution.optimizedPlan.toString.contains("might_contain"))
     } finally res.unpersist()
   }
 
@@ -197,8 +213,13 @@ class CompareModelSpec extends SparkSpec {
     assert(cases.exists(c => c._3.groupBy(_.keys).exists(_._2.size > 1) &&
       c._4.groupBy(_.keys).exists(_._2.size > 1)), "duplicates on both sides")
     assert(cases.exists(c => c._3.map(_.keys).toSet != c._4.map(_.keys).toSet), "one-sided keys")
-    for ((label, s) <- sessions; (composite, tol, src, tgt) <- cases)
-      check(s, label, composite, tol, src, tgt)
+    val bloomRefetches = for ((label, s) <- sessions; (composite, tol, src, tgt) <- cases) yield {
+      val bloom = check(s, label, composite, tol, src, tgt)
+      assert(bloom.forall(_ == (label == BloomSession)), s"$label refetch branch")
+      label -> bloom
+    }
+    assert(bloomRefetches.count(_ == (BloomSession -> Some(true))) >= 2,
+      s"the Bloom refetch branch must run: $bloomRefetches")
   }
 
   test("contract case: a duplicated key with several tolerance-passing pairs reports M·N·R−1") {

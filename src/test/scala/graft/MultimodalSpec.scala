@@ -259,41 +259,6 @@ class MultimodalSpec extends SparkSpec {
     assert(want.nonEmpty && want.exists(_._3 > 0))
   }
 
-  // ---- FfmpegVideoCodec: the reflective JavaCV binding ----
-  // ENVIRONMENT BLOCK: this zero-egress container ships no JavaCV jars or
-  // FFmpeg natives, so the real decode path cannot execute here. These
-  // specs pin everything that CAN run without the library: the
-  // availability probe, the exact failure contract (degrade on empty,
-  // fail LOUDLY on real payloads without the dependency), and the pure
-  // band/luma math the decode path is built from.
-
-  test("FfmpegVideoCodec: sandbox has no JavaCV — probe false, real payloads fail loudly") {
-    assume(!Multimodal.FfmpegVideoCodec.available,
-      "JavaCV unexpectedly present; the no-library contract specs don't apply")
-    // empty/null degrade BEFORE the library probe (corrupt-media contract)
-    assert(Multimodal.FfmpegVideoCodec.decodeDims(null) == ((0, 0, 0)))
-    assert(Multimodal.FfmpegVideoCodec.decodeDims(Array.emptyByteArray) == ((0, 0, 0)))
-    assert(Multimodal.FfmpegVideoCodec.features(null, 4).forall(_ == 0f))
-    val p = "not a real video".getBytes("UTF-8")
-    assert(Multimodal.FfmpegVideoCodec.resample(p, 1.0) eq p) // no-op scale short-circuits
-    // degenerate scales short-circuit BEFORE the library probe too: without
-    // the guard, scale=0 would stride at max(1, round(1/0.0).toInt) = 1 and
-    // re-encode every frame at 1×1 instead of rejecting the request
-    assert(Multimodal.FfmpegVideoCodec.resample(p, 0.0) eq p)
-    assert(Multimodal.FfmpegVideoCodec.resample(p, -0.5) eq p)
-    assert(Multimodal.FakeCodec.resample(p, 0.0) eq p)
-    assert(Multimodal.ImageIoCodec.resample(p, -1.0) eq p)
-    assert(Multimodal.WavCodec.resample(p, 0.0) eq p)
-    // a NON-empty payload without the library must throw, not zero out —
-    // silent zeros would corrupt a corpus profile while looking healthy
-    val e = intercept[IllegalStateException](Multimodal.FfmpegVideoCodec.decodeDims(p))
-    assert(e.getMessage.contains("org.bytedeco:javacv-platform"))
-    assert(intercept[IllegalStateException](
-      Multimodal.FfmpegVideoCodec.features(p, 4)).getMessage.contains("javacv"))
-    assert(intercept[IllegalStateException](
-      Multimodal.FfmpegVideoCodec.resample(p, 0.5)).getMessage.contains("javacv"))
-  }
-
   test("MjpegVideoCodec decodes a REAL video stream: dims, frame count, band luma, strided resample") {
     import Multimodal.MjpegVideoCodec
     // build a real 6-frame MJPEG: constant-gray JPEG frames, two luma
@@ -322,6 +287,15 @@ class MultimodalSpec extends SparkSpec {
     // the output is itself a decodable MJPEG stream
     val half = MjpegVideoCodec.resample(stream, 0.5)
     assert(MjpegVideoCodec.decodeDims(half) == ((8, 6, 3)), "resample dims/stride")
+    // degenerate scales pass through on every codec: without the guard,
+    // scale=0 would stride at max(1, round(1/0.0).toInt) = 1 and re-encode
+    // every frame at 1×1 instead of rejecting the request
+    assert(MjpegVideoCodec.resample(stream, 0.0) eq stream)
+    assert(MjpegVideoCodec.resample(stream, -0.5) eq stream)
+    val p = "not a real video".getBytes("UTF-8")
+    assert(Multimodal.FakeCodec.resample(p, 0.0) eq p)
+    assert(Multimodal.ImageIoCodec.resample(p, -1.0) eq p)
+    assert(Multimodal.WavCodec.resample(p, 0.0) eq p)
     // corrupt-media contract: garbage and truncated streams degrade
     assert(MjpegVideoCodec.decodeDims("not a video".getBytes("UTF-8")) == ((0, 0, 0)))
     assert(MjpegVideoCodec.decodeDims(stream.take(10)) == ((0, 0, 0)),
@@ -351,8 +325,8 @@ class MultimodalSpec extends SparkSpec {
       assert(got(id) == expect(id), s"id=$id: ${got(id)} != ${expect(id)}")
   }
 
-  test("FfmpegVideoCodec band/luma math matches the WavCodec banding semantics") {
-    import Multimodal.FfmpegVideoCodec.{bandOf, meanLuma}
+  test("MjpegVideoCodec band/luma math matches the WavCodec banding semantics") {
+    import Multimodal.MjpegVideoCodec.{bandOf, meanLuma}
     // frames 0..n-1 over k bands: monotone, first band starts at 0, last ends at k-1
     val n = 1000L
     val bands = (0L until n).map(bandOf(_, n, 8))

@@ -1775,27 +1775,48 @@ class OperatorsSpec extends SparkSpec {
     assert(gotR == ref, s"random-graph mismatch: got ${gotR.size} ref ${ref.size}")
   }
 
-  test("bfsHops scopes the cached-partitioning conf: caller values restored, results unchanged") {
-    import graft.operators.Graphs
-    // r15: bfsHops pins canChangeCachedPlanOutputPartitioning=false around
-    // its hop loop (the adjacency cache's hash(u) layout must stay visible
-    // so hops never re-exchange 2|E| rows). The caller's value — set,
-    // or unset — must survive, and a pre-set caller value must not change
-    // the result.
-    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val g = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
-    val expected = Map(1L -> 0L, 2L -> 1L, 3L -> 2L)
-    val before = spark.conf.getOption(key)
-    val r1 = Graphs.bfsHops(g, "a", "b", Seq(1L).toDF("s"), "s", maxHops = 2)
-      .as[(Long, Long)].collect().toMap
-    assert(r1 == expected && spark.conf.getOption(key) == before,
-      s"conf not restored: ${spark.conf.getOption(key)} vs $before")
-    spark.conf.set(key, "true")
-    try {
-      val r2 = Graphs.bfsHops(g, "a", "b", Seq(1L).toDF("s"), "s", maxHops = 2)
-        .as[(Long, Long)].collect().toMap
-      assert(r2 == expected && spark.conf.get(key) == "true")
-    } finally spark.conf.unset(key)
+  test("graph loops scope the cached-layout conf: caller value restored, same results") {
+    import graft.operators.{Dedup, Graphs}
+    // r15: bfsHops, both PageRanks and connectedComponents pin
+    // canChangeCachedPlanOutputPartitioning=false around their loops (the
+    // cached adjacency's hash layout must stay visible so rounds never
+    // re-exchange 2|E| rows). The caller's value — unset or set — must come
+    // back byte-identical, also when the loop fails inside the scope, and a
+    // pre-set caller value must not change the result.
+    val key = SessionConf.CachedLayout
+    val s = spark.newSession()
+    val edges = s.createDataFrame(Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L))).toDF("a", "b")
+    val seeds = s.createDataFrame(Seq(Tuple1(1L))).toDF("s")
+    // each loop run on the edge column `b` (a missing column fails analysis
+    // inside the scope)
+    val loops: Seq[(String, String => Map[Long, Long])] = Seq(
+      "bfsHops" -> (b => Graphs.bfsHops(edges, "a", b, seeds, "s", maxHops = 2)
+        .as[(Long, Long)].collect().toMap),
+      "pageRank" -> (b => Graphs.pageRank(edges, "a", b, iters = 2)
+        .as[(Long, Long)].collect().toMap),
+      "pageRankConverged" -> (b => Graphs.pageRankConverged(edges, "a", b)._1
+        .select("node", "rank_scaled").as[(Long, Long)].collect().toMap),
+      "connectedComponents" -> (b => Dedup.connectedComponents(edges, "a", b, smallGraphEdges = 0L)
+        .as[(Long, Long)].collect().toMap))
+    val known = Map(
+      "bfsHops" -> Map(1L -> 0L, 2L -> 1L, 3L -> 2L),
+      "connectedComponents" -> Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 5L))
+    def setCaller(caller: Option[String]): Unit = caller.fold(s.conf.unset(key))(s.conf.set(key, _))
+    // the explicitly set value (getOption would read the default when unset)
+    def callerValue: Option[String] = s.conf.getAll.get(key)
+    for ((name, run) <- loops) {
+      val byCaller = for (caller <- Seq(None, Some("true"))) yield {
+        setCaller(caller)
+        val result = run("b")
+        assert(callerValue == caller, s"$name did not restore the caller's $caller")
+        intercept[org.apache.spark.sql.AnalysisException](run("no_such_column"))
+        assert(callerValue == caller, s"$name, failing, did not restore $caller")
+        result
+      }
+      assert(byCaller.distinct.size == 1, s"$name: the caller's conf changed the result")
+      known.get(name).foreach(want => assert(byCaller.head == want, name))
+      assert(byCaller.head.nonEmpty, name)
+    }
   }
 
   test("pageRank matches an exact integer reference implementation") {

@@ -5,9 +5,9 @@ import org.apache.spark.sql.execution.ExplainMode
 
 /** Physical-plan audits: the properties the 100 TB design depends on must
   * be visible in the plan, not assumed — filter/column pushdown into the
-  * parquet scan, broadcast joins for small dimensions, sort-merge (never
-  * broadcast) for the full-outer alignment join, and whole-stage codegen
-  * over the hot expressions.
+  * parquet scan, broadcast joins for small dimensions, the compare
+  * engine's one slim alignment exchange, and whole-stage codegen over the
+  * hot expressions.
   */
 class PlanSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
@@ -44,16 +44,6 @@ class PlanSpec extends SparkSpec {
       s"expected partial+final HashAggregate:\n$agg")
     assert(agg.linesIterator.count(l => l.contains("Exchange (")) == 1,
       s"expected exactly one shuffle:\n$agg")
-  }
-
-  test("the comparison engine's alignment join is sort-merge full-outer (never broadcast)") {
-    val (src, tgt) = Queries.compareScenario(spark, sf)
-    val joined = src
-      .withColumnRenamed("o_totalprice", "p_src")
-      .join(tgt.withColumnRenamed("o_totalprice", "p_tgt"), Seq("o_orderkey"), "full_outer")
-    val p = joined.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(p.contains("SortMergeJoin") && p.contains("FullOuter"), s"expected SMJ full outer:\n$p")
-    assert(!p.contains("BroadcastHashJoin FullOuter"), "full outer must not broadcast")
   }
 
   test("slim alignment: only keys, a 16-byte checksum and the side tag cross the one alignment exchange; tolerance refetch is key-pruned") {
@@ -300,50 +290,52 @@ class PlanSpec extends SparkSpec {
       s"no join keyed on (blk, __ci, __cj) — pair parallelism is back to block cardinality: $keyLines")
   }
 
-  test("AQE splits a skewed left-outer join; full-outer is unsplittable by design") {
+  test("AQE on the mismatch refetch: a hot duplicated, mismatched key's inner join") {
     import org.apache.spark.sql.functions._
-    // Thresholds low enough that a single hot key trips skew detection at
-    // test scale; broadcast off so the join shuffles like it would at 100 TB.
-    val confs = Map(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32KB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    // The one quadratic path left in the engine: the refetch rebuilds the
+    // M·N pairs of a mismatched key through prune(src) ⋈ prune(tgt). Skew
+    // thresholds low enough that one hot key trips detection at test scale;
+    // auto-broadcast off so that join shuffles like it would at 100 TB.
+    val s = spark.newSession()
+    Map(
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2KB",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1").foreach { case (k, v) => s.conf.set(k, v) }
+    // key 0 duplicated 300 times per side, every pair mismatched, among 200
+    // keys with one mismatched row per side
+    val src = s.range(300).select(lit(0L).as("k"), col("id").as("v"))
+      .union(s.range(1, 201).select(col("id").as("k"), col("id").as("v")))
+    val tgt = src.select(col("k"), (col("v") + 1000000L).as("v"))
+    val res = graft.core.Comparison.compareDataFrames(s, src, tgt,
+      graft.config.DatasetParams("skew", Seq("k")))
     try {
-      // one hot key (100k rows) among 4k uniform keys — the shape of a
-      // duplicated-PK blowup on the big side of the tolerance fold-back
-      val hot = spark.range(100000).select(lit(0L).as("k"), col("id").as("payload"))
-        .union(spark.range(1, 4001).select(col("id").as("k"), col("id").as("payload")))
-      val dim = spark.range(4001).select(col("id").as("k"), (col("id") * 2).as("v"))
-
-      def executedPlan(joinType: String): String = {
-        val j = hot.join(dim, Seq("k"), joinType)
-        j.queryExecution.toRdd.count() // AQE decides skew at runtime — must execute
-        j.queryExecution.executedPlan.toString
+      val afterTolerance = refetchFrames(res).headOption
+        .getOrElse(fail("the mismatched keys must refetch"))
+      val cachedPlan = afterTolerance.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r.cachedPlan
+      }.getOrElse(fail("the tolerance frame must be cached"))
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => nodes(q.plan)
+        case other => other +: other.children.flatMap(nodes)
       }
-
-      // LEFT outer (the engine's tolerance fold-back shape): Spark splits
-      // the skewed big side — the 100 TB hot-key mitigation is real, not a
-      // config assumption.
-      val leftPlan = executedPlan("left")
-      assert(leftPlan.contains("skew=true"),
-        s"expected AQE to mark the skewed SMJ (skew=true):\n$leftPlan")
-
-      // FULL outer (the alignment join): Spark's OptimizeSkewedJoin cannot
-      // split either side (replication would fabricate unmatched rows), so
-      // no skew marker appears. This pins the documented limitation — the
-      // alignment join's skew protection is the primary-key structure, not
-      // AQE (see Comparison scaladoc).
-      val fullPlan = executedPlan("full_outer")
-      assert(fullPlan.contains("SortMergeJoin") && !fullPlan.contains("skew=true"),
-        s"full-outer skew handling changed — revisit Comparison's skew docs:\n$fullPlan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+      // AQE plans the refetch inside the persisted tolerance frame (the
+      // cached-layout scope turns off only final-stage coalescing there)
+      // and splits the hot key's partition on both sides of the inner join
+      val joins = nodes(cachedPlan).collect { case j: SortMergeJoinExec => j }
+      assert(joins.map(j => (j.joinType.toString, j.isSkewJoin)) == Seq(("Inner", true)),
+        s"expected AQE to split the refetch's inner join (skew=true):\n$cachedPlan")
+      // the split neither drops nor duplicates a pair: all 300·300 + 200
+      // pairs report their one column unmatched
+      assert(res.colLvlTestReport.collect().map(r => r.getString(1) -> r.getLong(2)).toSeq ==
+        Seq("v" -> 90200L))
+    } finally res.unpersist()
   }
 
   test("rangeJoin plans an equi-join on (keys, bin) — not a nested-loop or pure-filter join") {
