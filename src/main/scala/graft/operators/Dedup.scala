@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
@@ -984,16 +986,22 @@ object Dedup {
     * id of its component (so the component id doubles as the canonical
     * survivor id).
     *
-    * Algorithm: iterative min-label propagation with pointer jumping —
-    * each round (a) every node takes the min of its own and its neighbors'
-    * labels (one equi-join + hash agg on the edge list), then (b) labels
-    * jump to their label's label (one self-join), which doubles the
-    * propagation distance per round, the classic log-rounds trick. Rounds ≈
-    * log₂(component diameter); near-dup families are dense (diameter a few
-    * hops), so convergence is 2-4 rounds in practice. The driver loop only
-    * checks a per-round CHANGED counter (one scalar action per round) —
-    * all data stays distributed; per-round `localCheckpoint` truncates the
-    * otherwise-exponential lineage.
+    * Algorithm: local contraction, then iterative min-label propagation
+    * with pointer jumping. Contraction (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014) runs a union-find
+    * over each partition of the edge list and starts every node at the
+    * min root of its local sets, so whatever a partition's edges already
+    * connect needs no round. Each round then (a) every node takes the min
+    * of its own and its neighbors' labels (one equi-join + hash agg on the
+    * edge list), then (b) labels jump to their label's label (one
+    * self-join), which doubles the propagation distance per round, the
+    * classic log-rounds trick. Rounds ≈ log₂(component diameter); near-dup
+    * families are dense (diameter a few hops), so convergence is 2-4
+    * rounds in practice. The driver loop only reads a per-round CHANGED
+    * counter, observed on the eager checkpoint that materializes the
+    * round (no separate count job) — all data stays distributed; the
+    * per-round `localCheckpoint` truncates the otherwise-exponential
+    * lineage.
     */
   def connectedComponents(
       pairs: DataFrame,
@@ -1018,41 +1026,36 @@ object Dedup {
       connectedComponentsLoop(pairs, aCol, bCol, maxRounds, smallGraphEdges)
     }
 
-  /** The label-propagation loop, planned under the cached-partitioning
-    * conf [[connectedComponentsWithRounds]] scopes around it.
-    *
-    * The edge list is a MATERIALIZED columnar cache hash-partitioned +
-    * sorted on `dst` (the step-(a) join key): with
-    * `canChangeCachedPlanOutputPartitioning=false` every round's
-    * neighbor-min join then needs neither exchange nor sort on the 2|E|-row
-    * side — a lazy localCheckpoint surfaces UnknownPartitioning and
-    * re-exchanged the full edge set each round (the exact pathology the
-    * PageRank sf10 trace exposed, [[graft.operators.Graphs.pageRank]]).
-    * The operator is already eager (one scalar action per round), so the
-    * cache is released before returning — persist keeps lineage, making
-    * that safe.
+  /** Strict order on external node values that matches Spark's `min`:
+    * integral types numerically, strings by UTF-8 bytes (Spark's binary
+    * string ordering). `None` for any other node type, which the union-find
+    * paths below do not handle.
     */
-  /** Driver union-find over a gate-bounded doubled edge list — identical
-    * min-id labeling to the distributed loop (union-by-min keeps every
-    * root the min of its set; strings compare by UTF-8 bytes, matching
-    * Spark's binary string ordering). Null endpoints mirror the loop's
-    * semantics exactly: they join nothing, their non-null partner stays
-    * isolated, and a single `(null, null)` labeling row appears iff any
-    * endpoint was null.
-    */
-  private def driverComponents(
-      spark: org.apache.spark.sql.SparkSession,
-      doubledEdges: Array[(Any, Any)],
-      nodeType: org.apache.spark.sql.types.DataType): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val lt: (Any, Any) => Boolean = nodeType match {
-      case StringType => (a, b) =>
+  private def nodeOrder(
+      nodeType: org.apache.spark.sql.types.DataType): Option[(Any, Any) => Boolean] = {
+    import org.apache.spark.sql.types._
+    nodeType match {
+      case StringType => Some((a, b) =>
         java.util.Arrays.compareUnsigned(
           a.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          b.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
-      case _ => (a, b) =>
-        a.asInstanceOf[Number].longValue() < b.asInstanceOf[Number].longValue()
+          b.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0)
+      case ByteType | ShortType | IntegerType | LongType => Some((a, b) =>
+        a.asInstanceOf[Number].longValue() < b.asInstanceOf[Number].longValue())
+      case _ => None
     }
+  }
+
+  /** Union-find over doubled edges with union-by-min, so every root is the
+    * min of its set under `lt`: yields `(node, root)` for every non-null
+    * endpoint, the same min-id labeling as the distributed loop. Null
+    * endpoints mirror the loop's semantics: they join nothing, their
+    * non-null partner stays isolated, and a single `(null, null)` row
+    * appears iff any endpoint was null. The driver fast path runs it over
+    * the whole edge list, the loop's contraction over each partition.
+    */
+  private def minRootLabels(
+      doubledEdges: Iterator[(Any, Any)],
+      lt: (Any, Any) => Boolean): Iterator[(Any, Any)] = {
     val parent = new java.util.HashMap[Any, Any]()
     var hasNull = false
     def add(x: Any): Unit = if (!parent.containsKey(x)) parent.put(x, x)
@@ -1075,21 +1078,32 @@ object Dedup {
         if (ra != rb) { if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
       }
     }
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](parent.size() + 1)
-    parent.keySet().iterator().forEachRemaining { n =>
-      out.add(org.apache.spark.sql.Row(n, find(n)))
-    }
-    if (hasNull) out.add(org.apache.spark.sql.Row(null, null))
-    spark.createDataFrame(out,
-      StructType(Seq(StructField("node", nodeType), StructField("component", nodeType))))
+    val labels = parent.keySet().iterator().asScala.map(n => (n, find(n)))
+    if (hasNull) labels ++ Iterator((null, null)) else labels
   }
 
+  /** The label-propagation loop, planned under the cached-partitioning
+    * conf [[connectedComponentsWithRounds]] scopes around it.
+    *
+    * The edge list is a MATERIALIZED columnar cache hash-partitioned +
+    * sorted on `dst` (the step-(a) join key): with
+    * `canChangeCachedPlanOutputPartitioning=false` every round's
+    * neighbor-min join then needs neither exchange nor sort on the 2|E|-row
+    * side — a lazy localCheckpoint surfaces UnknownPartitioning and
+    * re-exchanged the full edge set each round (the exact pathology the
+    * PageRank sf10 trace exposed, [[graft.operators.Graphs.pageRank]]).
+    * The operator is already eager (it checkpoints every round), so the
+    * cache is released before returning — persist keeps lineage, making
+    * that safe.
+    */
   private def connectedComponentsLoop(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
       maxRounds: Int,
       smallGraphEdges: Long): (DataFrame, Int) = {
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{StructField, StructType}
     // undirected, deduped edge list — reused every round
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
@@ -1097,32 +1111,48 @@ object Dedup {
       .repartition(col("dst"))
       .sortWithinPartitions("dst")
       .persist()
-    val edgeCount = edges.count() // materialize: an empty cache still plans the exchange
+    val edgeCount = Graphs.fill(edges) // materialize: an empty cache still plans the exchange
+    val nodeType = edges.schema("src").dataType
+    val labelSchema =
+      StructType(Seq(StructField("node", nodeType), StructField("component", nodeType)))
+    val order = nodeOrder(nodeType)
     // Small-graph fast path: when the (already materialized and counted)
     // edge list is tiny, the log-rounds loop is ALL fixed cost — each
-    // round is 2 joins + a checkpoint + a scalar action, ~0.5-1 s of job
-    // launches for microseconds of actual work, which round 9 measured as
-    // a 1.6× regression on q_link_resolve's few-thousand-edge graph. A
-    // driver union-find over ≤ `smallGraphEdges` doubled edges is bounded
+    // round is 2 joins + a checkpoint, ~0.5-1 s of job launches for
+    // microseconds of actual work, which round 9 measured as a 1.6×
+    // regression on q_link_resolve's few-thousand-edge graph. A driver
+    // union-find over ≤ `smallGraphEdges` doubled edges is bounded
     // (2·65536 rows ≈ a broadcast build side, so the C2 bounded-collect
     // discipline holds — the gate IS the bound) and yields the identical
     // min-id labeling. Stress benches that pin the loop's round counts
     // pass smallGraphEdges = 0 to force the distributed path.
-    val nodeType = edges.schema("src").dataType
-    val fastPathType = nodeType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.StringType => true
-      case _ => false
-    }
-    if (fastPathType && edgeCount <= smallGraphEdges) {
-      val rows = edges.collect().map(r => (r.get(0), r.get(1)))
+    if (order.isDefined && edgeCount <= smallGraphEdges) {
+      val rows = edges.collect().iterator.map(r => (r.get(0), r.get(1)))
       edges.unpersist(false)
-      return (driverComponents(pairs.sparkSession, rows, nodeType), 0)
+      val labels = minRootLabels(rows, order.get).map { case (n, c) => Row(n, c) }.toSeq
+      return (pairs.sparkSession.createDataFrame(labels.asJava, labelSchema), 0)
     }
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("component", col("node"))
-      .localCheckpoint(false)
+    // Initial labels. With an order, the local contraction: a union-find
+    // over each cached partition, then every node's min root across the
+    // partitions that hold its edges. A node's own hash partition holds
+    // all its edges (each reversed edge has it as `dst`), so its label
+    // starts at or below the min of its closed neighbourhood. The
+    // aggregation takes the place of the plain `distinct` of nodes, so
+    // contraction adds no job. A task's union-find holds one entry per
+    // distinct node of its partition, so the partition's edge count bounds
+    // its memory.
+    val initial = order match {
+      case Some(lt) =>
+        edges
+          .mapPartitions(rows =>
+            minRootLabels(rows.map(r => (r.get(0), r.get(1))), lt).map { case (n, c) => Row(n, c) }
+          )(Encoders.row(labelSchema))
+          .groupBy(col("node"))
+          .agg(min(col("component")).as("component"))
+      case None =>
+        edges.select(col("src").as("node")).distinct().withColumn("component", col("node"))
+    }
+    var labels = initial.localCheckpoint(false)
     var round = 0
     var changed = 1L
     while (changed > 0 && round < maxRounds) {
@@ -1137,14 +1167,15 @@ object Dedup {
           least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component"),
           col("component").as("prev"))
       // (b) pointer jump: component ← label(component)
-      val jumped = stepped.as("s")
-        .join(labels.select(col("node").as("component"), col("component").as("jump")).as("j"),
-          Seq("component"), "left")
-        .select(col("node"),
-          least(col("component"), coalesce(col("jump"), col("component"))).as("component"),
-          col("prev"))
-        .localCheckpoint(false)
-      changed = jumped.filter(col("component") =!= col("prev")).count()
+      val (jumped, relabeled) = Graphs.checkpointCounting(
+        stepped.as("s")
+          .join(labels.select(col("node").as("component"), col("component").as("jump")).as("j"),
+            Seq("component"), "left")
+          .select(col("node"),
+            least(col("component"), coalesce(col("jump"), col("component"))).as("component"),
+            col("prev")),
+        col("component") =!= col("prev"))
+      changed = relabeled
       labels = jumped.drop("prev")
       round += 1
     }

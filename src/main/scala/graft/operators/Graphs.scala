@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SessionConf
@@ -12,24 +13,6 @@ import graft.SessionConf
   */
 object Graphs {
 
-  /** One-row structural profile: `(n_nodes, n_edges, max_degree,
-    * n_wedges, n_triangles, transitivity_ppm)` where
-    * `transitivity_ppm = 3·triangles·10⁶ div wedges` (the global clustering
-    * coefficient — near 0 for random pairing, high for clique-like
-    * near-dup families).
-    *
-    * Triangle counting uses DEGREE-ORDERED edge orientation (the classic
-    * node-iterator refinement): every edge points from its
-    * `(degree, node)`-smaller endpoint to the larger, each triangle
-    * a<b<c then appears as exactly the wedge (a→b, a→c) closed by b→c —
-    * counted ONCE, no post-hoc dedup — and wedge fan-out at a node is its
-    * OUT-degree, which the ordering caps at O(√m) amortized: a hub with a
-    * million neighbors emits ~nothing (its edges all point INTO it), where
-    * the naive all-wedges join would emit 10¹² pairs. The closing check is
-    * a plain equi-join on the oriented edge list; nothing in the plan
-    * exceeds Σ out-deg² rows. Self-loops are dropped; duplicate/reversed
-    * input pairs collapse.
-    */
   /** Canonical undirected edge list: self-loops dropped, reversed
     * duplicates collapsed onto `(lo, hi)` with lo < hi. The one place edge
     * normalization lives — both profile and PageRank build on it.
@@ -41,6 +24,38 @@ object Graphs {
         least(col(aCol), col(bCol)).as("lo"),
         greatest(col(aCol), col(bCol)).as("hi"))
       .distinct()
+
+  /** Both orientations of every canonical edge as `(src, dst)`, built in
+    * one pass over the canonical edge relation: the adjacency PageRank and
+    * BFS probe by `src`. An `inline` of the two orientations reads the
+    * relation once, where a union of two projections would read it twice
+    * and need a side cache to keep the upstream pair pipeline from running
+    * twice.
+    */
+  private def bidirectional(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    canonicalEdges(pairs, aCol, bCol).select(inline(array(
+      struct(col("lo").as("src"), col("hi").as("dst")),
+      struct(col("hi").as("src"), col("lo").as("dst")))))
+
+  /** Fill the cache of a persisted `df` and return its row count, in the
+    * jobs that run its own plan: `Dataset.count()` would plan a global
+    * aggregate over the cached scan, one more exchange and job.
+    */
+  private[operators] def fill(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** Eager `localCheckpoint` of `df`, plus the number of its rows where
+    * `cond` holds. The count comes from an `Observation` on the job that
+    * fills the checkpoint, so an iterative loop reads its round counter
+    * (removed set, frontier size, changed labels) without a second Spark
+    * job over the materialized round.
+    */
+  private[operators] def checkpointCounting(
+      df: DataFrame,
+      cond: Column = lit(true)): (DataFrame, Long) = {
+    val obs = Observation()
+    val cp = df.observe(obs, count(when(cond, lit(1))).as("n")).localCheckpoint()
+    (cp, obs.get("n").asInstanceOf[Long])
+  }
 
   /** k-core decomposition by simultaneous peeling: repeatedly delete every
     * node whose remaining degree is below `k` (and its edges) until no
@@ -74,13 +89,16 @@ object Graphs {
     * deep-peeling graph (rounds grow with scale AND each round paid
     * O(|E|)). The cached base itself is periodically REBUILT to the
     * surviving edges (once removals since the last rebuild cross ~25% of
-    * the then-live node count), so the per-round probe SCANS track the
-    * surviving edge set too instead of staying O(original |E|) forever on
-    * deep peels. Only the shrinking |V|-row degree frame checkpoints per
-    * round, with superseded generations freed eagerly. An adversarial
-    * graph that peels more than the broadcast bound in one round falls
-    * back to the planner's join choice, never worse than re-aggregating.
-    * The driver sees one emptiness probe per round, never node data.
+    * the then-live node count, and only before a round that probes), so
+    * the per-round probe SCANS track the surviving edge set too instead
+    * of staying O(original |E|) forever on deep peels. Only the shrinking
+    * |V|-row degree frame checkpoints per round, with superseded
+    * generations freed eagerly. An adversarial graph that peels more than
+    * the broadcast bound in one round falls back to the planner's join
+    * choice, never worse than re-aggregating. The driver reads each
+    * round's removed-set size from an `Observation` on the eager
+    * checkpoint that materializes the set (no separate count job), never
+    * node data.
     * Round COUNT is bounded by the peeling depth of the degree
     * distribution — worst case (a path) is O(n), real co-occurrence/
     * linkage graphs finish in a handful; `maxRounds` is the safety bound,
@@ -145,15 +163,16 @@ object Graphs {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1 && maxRounds <= 1000, s"maxRounds out of range: $maxRounds")
     require(baseShrinkFraction <= 1.0, s"baseShrinkFraction > 1: $baseShrinkFraction")
-    // columnar cache + eager materialization: every round probes this (see
-    // buildPrGraph for why persist-then-count, not localCheckpoint)
+    // columnar cache, materialized before any round plans against it (see
+    // buildPrGraph for why persist, not localCheckpoint): the degree
+    // checkpoint below is its only reader, so that job fills it
     val base = canonicalEdges(pairs, aCol, bCol).persist()
-    base.count()
     // Degrees aggregated ONCE; every later generation is survivors minus
     // decrements. Eager checkpoint truncates the round-deep lineage —
     // without it round r's plan would stack r joins over the original
-    // aggregation.
-    var degs = degrees(base).localCheckpoint()
+    // aggregation. The same job counts the nodes (the shrink trigger).
+    val (degs0, nodes0) = checkpointCounting(degrees(base))
+    var degs = degs0
     // An eager checkpoint is a LogicalRDD — size-UNKNOWN to the planner —
     // so the per-round removed set gets an explicit broadcast hint while
     // provably executor-safe (≤ 5 M node ids ≈ tens of MB): the decrement
@@ -181,23 +200,53 @@ object Graphs {
     // work is a geometric series bounded by O(|E|/fraction). Disabled when
     // `baseShrinkFraction <= 0` (the A/B lever — never changes results,
     // only which cache the probes scan).
-    // the node count only feeds the shrink trigger — with the lever off it
-    // would be one wasted eager action per invocation (degs is already an
-    // eager localCheckpoint; nothing else needs the count)
-    val nodes0 = if (baseShrinkFraction > 0) degs.count() else 0L
     var liveBase = base
     var nodesAtShrink = nodes0
     var removedSinceShrink = 0L
     var round = 0
     var fixed = false
     while (!fixed && round < maxRounds) {
-      val low = degs
-        .filter(col("deg") < lit(k.toLong))
-        .select(col("n"))
-        .localCheckpoint()
-      val lowCount = low.count()
+      val (low, lowCount) = checkpointCounting(
+        degs.filter(col("deg") < lit(k.toLong)).select(col("n")))
       if (lowCount == 0L) { fixed = true; releaseCheckpoint(low) }
       else {
+        // The rebuild runs here, before a round that probes, and never
+        // after the last round, whose shrunk base nothing would read. It
+        // only fires when the survivor set is SMALL (≤
+        // [[RebuildSurvivorsMax]]): the r14 deep-peel A/B — an
+        // adversarial onion graph (9.06M nodes, 150 uniform layers, one
+        // layer peeled per round, fresh alternating JVMs) — measured the
+        // ungated lever 1.4-1.6× SLOWER than off (on {389.2, 386.8} s vs
+        // off {280.1, 236.1} s): above the broadcast bound each rebuild
+        // shuffled ~15M+ surviving edges, and even gated at the 5M
+        // broadcast bound the ~5M-id driver collect + 40 MB broadcast per
+        // rebuild still lost (321.0 s vs 262.6 s) against ~0.3 s/round of
+        // probe-scan saving. At ≤1M ids the rebuild is ~8 MB of broadcast
+        // and two narrow scans — cost ~0 even on the adversarial shape —
+        // while the payoff regime survives intact: real deep peels grind
+        // their long round tails over a small residual graph (most nodes
+        // drop early), exactly where survivors fit this bound and the
+        // per-round saving against the still-cached ORIGINAL base
+        // compounds. At the 100 TB end the asymmetry only widens: the
+        // per-round probe scan grows with |E| while the rebuild broadcast
+        // stays bounded by this constant.
+        val survivors = nodesAtShrink - removedSinceShrink
+        if (baseShrinkFraction > 0 && survivors <= RebuildSurvivorsMax &&
+            removedSinceShrink >= baseShrinkFraction * nodesAtShrink) {
+          def survB(as: String): DataFrame = {
+            val s = degs.select(col("n").as(as))
+            if (survivors <= broadcastLowMax) broadcast(s) else s
+          }
+          val shrunk = liveBase
+            .join(survB("lo"), Seq("lo"), "left_semi")
+            .join(survB("hi"), Seq("hi"), "left_semi")
+            .persist()
+          fill(shrunk)
+          liveBase.unpersist(false)
+          liveBase = shrunk
+          nodesAtShrink = survivors
+          removedSinceShrink = 0L
+        }
         val lowB = if (lowCount <= broadcastLowMax) broadcast(low) else low
         // One decrement per removed-incident edge, keyed by the OTHER
         // endpoint; decrements aimed at nodes removed this round or
@@ -224,42 +273,6 @@ object Graphs {
         degs = next
         round += 1
         removedSinceShrink += lowCount
-        // The rebuild only fires when the survivor set is SMALL (≤
-        // [[RebuildSurvivorsMax]]): the r14 deep-peel A/B — an
-        // adversarial onion graph (9.06M nodes, 150 uniform layers, one
-        // layer peeled per round, fresh alternating JVMs) — measured the
-        // ungated lever 1.4-1.6× SLOWER than off (on {389.2, 386.8} s vs
-        // off {280.1, 236.1} s): above the broadcast bound each rebuild
-        // shuffled ~15M+ surviving edges, and even gated at the 5M
-        // broadcast bound the ~5M-id driver collect + 40 MB broadcast per
-        // rebuild still lost (321.0 s vs 262.6 s) against ~0.3 s/round of
-        // probe-scan saving. At ≤1M ids the rebuild is ~8 MB of broadcast
-        // and two narrow scans — cost ~0 even on the adversarial shape —
-        // while the payoff regime survives intact: real deep peels grind
-        // their long round tails over a small residual graph (most nodes
-        // drop early), exactly where survivors fit this bound and the
-        // per-round saving against the still-cached ORIGINAL base
-        // compounds. At the 100 TB end the asymmetry only widens: the
-        // per-round probe scan grows with |E| while the rebuild broadcast
-        // stays bounded by this constant.
-        val survivorsNow = nodesAtShrink - removedSinceShrink
-        if (baseShrinkFraction > 0 && survivorsNow <= RebuildSurvivorsMax &&
-            removedSinceShrink >= baseShrinkFraction * nodesAtShrink) {
-          val survivors = survivorsNow
-          def survB(as: String): DataFrame = {
-            val s = degs.select(col("n").as(as))
-            if (survivors <= broadcastLowMax) broadcast(s) else s
-          }
-          val shrunk = liveBase
-            .join(survB("lo"), Seq("lo"), "left_semi")
-            .join(survB("hi"), Seq("hi"), "left_semi")
-            .persist()
-          shrunk.count()
-          liveBase.unpersist(false)
-          liveBase = shrunk
-          nodesAtShrink = survivors
-          removedSinceShrink = 0L
-        }
         iterGc() // opt-in: drop the round's dereferenced shuffles/blocks
       }
     }
@@ -335,10 +348,12 @@ object Graphs {
     * distances to keep only first visits. The adjacency is built once and
     * `persist`ed (each hop re-reads it; re-deriving would re-run the whole
     * upstream pair pipeline per hop, and lineage-backed persist lets an
-    * evicted partition recompute where a checkpoint could not); frontier
-    * and distance frames are `localCheckpoint`ed per hop to truncate the
-    * growing lineage. The driver sees one emptiness probe per hop, never
-    * node data. Output: `(node, hops)`.
+    * evicted partition recompute where a checkpoint could not). Each hop's
+    * new level is `localCheckpoint`ed once, which truncates the lineage;
+    * the distance set is the union of those level checkpoints, never
+    * re-checkpointed as it grows. The driver reads each level's size from
+    * an `Observation` on the checkpoint that materializes it (no separate
+    * emptiness job), never node data. Output: `(node, hops)`.
     */
   def bfsHops(
       pairs: DataFrame,
@@ -359,14 +374,11 @@ object Graphs {
     // rung that is 239M rows per hop). With the layout visible only the
     // dwindling frontier moves per hop, at every scale.
     SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
-      val edges = canonicalEdges(pairs, aCol, bCol).persist()
-      val adj = edges.select(col("lo").as("u"), col("hi").as("v"))
-        .union(edges.select(col("hi").as("u"), col("lo").as("v")))
-        .repartition(col("u"))
-        .sortWithinPartitions("u")
+      val adj = bidirectional(pairs, aCol, bCol)
+        .repartition(col("src"))
+        .sortWithinPartitions("src")
         .persist()
-      adj.count() // materialize so edges can release and hops plan against the cache
-      edges.unpersist(false)
+      fill(adj) // materialize so hops plan against the cached layout
       var dist = seeds
         .filter(col(seedCol).isNotNull)
         .select(col(seedCol).as("node")).distinct()
@@ -376,21 +388,20 @@ object Graphs {
       var hop = 0L
       var exhausted = false
       while (hop < maxHops && !exhausted) {
-        val next = frontier.select(col("node").as("u"))
-          .join(adj, Seq("u"))
-          .select(col("v").as("node")).distinct()
+        val (next, size) = checkpointCounting(frontier.select(col("node").as("src"))
+          .join(adj, Seq("src"))
+          .select(col("dst").as("node")).distinct()
           .join(dist.select("node"), Seq("node"), "left_anti")
-          .withColumn("hops", lit(hop + 1L))
-          .localCheckpoint()
-        if (next.isEmpty) exhausted = true
+          .withColumn("hops", lit(hop + 1L)))
+        if (size == 0L) { exhausted = true; releaseCheckpoint(next) }
         else {
-          dist = dist.union(next).localCheckpoint()
+          dist = dist.union(next) // the levels stay separate checkpoints
           frontier = next
           hop += 1
           iterGc() // opt-in: drop the superseded hop's shuffles/blocks
         }
       }
-      adj.unpersist(false) // dist is checkpointed; nothing re-reads the cache
+      adj.unpersist(false) // every level is checkpointed; nothing re-reads the cache
       dist
     }
   }
@@ -421,6 +432,24 @@ object Graphs {
   private val ProfileClosingBroadcastMaxEdges = 20000000L
   val ProfileClosingBroadcastMaxEdgesConf = "spark.graft.graph.profileClosingBroadcastMaxEdges"
 
+  /** One-row structural profile: `(n_nodes, n_edges, max_degree,
+    * n_wedges, n_triangles, transitivity_ppm)` where
+    * `transitivity_ppm = 3·triangles·10⁶ div wedges` (the global clustering
+    * coefficient — near 0 for random pairing, high for clique-like
+    * near-dup families).
+    *
+    * Triangle counting uses DEGREE-ORDERED edge orientation (the classic
+    * node-iterator refinement): every edge points from its
+    * `(degree, node)`-smaller endpoint to the larger, each triangle
+    * a<b<c then appears as exactly the wedge (a→b, a→c) closed by b→c —
+    * counted ONCE, no post-hoc dedup — and wedge fan-out at a node is its
+    * OUT-degree, which the ordering caps at O(√m) amortized: a hub with a
+    * million neighbors emits ~nothing (its edges all point INTO it), where
+    * the naive all-wedges join would emit 10¹² pairs. The closing check is
+    * a plain equi-join on the oriented edge list; nothing in the plan
+    * exceeds Σ out-deg² rows. Self-loops are dropped; duplicate/reversed
+    * input pairs collapse.
+    */
   def graphProfile(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     // FOUR consumers read the canonical edge relation (degree union ×2,
     // the orientation join, the edge count); without a cache each one
@@ -520,54 +549,13 @@ object Graphs {
           .as("transitivity_ppm"))
   }
 
-  /** PageRank over the undirected pair graph in EXACT integer arithmetic —
-    * centrality for near-dup families ("which document anchors this
-    * cluster"), co-occurrence networks, linkage graphs. Ranks live on a
-    * `scale`-unit integer grid and every step is integer division
-    * (truncation is part of the deterministic spec, identical in any
-    * engine), so k iterations are replayable closed-form:
-    * `r₀ = scale div n`, then
-    * `r'(u) = ((10⁶ − damp)·r₀ + damp·Σ_{v∼u} (r(v) div deg(v))) div 10⁶`.
-    * Scale shape — built so the per-iteration cost is proportional to
-    * NODES moved, not edges re-shuffled: the bidirectional adjacency is
-    * hash-partitioned by `src`, sorted within partitions, given its
-    * source degree by a count-over-src window INSIDE that one exchange
-    * (no degree aggregation, no degree join), and `persist`ed as a
-    * COLUMNAR cache. The cache, not a localCheckpoint, is load-bearing
-    * twice over: (1) `InMemoryRelation` keeps the cached plan's
-    * partitioning + ordering, so every iteration's contribution join needs
-    * NEITHER exchange NOR sort on the 2|E|-row side — a lazy checkpoint's
-    * `LogicalRDD` surfaces UnknownPartitioning under AQE, and an sf10
-    * probe (120 M canonical edges) re-exchanged all 239 M adjacency rows
-    * in EVERY iteration because of it; (2) compressed column batches hold
-    * three-long rows at ~⅓ the deserialized row-cache footprint, which at
-    * sf10 was 12 GB of heap pressing the GC into multi-second stalls.
-    * Partitioning preservation requires
-    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false`
-    * (Spark 4 defaults it true, letting AQE re-plan cached layouts); it is
-    * set-and-restored around construction — iteration plans are created
-    * here, so the scope is exact. Only the |V|-row rank frame (which
-    * carries its node's degree, so no per-iteration degree join exists)
-    * shuffles per iteration; the contribution aggregation partial-combines
-    * map-side before its |V|-bounded shuffle, and the rank rebuild joins
-    * the cached node frame and aggregate output on their shared hash(node)
-    * distribution (sorts only). Per-round `localCheckpoint` truncates the
-    * k-deep rank lineage (|V| rows cached per round; Bench releases these
-    * orphaned checkpoints between queries). The adjacency/node caches are
-    * SESSION-SCOPED like any persisted index frame — a long-lived session
-    * mixing many graphs should `spark.catalog.clearCache()` when done.
-    * Isolated nodes never appear (no edges ⇒ no rank mass to receive);
-    * every listed node has deg ≥ 1, so no dangling-mass redistribution is
-    * needed. Output: `(node, rank_scaled)` — Σ rank drifts below `scale`
-    * by the truncation (deterministically), relative order is what
-    * centrality consumes.
-    */
   /** The materialized PageRank graph state: cached adjacency, cached node
-    * frame, broadcast base-rank row. Exposed `private[graft]` so PlanSpec
-    * can audit a raw (un-checkpointed) iteration frame — the zero-exchange
-    * property of the adjacency side must be pinned by a test, not assumed.
+    * frame, and the base rank `b0 = scale div n` as a driver-side literal.
+    * Exposed `private[graft]` so PlanSpec can audit a raw (un-checkpointed)
+    * iteration frame — the zero-exchange property of the adjacency side
+    * must be pinned by a test, not assumed.
     */
-  private[graft] final case class PrGraph(adj: DataFrame, nodes: DataFrame, b0: DataFrame)
+  private[graft] final case class PrGraph(adj: DataFrame, nodes: DataFrame, b0: Long)
 
   /** Build + MATERIALIZE the adjacency/node caches (see [[pageRank]]'s
     * scaladoc for why eager, why persist-not-checkpoint, and why the
@@ -579,15 +567,6 @@ object Graphs {
       aCol: String,
       bCol: String,
       scale: Long): PrGraph = {
-    // Canonical edges cached FIRST: the bidirectional union reads the
-    // edge relation twice, and without a materialized cache each branch
-    // re-runs the ENTIRE pair pipeline (self-join + distinct — the two
-    // most expensive stages of the sf10 trace, ~70 s each, run twice).
-    // persist (not localCheckpoint) keeps lineage, so this cache can be
-    // RELEASED as soon as adj is built.
-    val edges = canonicalEdges(pairs, aCol, bCol).persist()
-    val bidir = edges.select(col("lo").as("src"), col("hi").as("dst"))
-      .union(edges.select(col("hi").as("src"), col("lo").as("dst")))
     // adjacency with the SOURCE degree attached, via ONE exchange: the
     // repartition+sort lays rows out by src, and the count-over-src
     // window computes deg inside that same layout (WindowExec's
@@ -595,11 +574,10 @@ object Graphs {
     // aggregation exchange, no degree join). Sorted before the columnar
     // cache, so no iteration ever exchanges or sorts this side (see
     // scaladoc for why persist, not localCheckpoint).
-    val adj = bidir
+    val adj = bidirectional(pairs, aCol, bCol)
       .repartition(col("src"))
       .sortWithinPartitions("src")
-      .withColumn("deg",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("src")))
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
       .persist()
     // MATERIALIZE before planning the iterations: an InMemoryRelation
     // only reports its final partitioning once its (AQE-planned) cached
@@ -610,30 +588,24 @@ object Graphs {
     // iterative state construction — like GraphX/Pregel it pays its
     // graph build eagerly; this is the one catalog operator that departs
     // from construction-time laziness, deliberately.
-    adj.count()
-    // edges served its purpose (adj is materialized); release the ~|E|
-    // columnar cache now. Lineage is intact, so an evicted adj partition
-    // can still recompute from source — the safety localCheckpoint lacks.
-    edges.unpersist(false)
+    fill(adj)
     // (node, deg): aggregation over adj's cached hash(src) distribution —
     // no exchange; cached because every iteration's rank rebuild reads it
     // (a 2|E|-row adj rescan per use would dwarf the |V|-row result).
     val nodes = adj.groupBy(col("src").as("node"))
       .agg(min(col("deg")).as("deg"))
       .persist()
-    nodes.count()
-    // base₀ = scale div n as a one-row broadcast frame (the oracle's
-    // `b0` CTE); an empty edge list yields an empty result
-    val b0 = broadcast(nodes.agg(
-      call_function("div", lit(scale), count(lit(1))).as("__b0")))
-    PrGraph(adj, nodes, b0)
+    val n = fill(nodes)
+    // base₀ = scale div n (the oracle's `b0` CTE), computed once here and
+    // embedded in every iteration plan as a literal: no per-iteration
+    // aggregate or broadcast. An empty edge list has no nodes and yields
+    // an empty result; its b0 of 0 is never read.
+    PrGraph(adj, nodes, if (n == 0L) 0L else scale / n)
   }
 
   /** Initial rank frame: every node at `scale div n`. */
   private[graft] def prInit(g: PrGraph): DataFrame =
-    g.nodes
-      .crossJoin(g.b0)
-      .select(col("node"), col("deg"), col("__b0").as("rank_scaled"))
+    g.nodes.select(col("node"), col("deg"), lit(g.b0).as("rank_scaled"))
 
   /** One un-checkpointed rank iteration — the frame PlanSpec audits. */
   private[graft] def prStep(ranks: DataFrame, g: PrGraph, dampPpm: Long): DataFrame = {
@@ -646,10 +618,9 @@ object Graphs {
     // while `div` truncates like every other engine's integer division
     g.nodes
       .join(contrib, Seq("node"), "left")
-      .crossJoin(g.b0)
       .select(col("node"), col("deg"),
         call_function("div",
-          lit(1000000L - dampPpm) * col("__b0") +
+          lit(1000000L - dampPpm) * lit(g.b0) +
             lit(dampPpm) * coalesce(col("__in"), lit(0L)),
           lit(1000000L)).as("rank_scaled"))
   }
@@ -692,10 +663,7 @@ object Graphs {
     val spark = pairs.sparkSession
     SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
       val g = buildPrGraph(pairs, aCol, bCol, scale)
-      // b0 is a broadcast 1-row frame either way; reading the scalar here
-      // is the same bounded collect the iteration plans embed
-      val b0 = g.b0.collect().headOption.map(_.getLong(0)).getOrElse(0L)
-      val tol = math.max(1L, b0 * tolPpm / 1000000L)
+      val tol = math.max(1L, g.b0 * tolPpm / 1000000L)
       var ranks = prInit(g).localCheckpoint(false)
       var it = 0
       var delta = Long.MaxValue
@@ -715,13 +683,55 @@ object Graphs {
         // plan (which pins its round's ShuffleDependencies) must be
         // unreachable before the GC can hand it to ContextCleaner
         iterGc()
-        System.err.println(s"[pageRankConverged] iter $it max|drank|=$delta tol=$tol")
       }
       (ranks.select(col("node"), col("rank_scaled"))
         .withColumn("n_iters", lit(it.toLong)), it)
     }
   }
 
+  /** PageRank over the undirected pair graph in EXACT integer arithmetic —
+    * centrality for near-dup families ("which document anchors this
+    * cluster"), co-occurrence networks, linkage graphs. Ranks live on a
+    * `scale`-unit integer grid and every step is integer division
+    * (truncation is part of the deterministic spec, identical in any
+    * engine), so k iterations are replayable closed-form:
+    * `r₀ = scale div n`, then
+    * `r'(u) = ((10⁶ − damp)·r₀ + damp·Σ_{v∼u} (r(v) div deg(v))) div 10⁶`.
+    * Scale shape — built so the per-iteration cost is proportional to
+    * NODES moved, not edges re-shuffled: the bidirectional adjacency is
+    * hash-partitioned by `src`, sorted within partitions, given its
+    * source degree by a count-over-src window INSIDE that one exchange
+    * (no degree aggregation, no degree join), and `persist`ed as a
+    * COLUMNAR cache. The cache, not a localCheckpoint, is load-bearing
+    * twice over: (1) `InMemoryRelation` keeps the cached plan's
+    * partitioning + ordering, so every iteration's contribution join needs
+    * NEITHER exchange NOR sort on the 2|E|-row side — a lazy checkpoint's
+    * `LogicalRDD` surfaces UnknownPartitioning under AQE, and an sf10
+    * probe (120 M canonical edges) re-exchanged all 239 M adjacency rows
+    * in EVERY iteration because of it; (2) compressed column batches hold
+    * three-long rows at ~⅓ the deserialized row-cache footprint, which at
+    * sf10 was 12 GB of heap pressing the GC into multi-second stalls.
+    * Partitioning preservation requires
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false`
+    * (Spark 4.1 defaults it false; a caller that sets it true lets AQE
+    * re-plan cached layouts), so it is pinned false for the duration of
+    * the call and the caller's value restored after — iteration plans are
+    * created here, so the scope is exact. Only the |V|-row rank frame (which
+    * carries its node's degree, so no per-iteration degree join exists)
+    * shuffles per iteration; the contribution aggregation partial-combines
+    * map-side before its |V|-bounded shuffle, and the rank rebuild joins
+    * the cached node frame and aggregate output on their shared hash(node)
+    * distribution (sorts only). Per-round `localCheckpoint` truncates the
+    * k-deep rank lineage (|V| rows cached per round; Bench releases these
+    * orphaned checkpoints between queries). The adjacency/node caches are
+    * SESSION-SCOPED like any persisted index frame — a long-lived session
+    * mixing many graphs should `spark.catalog.clearCache()` when done.
+    * Isolated nodes never appear (no edges ⇒ no rank mass to receive);
+    * every listed node has deg ≥ 1, so no dangling-mass redistribution is
+    * needed. Output: `(node, rank_scaled)` — Σ rank drifts below `scale`
+    * by the truncation (deterministically), relative order is what
+    * centrality consumes.
+    */
   def pageRank(
       pairs: DataFrame,
       aCol: String,

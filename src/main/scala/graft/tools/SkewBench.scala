@@ -352,7 +352,7 @@ object SkewBench {
     // jumping must converge in ≈ log₂(diameter). Giant component: 1M
     // random edges over 500k nodes (one ~all-node component, small
     // diameter) — pins that a single component holding nearly every node
-    // neither blows up the driver (per-round scalar action only) nor the
+    // neither blows up the driver (one observed counter per round) nor the
     // round count.
     val chainN = 400000L
     val chain = spark.range(chainN - 1)

@@ -12,12 +12,14 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.config.OutputConfig
 import graft.jobs.ComparisonJob
+import graft.operators.{Dedup, Graphs}
 import graft.sources.IoUtils
 
-/** Pins how many Spark jobs the compare path runs, and the written order of
-  * the consolidated reports. Each job is charged by the call site of the
-  * action that submitted it (`head at Comparison.scala:…` is the engine,
-  * `save at IoUtils.scala:…` the report writes).
+/** Pins how many Spark jobs the compare path and the iterative graph loops
+  * run, and the written order of the consolidated reports. Each job is
+  * charged by the call site of the action that submitted it (`head at
+  * Comparison.scala:…` is the engine, `save at IoUtils.scala:…` the report
+  * writes).
   */
 class JobShapeSpec extends SparkSpec {
   import spark.implicits._
@@ -131,5 +133,29 @@ class JobShapeSpec extends SparkSpec {
     assert(viaIo.forall(layer(_) == "write"), viaIo)
     assert(partFiles(s"$tmp/io").size == 1)
     assert(spark.read.parquet(s"$tmp/io").count() == 37L)
+  }
+
+  test("graph loops run a pinned number of Spark jobs") {
+    // Each loop reads its per-round counter from an Observation on the
+    // checkpoint job that materializes the round, PageRank's base rank is a
+    // literal, and CC contracts each partition before its rounds: a scalar
+    // probe added back per round, or a per-iteration aggregate, breaks the
+    // ceiling. Counts include the action that consumes the result.
+    val (edges, clusters) = GraphFixtures.clusterGraph(200, seed = 7L)
+    val pairs = edges.toDF("a", "b")
+    val seeds = clusters.indices.filter(_ % 3 == 0).map(clusters(_).head).toDF("s")
+    val jobs = Map(
+      "pageRank" -> jobsOf(Graphs.pageRank(pairs, "a", "b", iters = 3).collect()),
+      "kCoreReleased" -> jobsOf(Graphs.kCoreReleased(pairs, "a", "b", k = 3).collect()),
+      "bfsHops" -> jobsOf(Graphs.bfsHops(pairs, "a", "b", seeds, "s", maxHops = 3).collect()),
+      "connectedComponents" -> jobsOf(
+        Dedup.connectedComponents(pairs, "a", "b", smallGraphEdges = 0L).collect()))
+    // 28, 26, 29 and 37 jobs before the observed counters, the literal
+    // base rank, the one-pass adjacency and the contraction
+    val ceilings = Map("pageRank" -> 16, "kCoreReleased" -> 15, "bfsHops" -> 20,
+      "connectedComponents" -> 18)
+    val over = ceilings.filter { case (op, ceiling) => jobs(op).size > ceiling }
+    assert(over.isEmpty, over.keys.map(op => s"$op ran ${jobs(op).size} jobs " +
+      s"(ceiling ${ceilings(op)}): ${jobs(op).mkString(", ")}").mkString("\n"))
   }
 }

@@ -1015,6 +1015,90 @@ class OperatorsSpec extends SparkSpec {
     assert(nFast == nLoop, s"null parity broke: $nFast vs $nLoop")
   }
 
+  test("connectedComponents: the contracted distributed loop equals the driver union-find at 1, 4 and 16 partitions") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import graft.operators.Dedup
+    // The loop first unions each cached edge partition locally, so its
+    // answer must not depend on how edges fall into partitions. Graphs
+    // carry self-loops, duplicate and reversed pairs and null endpoints.
+    val rnd = new scala.util.Random(20261019L)
+    def randomEdges(nodes: Int, n: Int): Seq[(Option[Long], Option[Long])] = {
+      val base = Seq.fill(n)((rnd.nextInt(nodes).toLong, rnd.nextInt(nodes).toLong))
+      val repeated = base.take(n / 10) ++ base.slice(n / 10, n / 5).map(_.swap)
+      rnd.shuffle((base ++ repeated).map { case (a, b) =>
+        rnd.nextInt(40) match {
+          case 0 => (None, Some(b))
+          case 1 => (Some(a), None)
+          case _ => (Some(a), Some(b))
+        }
+      }) :+ ((None, None))
+    }
+    // string ids whose UTF-8 byte order differs from UTF-16 order
+    val prefixes = Seq("", "Z", "\u00e9", "\uFF5E", "\uD83D\uDE00")
+    def named(e: Seq[(Option[Long], Option[Long])]): Seq[(Option[String], Option[String])] =
+      e.map { case (a, b) =>
+        (a.map(i => prefixes((i % 5).toInt) + i), b.map(i => prefixes((i % 5).toInt) + i)) }
+    // model: per-edge min-label relaxation to its fixpoint, under the
+    // UTF-8 byte order Spark's min uses
+    def less(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: String, y: String) =>
+        java.util.Arrays.compareUnsigned(x.getBytes("UTF-8"), y.getBytes("UTF-8")) < 0
+      case (x: Long, y: Long) => x < y
+    }
+    def model(edges: Seq[(Option[Any], Option[Any])]): Set[(Option[Any], Option[Any])] = {
+      val linked = edges.collect { case (Some(a), Some(b)) => (a, b) }
+      var label = edges.flatMap(e => e._1.toSeq ++ e._2.toSeq).map(n => n -> n).toMap
+      var changed = true
+      while (changed) {
+        changed = false
+        for ((a, b) <- linked) {
+          val m = if (less(label(b), label(a))) label(b) else label(a)
+          if (label(a) != m || label(b) != m) { label ++= Seq(a -> m, b -> m); changed = true }
+        }
+      }
+      label.map { case (n, c) => (Option(n), Option(c)) }.toSet ++
+        (if (edges.exists(e => e._1.isEmpty || e._2.isEmpty)) Set((None, None)) else Set.empty)
+    }
+    def rows(df: DataFrame): Seq[(Option[Any], Option[Any])] =
+      df.collect().toSeq.map(r => (Option(r.get(0)), Option(r.get(1))))
+    val sparse = randomEdges(300, 260)
+    val dense = randomEdges(200, 500)
+    val strings = named(randomEdges(150, 140))
+    val graphs = Seq[(String, Seq[(Option[Any], Option[Any])], SparkSession => DataFrame)](
+      ("sparse Long", sparse, _.createDataFrame(sparse).toDF("a", "b")),
+      ("dense Long", dense, _.createDataFrame(dense).toDF("a", "b")),
+      ("String", strings, _.createDataFrame(strings).toDF("a", "b")))
+    for ((name, edges, frame) <- graphs) {
+      val want = model(edges)
+      val driver = rows(Dedup.connectedComponents(frame(spark), "a", "b"))
+      assert(driver.toSet == want, s"$name: driver union-find diverged from the model")
+      for (partitions <- Seq(1, 4, 16)) {
+        val s = spark.newSession()
+        s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+        val got = rows(Dedup.connectedComponents(frame(s), "a", "b", smallGraphEdges = 0L))
+        assert(got.size == got.distinct.size, s"$name at $partitions: a node labelled twice")
+        assert(got.toSet == want, s"$name at $partitions partitions: ${(got.toSet -- want).take(5)}")
+        // null endpoints: exactly one (null, null) row; partners isolated
+        // unless a non-null edge links them
+        assert(got.count(_._1.isEmpty) == 1 && got.contains((None, None)), s"$name: $partitions")
+      }
+    }
+  }
+
+  test("connectedComponents: local contraction cuts the rounds on a cluster graph") {
+    import graft.operators.Dedup
+    // rings and circulants under a seeded id permutation, 8 partitions:
+    // label propagation alone needs 5 rounds here
+    val (edges, clusters) = GraphFixtures.clusterGraph(2000, seed = 1L)
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val (labels, rounds) = Dedup.connectedComponentsWithRounds(
+      s.createDataFrame(edges).toDF("a", "b"), "a", "b", smallGraphEdges = 0L)
+    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == clusters.flatMap(c => c.map(_ -> c.min)).toMap)
+    assert(rounds <= 3, s"contracted loop took $rounds rounds")
+  }
+
   test("repetitionStats: hand-computed dup line/n-gram fractions; empty inputs are 0") {
     val corpus = Seq(
       // 4 non-blank lines, "dup" twice → dup_line_ratio 1/4;

@@ -491,10 +491,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prev = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "false")
-    try {
+    SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
       val pairs = spark.range(4000).selectExpr("id % 500 AS pa", "(id * 7 + 1) % 500 AS pb")
         .filter("pa != pb")
       val g = graft.operators.Graphs.buildPrGraph(pairs, "pa", "pb", 1000000000000L)
@@ -543,12 +540,12 @@ class PlanSpec extends SparkSpec {
         assert(!reachesCache(e.child),
           s"cached adjacency/node frame re-exchanged in the iteration plan:\n$e")
       }
+      // the base rank is a literal: no one-row aggregate is cross-joined
+      // (a nested-loop join) into the iteration
+      import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+      assert(all.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
+        s"iteration plan cross-joins a base-rank frame:\n${step.queryExecution.executedPlan}")
       spark.catalog.clearCache()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(cacheKey, v)
-        case None => spark.conf.unset(cacheKey)
-      }
     }
   }
 
