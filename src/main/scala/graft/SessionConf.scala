@@ -5,11 +5,6 @@ import org.apache.spark.sql.SparkSession
 /** Scoped session configuration. */
 private[graft] object SessionConf {
 
-  /** Cached plans keep their output partitioning visible to the planner
-    * only while this is "false" (the PageRank lesson, `Graphs.scala`).
-    */
-  val CachedLayout = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-
   /** Run `body` with the given session confs set, then restore each one's
     * previous value, or unset it if the caller had not set it (`getOption`
     * would read a registered conf's default and pin it). The session is

@@ -2,6 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import graft.tools.Jsons
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -16,19 +18,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *   - the final stdout line is the bare JSON summary.
   */
 object Verify {
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   private def writeAtomic(path: String, content: String): Unit = {
     val tmp = Paths.get(path + ".tmp")
     Files.writeString(tmp, content)
@@ -63,14 +52,14 @@ object Verify {
 
     // Oracle SQL first: a timeout mid-queries must not lose the whole gate.
     val oracleJson = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Jsons.str(k)}: ${Jsons.str(v)}" }.mkString("{", ",", "}")
     writeAtomic(s"$outDir/oracle_sql.json", oracleJson)
 
     val verdicts = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // A FILTERED run must not overwrite the canonical full-catalog mirror
     // with a subset that would read as an all-green latest state.
     def mirror(): Unit = if (only.isEmpty) {
-      val body = verdicts.map { case (k, v) => s"${q(k)}: $v" }
+      val body = verdicts.map { case (k, v) => s"${Jsons.str(k)}: $v" }
         .mkString("{", ",", "}")
       try writeAtomic("VERIFY_LATEST.json", body)
       catch { case _: Throwable => () }
@@ -86,14 +75,14 @@ object Verify {
         verdicts(name) = s"""{"ok": true, "sec": $sec}"""
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        verdicts(name) = s"""{"ok": false, "error": ${q(String.valueOf(e.getMessage).take(300))}}"""
+        verdicts(name) = s"""{"ok": false, "error": ${Jsons.str(String.valueOf(e.getMessage).take(300))}}"""
       }
       mirror()
     }
     spark.stop()
     val nOk = verdicts.valuesIterator.count(_.contains("\"ok\": true"))
     // Bare last stdout line (driver-parse friendly).
-    println(s"""{"verify_queries": ${verdicts.size}, "ok": $nOk, "outDir": ${q(outDir)}}""")
+    println(s"""{"verify_queries": ${verdicts.size}, "ok": $nOk, "outDir": ${Jsons.str(outDir)}}""")
     System.out.flush()
   }
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.Constants._
-import graft.SessionConf
 import graft.config.{DatasetParams, TestParams}
 import graft.functions.NestedChecksum
 import graft.functions.NestedChecksum.containsMap
@@ -741,21 +740,6 @@ object Comparison {
       sourceDf: DataFrame,
       targetDf: DataFrame,
       params: DatasetParams): ComparisonResult = {
-    // The count frame keeps exactly the derived partition count of its
-    // alignment exchange only under
-    // canChangeCachedPlanOutputPartitioning=false: the cached plan's final
-    // shuffle is then never coalesced (the PageRank lesson, Graphs.scala);
-    // scope it around construction exactly.
-    SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
-      buildComparison(spark, sourceDf, targetDf, params)
-    }
-  }
-
-  private def buildComparison(
-      spark: SparkSession,
-      sourceDf: DataFrame,
-      targetDf: DataFrame,
-      params: DatasetParams): ComparisonResult = {
     val keyCols = params.primaryKeys
     val keyColumns = keyCols.map(col)
     val rawSrc = project(sourceDf, params)
@@ -799,9 +783,12 @@ object Comparison {
     // shuffle partitions. At cluster scale the cap keeps the layout at
     // spark.sql.shuffle.partitions; at small inputs the estimate stops
     // kilobyte partitions from paying a full task-launch wave per stage.
-    // AQE cannot repair that here because the engine pins cached-plan
-    // partitioning (canChangeCachedPlanOutputPartitioning=false), which
-    // also disables coalescing inside the cached plan.
+    // AQE cannot repair that here: under Spark's default
+    // canChangeCachedPlanOutputPartitioning=false the cached count frame
+    // keeps exactly this partition count (its final shuffle is never
+    // coalesced — the PageRank lesson, Graphs.scala). A session that sets
+    // the key "true" gets the same results, but the cached layout may then
+    // be coalesced and re-exchanged by its readers.
     val slimPartitions: Int = {
       val targetBytes = spark.conf.getOption(SlimPartitionBytesConf)
         .map(_.toLong).getOrElse(SlimPartitionBytes)

@@ -161,44 +161,36 @@ object ComparisonJob {
     // which is where the sequential loop lost most of its wall-clock (the
     // per-dataset jobs are many and small). Outcomes come back in config
     // order, so the fail-fast choice ("first" = first in config order) and
-    // the captured-failure set are identical to the sequential loop. The
-    // cached-partitioning conf that compareDataFrames scopes around each
-    // construction is HOISTED around the whole parallel section: with
-    // per-dataset set/restore, dataset A's restore could strip cached-layout
-    // visibility mid-B-planning; under the hoist every inner
-    // capture/restore sees the same "false", so the inner scoping
-    // degenerates to a harmless no-op.
+    // the captured-failure set are identical to the sequential loop.
     val outcomes: Seq[Either[Throwable, ComparisonResult]] =
-      SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
-        graft.core.Par.attemptAll(config.datasetConfigs.map { dc => () =>
-          // Each read runs its own schema job (parquet footers); overlap
-          // them. runAll rethrows in argument order, so a dataset whose
-          // source and target both fail reports the source's error.
-          val Seq(src, tgt) = graft.core.Par.runAll(Seq(
-            () => IoUtils.readDataframe(spark, dc.sourceConfig),
-            () => IoUtils.readDataframe(spark, dc.targetConfig)))
-          val r = Comparison.compareDataFrames(spark, src, tgt, dc.params)
-          if (config.continueOnError) {
-            // Force the dataset's LAZY outputs while still inside its own
-            // attempt: the row-level report and the unmatched extracts
-            // don't execute until writeResults, and by then the
-            // per-dataset frames are consolidated — a deferred failure
-            // (cache eviction forcing a source re-read that now errors, a
-            // transient storage fault) would abort the whole consolidated
-            // write and lose every completed dataset, which is exactly
-            // the outcome this flag exists to prevent. The count() runs
-            // the row report over the already-filled count frame, and the
-            // extract counts run each lazy filter over the
-            // already-materialized tolerance frame — cheap cached scans,
-            // paid only under continue_on_error. Failures surfacing in
-            // the shared write itself (output-path I/O) remain job-level
-            // by design: they are not attributable to one dataset.
-            r.rowLvlTestReport.count()
-            r.unmatchedRecords.valuesIterator.foreach(_.count())
-          }
-          r
-        })
-      }
+      graft.core.Par.attemptAll(config.datasetConfigs.map { dc => () =>
+        // Each read runs its own schema job (parquet footers); overlap
+        // them. runAll rethrows in argument order, so a dataset whose
+        // source and target both fail reports the source's error.
+        val Seq(src, tgt) = graft.core.Par.runAll(Seq(
+          () => IoUtils.readDataframe(spark, dc.sourceConfig),
+          () => IoUtils.readDataframe(spark, dc.targetConfig)))
+        val r = Comparison.compareDataFrames(spark, src, tgt, dc.params)
+        if (config.continueOnError) {
+          // Force the dataset's LAZY outputs while still inside its own
+          // attempt: the row-level report and the unmatched extracts
+          // don't execute until writeResults, and by then the
+          // per-dataset frames are consolidated — a deferred failure
+          // (cache eviction forcing a source re-read that now errors, a
+          // transient storage fault) would abort the whole consolidated
+          // write and lose every completed dataset, which is exactly
+          // the outcome this flag exists to prevent. The count() runs
+          // the row report over the already-filled count frame, and the
+          // extract counts run each lazy filter over the
+          // already-materialized tolerance frame — cheap cached scans,
+          // paid only under continue_on_error. Failures surfacing in
+          // the shared write itself (output-path I/O) remain job-level
+          // by design: they are not attributable to one dataset.
+          r.rowLvlTestReport.count()
+          r.unmatchedRecords.valuesIterator.foreach(_.count())
+        }
+        r
+      })
     val attempts: Seq[Either[(String, Throwable), ComparisonResult]] =
       config.datasetConfigs.zip(outcomes).map {
         case (_, Right(r)) => Right(r)

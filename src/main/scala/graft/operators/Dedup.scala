@@ -5,7 +5,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
-import graft.SessionConf
 import graft.functions.TextAnalysis
 
 /** Deduplication operators for large-scale corpus cleaning: exact,
@@ -1011,21 +1010,6 @@ object Dedup {
       smallGraphEdges: Long = 65536L): DataFrame =
     connectedComponentsWithRounds(pairs, aCol, bCol, maxRounds, smallGraphEdges)._1
 
-  /** [[connectedComponents]] plus the number of label-propagation rounds it
-    * took to converge — the observable the log-rounds complexity claim is
-    * pinned on (rounds ≈ log₂ diameter; see the chain/giant-component
-    * stress in [[graft.tools.SkewBench]] and OperatorsSpec).
-    */
-  private[graft] def connectedComponentsWithRounds(
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxRounds: Int = 25,
-      smallGraphEdges: Long = 65536L): (DataFrame, Int) =
-    SessionConf.scoped(pairs.sparkSession, SessionConf.CachedLayout -> "false") {
-      connectedComponentsLoop(pairs, aCol, bCol, maxRounds, smallGraphEdges)
-    }
-
   /** Strict order on external node values that matches Spark's `min`:
     * integral types numerically, strings by UTF-8 bytes (Spark's binary
     * string ordering). `None` for any other node type, which the union-find
@@ -1082,26 +1066,29 @@ object Dedup {
     if (hasNull) labels ++ Iterator((null, null)) else labels
   }
 
-  /** The label-propagation loop, planned under the cached-partitioning
-    * conf [[connectedComponentsWithRounds]] scopes around it.
+  /** [[connectedComponents]] plus the number of label-propagation rounds it
+    * took to converge — the observable the log-rounds complexity claim is
+    * pinned on (rounds ≈ log₂ diameter; see the chain/giant-component
+    * stress in [[graft.tools.SkewBench]] and OperatorsSpec).
     *
     * The edge list is a MATERIALIZED columnar cache hash-partitioned +
-    * sorted on `dst` (the step-(a) join key): with
+    * sorted on `dst` (the step-(a) join key): under Spark's default
     * `canChangeCachedPlanOutputPartitioning=false` every round's
     * neighbor-min join then needs neither exchange nor sort on the 2|E|-row
     * side — a lazy localCheckpoint surfaces UnknownPartitioning and
     * re-exchanged the full edge set each round (the exact pathology the
-    * PageRank sf10 trace exposed, [[graft.operators.Graphs.pageRank]]).
-    * The operator is already eager (it checkpoints every round), so the
-    * cache is released before returning — persist keeps lineage, making
-    * that safe.
+    * PageRank sf10 trace exposed, [[graft.operators.Graphs.pageRank]]). A
+    * session that sets the key "true" gets the same labels, but the cached
+    * edge list may then be re-exchanged every round. The operator is
+    * already eager (it checkpoints every round), so the cache is released
+    * before returning — persist keeps lineage, making that safe.
     */
-  private def connectedComponentsLoop(
+  private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxRounds: Int,
-      smallGraphEdges: Long): (DataFrame, Int) = {
+      maxRounds: Int = 25,
+      smallGraphEdges: Long = 65536L): (DataFrame, Int) = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types.{StructField, StructType}
     // undirected, deduped edge list — reused every round

@@ -1,10 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.SessionConf
 
 /** Distributed undirected-graph analytics beyond the connected components
   * in [[Dedup.connectedComponents]] — the structural profile of a pair
@@ -44,17 +42,21 @@ object Graphs {
   private[operators] def fill(df: DataFrame): Long = df.queryExecution.toRdd.count()
 
   /** Eager `localCheckpoint` of `df`, plus the number of its rows where
-    * `cond` holds. The count comes from an `Observation` on the job that
+    * `cond` holds. The count is a named observed metric on the job that
     * fills the checkpoint, so an iterative loop reads its round counter
     * (removed set, frontier size, changed labels) without a second Spark
-    * job over the materialized round.
+    * job over the materialized round. It is read back from the observed
+    * frame's own execution: an `Observation` would register Spark's
+    * `ObservationManager` on the session, whose listener then logs an
+    * error for every later query in that session that fails analysis.
     */
   private[operators] def checkpointCounting(
       df: DataFrame,
       cond: Column = lit(true)): (DataFrame, Long) = {
-    val obs = Observation()
-    val cp = df.observe(obs, count(when(cond, lit(1))).as("n")).localCheckpoint()
-    (cp, obs.get("n").asInstanceOf[Long])
+    val name = s"graft_round_count_${java.util.UUID.randomUUID()}"
+    val observed = df.observe(name, count(when(cond, lit(1))).as("n"))
+    val cp = observed.localCheckpoint()
+    (cp, observed.queryExecution.observedMetrics(name).getLong(0))
   }
 
   /** k-core decomposition by simultaneous peeling: repeatedly delete every
@@ -96,7 +98,7 @@ object Graphs {
     * generations freed eagerly. An adversarial graph that peels more than
     * the broadcast bound in one round falls back to the planner's join
     * choice, never worse than re-aggregating. The driver reads each
-    * round's removed-set size from an `Observation` on the eager
+    * round's removed-set size from an observed metric on the eager
     * checkpoint that materializes the set (no separate count job), never
     * node data.
     * Round COUNT is bounded by the peeling depth of the degree
@@ -114,36 +116,19 @@ object Graphs {
       bCol: String,
       k: Int,
       maxRounds: Int = 50): DataFrame =
-    kCoreWithRounds(pairs, aCol, bCol, k, maxRounds)._1
+    kCoreManaged(pairs, aCol, bCol, k, maxRounds)._1
 
-  /** [[kCore]] plus the number of peel rounds actually run — the stress
-    * benches assert round counts against the fixture's known peeling
-    * depth (a returned count of `maxRounds` flags the early-stop
-    * superset case).
+  /** [[kCore]] plus the number of peel rounds actually run and a
+    * `release()` hook. The stress benches assert round counts against the
+    * fixture's known peeling depth (a returned count of `maxRounds` flags
+    * the early-stop superset case).
     *
-    * Storage note: the returned frame is lazy over session-scoped cached
-    * state (the base persist + the final removed-set checkpoint), so
-    * repeated invocations in a long-lived session accumulate block-manager
-    * storage until the result frames are dropped — use [[kCoreManaged]]
-    * and invoke its release hook after consuming the result when that
-    * matters.
-    */
-  def kCoreWithRounds(
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      k: Int,
-      maxRounds: Int = 50): (DataFrame, Int) = {
-    val (df, rounds, _) = kCoreManaged(pairs, aCol, bCol, k, maxRounds)
-    (df, rounds)
-  }
-
-  /** [[kCoreWithRounds]] plus a `release()` hook that frees the cached
-    * state the result frame reads through (the base persist and the final
-    * degree-frame checkpoint). Call it only AFTER fully consuming the
-    * result — the released checkpoint is gone and a consumed result is
-    * never re-read, so this is the intended lifecycle. [[kCoreReleased]]
-    * packages that lifecycle for catalog/bench consumers.
+    * The returned frame is lazy over session-scoped cached state (the base
+    * persist and the final degree-frame checkpoint); `release()` frees it.
+    * Call it only AFTER fully consuming the result — the released
+    * checkpoint is gone and a consumed result is never re-read, so this is
+    * the intended lifecycle. [[kCoreReleased]] packages that lifecycle for
+    * catalog/bench consumers.
     *
     * One plan shape at every size: the columnar base with incremental
     * degrees. The r11 predecessor (full per-round degree re-aggregation
@@ -158,11 +143,9 @@ object Graphs {
       aCol: String,
       bCol: String,
       k: Int,
-      maxRounds: Int = 50,
-      baseShrinkFraction: Double = 0.25): (DataFrame, Int, () => Unit) = {
+      maxRounds: Int = 50): (DataFrame, Int, () => Unit) = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1 && maxRounds <= 1000, s"maxRounds out of range: $maxRounds")
-    require(baseShrinkFraction <= 1.0, s"baseShrinkFraction > 1: $baseShrinkFraction")
     // columnar cache, materialized before any round plans against it (see
     // buildPrGraph for why persist, not localCheckpoint): the degree
     // checkpoint below is its only reader, so that job fills it
@@ -186,20 +169,20 @@ object Graphs {
     // changes results), so it must only fire when it is nearly free —
     // see the A/B numbers at the rebuild site below.
     val RebuildSurvivorsMax = 1000000L
+    val BaseShrinkFraction = 0.25
     // The decrement shuffle is O(|E|) TOTAL across all rounds, but each
     // round's two decrement probes still SCAN the cached base — on a
     // deep-peeling graph (hundreds of rounds) that residual rounds×O(|E|)
     // narrow work is the remaining superlinear term. So the live base is
     // periodically REBUILT to the surviving edges: once the nodes removed
-    // since the last rebuild exceed `baseShrinkFraction` of the node count
+    // since the last rebuild exceed `BaseShrinkFraction` of the node count
     // at that rebuild, survivors-only edges are re-persisted (two semi
     // joins against the current degree frame — broadcast under the same
     // bound as the low set, so the rebuild is itself two narrow scans) and
     // the superseded cache is dropped. Per-round probe scans then track
     // the surviving edge set instead of the original |E|; total rebuild
-    // work is a geometric series bounded by O(|E|/fraction). Disabled when
-    // `baseShrinkFraction <= 0` (the A/B lever — never changes results,
-    // only which cache the probes scan).
+    // work is a geometric series bounded by O(|E|/fraction). A rebuild
+    // never changes results, only which cache the probes scan.
     var liveBase = base
     var nodesAtShrink = nodes0
     var removedSinceShrink = 0L
@@ -231,8 +214,8 @@ object Graphs {
         // per-round probe scan grows with |E| while the rebuild broadcast
         // stays bounded by this constant.
         val survivors = nodesAtShrink - removedSinceShrink
-        if (baseShrinkFraction > 0 && survivors <= RebuildSurvivorsMax &&
-            removedSinceShrink >= baseShrinkFraction * nodesAtShrink) {
+        if (survivors <= RebuildSurvivorsMax &&
+            removedSinceShrink >= BaseShrinkFraction * nodesAtShrink) {
           def survB(as: String): DataFrame = {
             val s = degs.select(col("n").as(as))
             if (survivors <= broadcastLowMax) broadcast(s) else s
@@ -273,7 +256,6 @@ object Graphs {
         degs = next
         round += 1
         removedSinceShrink += lowCount
-        iterGc() // opt-in: drop the round's dereferenced shuffles/blocks
       }
     }
     val result = degs.select(col("n").as("node"), col("deg").as("core_deg"))
@@ -303,24 +285,6 @@ object Graphs {
     release()
     out
   }
-
-  /** Opt-in scratch-bound lever for deep iterative loops on one box:
-    * `SPARK_GRAFT_ITER_GC=1` runs a driver `System.gc()` once per loop
-    * round, right after the round's superseded frames are dereferenced, so
-    * `ContextCleaner` promptly deletes the shuffle files and checkpoint
-    * blocks the round no longer reaches — scratch then holds ~2 rounds'
-    * shuffle output instead of all of them (at the sf100 PageRank shape
-    * that is the difference between fitting the box's scratch and
-    * `SPILL_OUT_OF_MEMORY`). Default OFF: a forced periodic GC measured
-    * 1.5× on non-iterative children (BENCH_NOTES_r12 §3), and on a
-    * cluster per-round shuffle cleanup is the shuffle service's job; this
-    * exists for single-box runs whose scratch is smaller than the loop's
-    * cumulative shuffle footprint.
-    */
-  private def iterGcEnabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_ITER_GC", "0") == "1"
-
-  private def iterGc(): Unit = if (iterGcEnabled) System.gc()
 
   /** Unpersist the block-manager storage behind an EAGER `localCheckpoint`
     * frame (a `LogicalRDD` root). No-op for any other plan shape.
@@ -352,7 +316,7 @@ object Graphs {
     * new level is `localCheckpoint`ed once, which truncates the lineage;
     * the distance set is the union of those level checkpoints, never
     * re-checkpointed as it grows. The driver reads each level's size from
-    * an `Observation` on the checkpoint that materializes it (no separate
+    * an observed metric on the checkpoint that materializes it (no separate
     * emptiness job), never node data. Output: `(node, hops)`.
     */
   def bfsHops(
@@ -363,47 +327,45 @@ object Graphs {
       seedCol: String,
       maxHops: Int = 3): DataFrame = {
     require(maxHops >= 1 && maxHops <= 50, s"maxHops out of range: $maxHops")
-    val spark = pairs.sparkSession
     // The PageRank adjacency discipline (r15, guide §2.4): the adjacency is
-    // cached HASH-PARTITIONED by the probe key and sorted, and the conf
-    // below keeps that layout visible to every hop's join — without it the
-    // hop joins planned sort-merge against the stats-blind checkpointed
-    // frontier and RE-EXCHANGED all 2|E| adjacency rows EVERY HOP (traced
-    // r15 at sf0.1: hops 2 and 3 each re-shuffled the full 2.39M-row
-    // adjacency, ~10 of the query's 29 executor-CPU seconds; at the sf100
-    // rung that is 239M rows per hop). With the layout visible only the
-    // dwindling frontier moves per hop, at every scale.
-    SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
-      val adj = bidirectional(pairs, aCol, bCol)
-        .repartition(col("src"))
-        .sortWithinPartitions("src")
-        .persist()
-      fill(adj) // materialize so hops plan against the cached layout
-      var dist = seeds
-        .filter(col(seedCol).isNotNull)
-        .select(col(seedCol).as("node")).distinct()
-        .withColumn("hops", lit(0L))
-        .localCheckpoint()
-      var frontier = dist
-      var hop = 0L
-      var exhausted = false
-      while (hop < maxHops && !exhausted) {
-        val (next, size) = checkpointCounting(frontier.select(col("node").as("src"))
-          .join(adj, Seq("src"))
-          .select(col("dst").as("node")).distinct()
-          .join(dist.select("node"), Seq("node"), "left_anti")
-          .withColumn("hops", lit(hop + 1L)))
-        if (size == 0L) { exhausted = true; releaseCheckpoint(next) }
-        else {
-          dist = dist.union(next) // the levels stay separate checkpoints
-          frontier = next
-          hop += 1
-          iterGc() // opt-in: drop the superseded hop's shuffles/blocks
-        }
+    // cached HASH-PARTITIONED by the probe key and sorted, and Spark's
+    // default canChangeCachedPlanOutputPartitioning=false keeps that layout
+    // visible to every hop's join — without it the hop joins planned
+    // sort-merge against the stats-blind checkpointed frontier and
+    // RE-EXCHANGED all 2|E| adjacency rows EVERY HOP (traced r15 at sf0.1:
+    // hops 2 and 3 each re-shuffled the full 2.39M-row adjacency, ~10 of the
+    // query's 29 executor-CPU seconds; at the sf100 rung that is 239M rows
+    // per hop). With the layout visible only the dwindling frontier moves
+    // per hop, at every scale. A session that sets the key "true" gets the
+    // same distances, but the adjacency may then be re-exchanged every hop.
+    val adj = bidirectional(pairs, aCol, bCol)
+      .repartition(col("src"))
+      .sortWithinPartitions("src")
+      .persist()
+    fill(adj) // materialize so hops plan against the cached layout
+    var dist = seeds
+      .filter(col(seedCol).isNotNull)
+      .select(col(seedCol).as("node")).distinct()
+      .withColumn("hops", lit(0L))
+      .localCheckpoint()
+    var frontier = dist
+    var hop = 0L
+    var exhausted = false
+    while (hop < maxHops && !exhausted) {
+      val (next, size) = checkpointCounting(frontier.select(col("node").as("src"))
+        .join(adj, Seq("src"))
+        .select(col("dst").as("node")).distinct()
+        .join(dist.select("node"), Seq("node"), "left_anti")
+        .withColumn("hops", lit(hop + 1L)))
+      if (size == 0L) { exhausted = true; releaseCheckpoint(next) }
+      else {
+        dist = dist.union(next) // the levels stay separate checkpoints
+        frontier = next
+        hop += 1
       }
-      adj.unpersist(false) // every level is checkpointed; nothing re-reads the cache
-      dist
     }
+    adj.unpersist(false) // every level is checkpointed; nothing re-reads the cache
+    dist
   }
 
   // (n, deg) over the canonical undirected edge relation
@@ -559,8 +521,8 @@ object Graphs {
 
   /** Build + MATERIALIZE the adjacency/node caches (see [[pageRank]]'s
     * scaladoc for why eager, why persist-not-checkpoint, and why the
-    * cached-partitioning conf must be false while this and all iteration
-    * planning run).
+    * cached-partitioning conf must read false, its default, while this and
+    * all iteration planning run).
     */
   private[graft] def buildPrGraph(
       pairs: DataFrame,
@@ -660,33 +622,26 @@ object Graphs {
     require(tolPpm >= 1 && tolPpm <= 1000000, s"tolPpm must be ppm, got $tolPpm")
     require(maxIters >= 1 && maxIters <= 50, s"maxIters must be in [1, 50], got $maxIters")
     require(dampPpm >= 0 && dampPpm <= 1000000, s"dampPpm must be ppm, got $dampPpm")
-    val spark = pairs.sparkSession
-    SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
-      val g = buildPrGraph(pairs, aCol, bCol, scale)
-      val tol = math.max(1L, g.b0 * tolPpm / 1000000L)
-      var ranks = prInit(g).localCheckpoint(false)
-      var it = 0
-      var delta = Long.MaxValue
-      while (it < maxIters && delta > tol) {
-        val next = prStep(ranks, g, dampPpm).localCheckpoint(false)
-        // the delta probe is the action that materializes `next`; its two
-        // inputs are |V|-row checkpointed frames, its output one scalar
-        val row = next.select(col("node"), col("rank_scaled").as("__r1"))
-          .join(ranks.select(col("node"), col("rank_scaled").as("__r0")), Seq("node"))
-          .agg(max(abs(col("__r1") - col("__r0"))))
-          .collect()(0)
-        delta = if (row.isNullAt(0)) 0L else row.getLong(0)
-        releaseCheckpoint(ranks) // superseded generation; `next` is materialized
-        ranks = next
-        it += 1
-        // opt-in, and only AFTER the reassignment: the superseded frame's
-        // plan (which pins its round's ShuffleDependencies) must be
-        // unreachable before the GC can hand it to ContextCleaner
-        iterGc()
-      }
-      (ranks.select(col("node"), col("rank_scaled"))
-        .withColumn("n_iters", lit(it.toLong)), it)
+    val g = buildPrGraph(pairs, aCol, bCol, scale)
+    val tol = math.max(1L, g.b0 * tolPpm / 1000000L)
+    var ranks = prInit(g).localCheckpoint(false)
+    var it = 0
+    var delta = Long.MaxValue
+    while (it < maxIters && delta > tol) {
+      val next = prStep(ranks, g, dampPpm).localCheckpoint(false)
+      // the delta probe is the action that materializes `next`; its two
+      // inputs are |V|-row checkpointed frames, its output one scalar
+      val row = next.select(col("node"), col("rank_scaled").as("__r1"))
+        .join(ranks.select(col("node"), col("rank_scaled").as("__r0")), Seq("node"))
+        .agg(max(abs(col("__r1") - col("__r0"))))
+        .collect()(0)
+      delta = if (row.isNullAt(0)) 0L else row.getLong(0)
+      releaseCheckpoint(ranks) // superseded generation; `next` is materialized
+      ranks = next
+      it += 1
     }
+    (ranks.select(col("node"), col("rank_scaled"))
+      .withColumn("n_iters", lit(it.toLong)), it)
   }
 
   /** PageRank over the undirected pair graph in EXACT integer arithmetic —
@@ -711,12 +666,12 @@ object Graphs {
     * in EVERY iteration because of it; (2) compressed column batches hold
     * three-long rows at ~⅓ the deserialized row-cache footprint, which at
     * sf10 was 12 GB of heap pressing the GC into multi-second stalls.
-    * Partitioning preservation requires
-    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false`
-    * (Spark 4.1 defaults it false; a caller that sets it true lets AQE
-    * re-plan cached layouts), so it is pinned false for the duration of
-    * the call and the caller's value restored after — iteration plans are
-    * created here, so the scope is exact. Only the |V|-row rank frame (which
+    * Partitioning preservation relies on
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false`,
+    * Spark 4.1's default (pinned by PlanSpec); the operator never writes
+    * the key. A session that sets it "true" gets the same ranks, but AQE
+    * may then re-plan the cached layouts and re-exchange the adjacency
+    * every iteration. Only the |V|-row rank frame (which
     * carries its node's degree, so no per-iteration degree join exists)
     * shuffles per iteration; the contribution aggregation partial-combines
     * map-side before its |V|-bounded shuffle, and the rank rebuild joins
@@ -741,25 +696,11 @@ object Graphs {
       scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     require(dampPpm >= 0 && dampPpm <= 1000000, s"dampPpm must be ppm, got $dampPpm")
-    val spark = pairs.sparkSession
-    SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
-      val g = buildPrGraph(pairs, aCol, bCol, scale)
-      var ranks = prInit(g).localCheckpoint(false)
-      for (_ <- 1 to iters) {
-        val next = prStep(ranks, g, dampPpm).localCheckpoint(false)
-        // Under the iteration-GC lever each round materializes eagerly so
-        // the superseded rank frame (and the shuffle files only it
-        // reaches) can be dropped before the next round runs; the lazy
-        // default leaves materialization to the caller's one action.
-        if (iterGcEnabled) {
-          next.queryExecution.toRdd.count()
-          releaseCheckpoint(ranks)
-        }
-        ranks = next
-        // after the reassignment — see pageRankConverged's loop comment
-        iterGc()
-      }
-      ranks.select(col("node"), col("rank_scaled"))
+    val g = buildPrGraph(pairs, aCol, bCol, scale)
+    var ranks = prInit(g).localCheckpoint(false)
+    for (_ <- 1 to iters) {
+      ranks = prStep(ranks, g, dampPpm).localCheckpoint(false)
     }
+    ranks.select(col("node"), col("rank_scaled"))
   }
 }

@@ -1,9 +1,10 @@
 package graft.tools
 
-/** Minimal JSON string quoting for the bench tools' hand-built one-line
-  * artifacts. The tools interpolate file-system paths and query names into
-  * JSON; a quote or backslash in an sfDir would otherwise corrupt the
-  * committed artifact so the guard/jq can no longer parse it.
+/** Minimal JSON string quoting for the bench tools' and `graft.Verify`'s
+  * hand-built one-line artifacts. They interpolate file-system paths, query
+  * names and oracle SQL into JSON; a quote, backslash or tab there would
+  * otherwise corrupt the artifact so the guard, jq or `json.load` can no
+  * longer parse it.
   */
 object Jsons {
   /** `s` as a quoted JSON string literal (escapes ", \, and control chars). */

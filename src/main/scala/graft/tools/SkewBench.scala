@@ -491,8 +491,9 @@ object SkewBench {
         (col("c") + lit(1000L) + col("step") * 1000L).as("b"))
     val onion = cliqueCore.union(tendrils)
     val tKc0 = System.nanoTime()
-    val (onionCore, onionRounds) = Graphs.kCoreWithRounds(onion, "a", "b", k = 2)
+    val (onionCore, onionRounds, releaseOnion) = Graphs.kCoreManaged(onion, "a", "b", k = 2)
     val onionStats = onionCore.agg(count(lit(1)), min("core_deg")).head()
+    releaseOnion()
     results += "kcore_onion_clique300_t6" -> (System.nanoTime() - tKc0) / 1e9
     require(onionStats.getLong(0) == 300L && onionStats.getLong(1) == 299L,
       s"onion 2-core must be exactly the 300-clique, got $onionStats")
@@ -503,9 +504,10 @@ object SkewBench {
     val kchain = spark.range(kchainN - 1)
       .select(col("id").as("a"), (col("id") + 1).as("b"))
     val tKc1 = System.nanoTime()
-    val (kchainCore, kchainRounds) =
-      Graphs.kCoreWithRounds(kchain, "a", "b", k = 2, maxRounds = 8)
+    val (kchainCore, kchainRounds, releaseKchain) =
+      Graphs.kCoreManaged(kchain, "a", "b", k = 2, maxRounds = 8)
     val kchainLeft = kchainCore.count()
+    releaseKchain()
     results += "kcore_chain_200k_capped" -> (System.nanoTime() - tKc1) / 1e9
     require(kchainRounds == 8, s"chain peel must hit the round cap, took $kchainRounds")
     require(kchainLeft == kchainN - 2L * 8L,

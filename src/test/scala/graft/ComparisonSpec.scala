@@ -918,4 +918,43 @@ class ComparisonSpec extends SparkSpec {
       s"model degenerate: matched=$expMatched s=$expColS num=$expColNum")
     res.unpersist()
   }
+
+  test("concurrent compares on one session equal their serial runs and leave the conf untouched") {
+    // The engine writes no session conf while it compares, so concurrent
+    // calls on one shared session cannot disturb each other or the caller:
+    // four compares at once, each with its own tolerance, on a session
+    // whose caller set the cached-layout key "true", must each report
+    // exactly what the same call reports alone, and the caller's conf map
+    // must read back identical.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    // a drifted pair: key 3 duplicated on both sides, 1 missing at target,
+    // 8 missing at source, a string mismatch on 5, numeric drifts of 0.05
+    // to 0.35 that each tolerance rescues differently
+    val src = s.createDataFrame(Seq(
+      (1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0), (3L, "c", 3.0),
+      (4L, "d", 4.0), (5L, "e", 5.0), (6L, "f", 6.0))).toDF("id", "s", "num")
+    val tgt = s.createDataFrame(Seq(
+      (2L, "b", 2.15), (3L, "c", 3.0), (3L, "c", 3.0), (4L, "d", 4.35),
+      (5L, "x", 5.0), (6L, "f", 6.05), (8L, "h", 8.0))).toDF("id", "s", "num")
+    def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    def reports(tol: Double): Seq[Seq[String]] = {
+      val r = Comparison.compareDataFrames(s, src, tgt,
+        DatasetParams("drift", Seq("id"), TestParams(differenceTolerance = tol)))
+      val out = Seq(sorted(r.overallTestReport), sorted(r.rowLvlTestReport),
+        sorted(r.colLvlTestReport)) ++
+        r.unmatchedRecords.toSeq.sortBy(_._1).map { case (c, df) => c +: sorted(df) }
+      r.unpersist()
+      out
+    }
+    val tolerances = Seq(0.0, 0.1, 0.2, 0.4)
+    val before = s.conf.getAll
+    val serial = tolerances.map(reports)
+    assert(serial.distinct.size == tolerances.size, "each tolerance must report differently")
+    val concurrent = graft.core.Par.runAll(tolerances.map(tol => () => reports(tol)))
+    assert(s.conf.getAll == before, "a compare changed the caller's session conf")
+    tolerances.indices.foreach { i =>
+      assert(concurrent(i) == serial(i), s"tolerance ${tolerances(i)}: concurrent != serial")
+    }
+  }
 }

@@ -1861,18 +1861,18 @@ class OperatorsSpec extends SparkSpec {
 
   test("graph loops scope the cached-layout conf: caller value restored, same results") {
     import graft.operators.{Dedup, Graphs}
-    // r15: bfsHops, both PageRanks and connectedComponents pin
-    // canChangeCachedPlanOutputPartitioning=false around their loops (the
-    // cached adjacency's hash layout must stay visible so rounds never
-    // re-exchange 2|E| rows). The caller's value — unset or set — must come
-    // back byte-identical, also when the loop fails inside the scope, and a
-    // pre-set caller value must not change the result.
-    val key = SessionConf.CachedLayout
+    // bfsHops, both PageRanks and connectedComponents rely on Spark's
+    // default canChangeCachedPlanOutputPartitioning=false (the cached
+    // adjacency's hash layout stays visible so rounds never re-exchange
+    // 2|E| rows) and never write the key. The caller's value — unset or
+    // set — must read back byte-identical, also when the loop fails, and a
+    // caller's "true" must not change the result.
+    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     val s = spark.newSession()
     val edges = s.createDataFrame(Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L))).toDF("a", "b")
     val seeds = s.createDataFrame(Seq(Tuple1(1L))).toDF("s")
     // each loop run on the edge column `b` (a missing column fails analysis
-    // inside the scope)
+    // inside the loop)
     val loops: Seq[(String, String => Map[Long, Long])] = Seq(
       "bfsHops" -> (b => Graphs.bfsHops(edges, "a", b, seeds, "s", maxHops = 2)
         .as[(Long, Long)].collect().toMap),
@@ -1892,9 +1892,9 @@ class OperatorsSpec extends SparkSpec {
       val byCaller = for (caller <- Seq(None, Some("true"))) yield {
         setCaller(caller)
         val result = run("b")
-        assert(callerValue == caller, s"$name did not restore the caller's $caller")
+        assert(callerValue == caller, s"$name changed the caller's $caller")
         intercept[org.apache.spark.sql.AnalysisException](run("no_such_column"))
-        assert(callerValue == caller, s"$name, failing, did not restore $caller")
+        assert(callerValue == caller, s"$name, failing, changed the caller's $caller")
         result
       }
       assert(byCaller.distinct.size == 1, s"$name: the caller's conf changed the result")

@@ -486,67 +486,72 @@ class PlanSpec extends SparkSpec {
     // canChangeCachedPlanOutputPartitioning=false every iteration join
     // must consume it in place — the sf10 pathology this pins re-exchanged
     // all 239M adjacency rows per iteration through a lazy checkpoint's
-    // UnknownPartitioning
+    // UnknownPartitioning. The graph loops never set the key, so they rely
+    // on Spark's default: a fresh session must read "false", and the plan
+    // below is checked at the session default (a Spark upgrade that flips
+    // it fails here instead of re-exchanging 2|E| rows every round).
+    val cachedLayoutKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    assert(spark.newSession().conf.get(cachedLayoutKey) == "false",
+      "Spark's default for the cached-layout conf changed")
+    assert(spark.conf.get(cachedLayoutKey) == "false")
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-    SessionConf.scoped(spark, SessionConf.CachedLayout -> "false") {
-      val pairs = spark.range(4000).selectExpr("id % 500 AS pa", "(id * 7 + 1) % 500 AS pb")
-        .filter("pa != pb")
-      val g = graft.operators.Graphs.buildPrGraph(pairs, "pa", "pb", 1000000000000L)
-      // ranks are checkpointed between iterations in production — without
-      // it the rank-side exchange's lineage reaches back into the nodes
-      // cache and would read as a (false) cache re-exchange here
-      val step = graft.operators.Graphs.prStep(
-        graft.operators.Graphs.prInit(g).localCheckpoint(false), g, dampPpm = 850000L)
-      step.queryExecution.toRdd.count() // final AQE plan
-      def collectPlans(p: SparkPlan): Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => collectPlans(a.executedPlan)
-        case q: QueryStageExec => q +: collectPlans(q.plan)
-        case r: ReusedExchangeExec => r +: collectPlans(r.child)
-        case other => other +: other.children.flatMap(collectPlans)
-      }
-      val all = collectPlans(step.queryExecution.executedPlan)
-      val cachedScans = all.collect { case s: InMemoryTableScanExec => s }
-      assert(cachedScans.nonEmpty, "iteration must read the adjacency/node caches")
-      // a cached frame is "re-exchanged" when an exchange's NARROW child
-      // chain (projections/filters/sorts only — nothing that changes keys
-      // or cardinality) ends at a cached scan; the contribution
-      // aggregation's exchange above the join is legitimate (it ships
-      // |V|-bounded partial aggregates), so subtree containment alone
-      // would over-flag
-      import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, SortExec, WholeStageCodegenExec}
-      def narrowChild(p: SparkPlan): Option[SparkPlan] = p match {
-        case w: WholeStageCodegenExec => Some(w.child)
-        case i: InputAdapter => Some(i.child)
-        case q: QueryStageExec => Some(q.plan)
-        case r: ReusedExchangeExec => Some(r.child)
-        case pr: ProjectExec => Some(pr.child)
-        case f: FilterExec => Some(f.child)
-        case s: SortExec => Some(s.child)
-        case c: ColumnarToRowExec => Some(c.child)
-        case _ => None
-      }
-      @scala.annotation.tailrec
-      def reachesCache(p: SparkPlan): Boolean = p match {
-        case _: InMemoryTableScanExec => true
-        case other => narrowChild(other) match {
-          case Some(n) => reachesCache(n)
-          case None => false
-        }
-      }
-      all.collect { case e: ShuffleExchangeExec => e }.foreach { e =>
-        assert(!reachesCache(e.child),
-          s"cached adjacency/node frame re-exchanged in the iteration plan:\n$e")
-      }
-      // the base rank is a literal: no one-row aggregate is cross-joined
-      // (a nested-loop join) into the iteration
-      import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-      assert(all.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
-        s"iteration plan cross-joins a base-rank frame:\n${step.queryExecution.executedPlan}")
-      spark.catalog.clearCache()
+    val pairs = spark.range(4000).selectExpr("id % 500 AS pa", "(id * 7 + 1) % 500 AS pb")
+      .filter("pa != pb")
+    val g = graft.operators.Graphs.buildPrGraph(pairs, "pa", "pb", 1000000000000L)
+    // ranks are checkpointed between iterations in production — without
+    // it the rank-side exchange's lineage reaches back into the nodes
+    // cache and would read as a (false) cache re-exchange here
+    val step = graft.operators.Graphs.prStep(
+      graft.operators.Graphs.prInit(g).localCheckpoint(false), g, dampPpm = 850000L)
+    step.queryExecution.toRdd.count() // final AQE plan
+    def collectPlans(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => collectPlans(a.executedPlan)
+      case q: QueryStageExec => q +: collectPlans(q.plan)
+      case r: ReusedExchangeExec => r +: collectPlans(r.child)
+      case other => other +: other.children.flatMap(collectPlans)
     }
+    val all = collectPlans(step.queryExecution.executedPlan)
+    val cachedScans = all.collect { case s: InMemoryTableScanExec => s }
+    assert(cachedScans.nonEmpty, "iteration must read the adjacency/node caches")
+    // a cached frame is "re-exchanged" when an exchange's NARROW child
+    // chain (projections/filters/sorts only — nothing that changes keys
+    // or cardinality) ends at a cached scan; the contribution
+    // aggregation's exchange above the join is legitimate (it ships
+    // |V|-bounded partial aggregates), so subtree containment alone
+    // would over-flag
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, SortExec, WholeStageCodegenExec}
+    def narrowChild(p: SparkPlan): Option[SparkPlan] = p match {
+      case w: WholeStageCodegenExec => Some(w.child)
+      case i: InputAdapter => Some(i.child)
+      case q: QueryStageExec => Some(q.plan)
+      case r: ReusedExchangeExec => Some(r.child)
+      case pr: ProjectExec => Some(pr.child)
+      case f: FilterExec => Some(f.child)
+      case s: SortExec => Some(s.child)
+      case c: ColumnarToRowExec => Some(c.child)
+      case _ => None
+    }
+    @scala.annotation.tailrec
+    def reachesCache(p: SparkPlan): Boolean = p match {
+      case _: InMemoryTableScanExec => true
+      case other => narrowChild(other) match {
+        case Some(n) => reachesCache(n)
+        case None => false
+      }
+    }
+    all.collect { case e: ShuffleExchangeExec => e }.foreach { e =>
+      assert(!reachesCache(e.child),
+        s"cached adjacency/node frame re-exchanged in the iteration plan:\n$e")
+    }
+    // the base rank is a literal: no one-row aggregate is cross-joined
+    // (a nested-loop join) into the iteration
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    assert(all.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
+      s"iteration plan cross-joins a base-rank frame:\n${step.queryExecution.executedPlan}")
+    spark.catalog.clearCache()
   }
 
   test("every catalog query has an oracle — additions cannot silently skip the gate") {
