@@ -57,10 +57,11 @@ object Bench {
   }
 
   /** Per-query JVM/engine vitals, measured over exactly the timed window:
-    * process-CPU seconds and GC ms as deltas, post-GC heap / Spark
-    * storage-memory occupancy and cumulative codegen-compilation count as
-    * absolutes, plus the 1-minute system load. `heap_mb` is the heap each
-    * pool held right after its most recent collection
+    * process-CPU seconds, GC ms and generated-code compiles (`cg_n`) as
+    * deltas, post-GC heap / Spark storage-memory occupancy as absolutes,
+    * plus the 1-minute system load. A query whose `cg_n` stays high on a
+    * warm JVM is recompiling classes the codegen cache evicted. `heap_mb`
+    * is the heap each pool held right after its most recent collection
     * (`MemoryPoolMXBean.getCollectionUsage`, which forces no GC): what the
     * last GC could not reclaim, without the garbage allocated since, so it
     * tracks live data instead of how long ago the last GC ran. The
@@ -96,16 +97,18 @@ object Bench {
       catch { case _: Throwable => -1L }
     private var cpu0 = osBean.getProcessCpuTime
     private var gc0 = gcMsNow
-    def reset(): Unit = { cpu0 = osBean.getProcessCpuTime; gc0 = gcMsNow }
+    private var cg0 = codegenCount
+    def reset(): Unit = { cpu0 = osBean.getProcessCpuTime; gc0 = gcMsNow; cg0 = codegenCount }
     def snapshot(): String = {
       val cpuSec = (osBean.getProcessCpuTime - cpu0) / 1e9
       val gcDelta = gcMsNow - gc0
+      val cgDelta = if (cg0 < 0) -1L else codegenCount - cg0
       val heapMb = postGcHeapBytes >> 20
       val storeMb =
         try spark.sparkContext.statusTracker.getExecutorInfos
           .map(e => e.usedOnHeapStorageMemory + e.usedOffHeapStorageMemory).sum >> 20
         catch { case _: Throwable => -1L }
-      f"""{"cpu":$cpuSec%.2f,"gc_ms":$gcDelta,"heap_mb":$heapMb,"store_mb":$storeMb,"cg_n":$codegenCount,"load":${osBean.getSystemLoadAverage}%.1f}"""
+      f"""{"cpu":$cpuSec%.2f,"gc_ms":$gcDelta,"heap_mb":$heapMb,"store_mb":$storeMb,"cg_n":$cgDelta,"load":${osBean.getSystemLoadAverage}%.1f}"""
     }
   }
 
@@ -167,14 +170,9 @@ object Bench {
     if (sys.env.getOrElse("SPARK_GRAFT_PRETOUCH", "1") != "0") preTouchHeap()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // The engine's session (AQE, UTC, codegen cache sized to the working
+    // set), with shuffle partitions at the core count.
+    val builder = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       // Survive long driver stalls: in local mode driver + executor share
       // one JVM, so a driver-side stall (GC, this host's slow page-fault
       // path) starves the executor heartbeat thread too — round-2's bench

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
@@ -298,10 +298,15 @@ object Dedup {
     *        cannot materialize a posting list's k²/2 pairs in one row — a
     *        huge cap costs wall-time (the pair count itself), never an
     *        executor OOM.
-    * @param dropObservation optional [[Observation]] reporting
+    * @param dropsMetric optional name of an observed metric
     *        `dropped_tokens` = #(block, token) posting lists the cap
     *        discarded, so operators can alert on corpora where the cap
-    *        bites (get after the returned frame is materialized).
+    *        bites. Read it with [[droppedTokens]] from the frame an action
+    *        ran (the returned frame, or one derived from it) after that
+    *        action. A named `observe` instead of an `Observation`: the
+    *        latter registers Spark's `ObservationManager` on the session,
+    *        whose listener then logs an error for every later query in
+    *        that session that fails analysis.
     */
   def jaccardPairs(
       df: DataFrame,
@@ -311,8 +316,8 @@ object Dedup {
       threshold: Double,
       tokenizer: Column => Column = TextAnalysis.shinglesOfWords(_),
       maxDf: Int = 1000,
-      dropObservation: Option[Observation] = None): DataFrame =
-    pairIntersections(df, idCol, textCol, blockCol, tokenizer, maxDf, dropObservation)
+      dropsMetric: Option[String] = None): DataFrame =
+    pairIntersections(df, idCol, textCol, blockCol, tokenizer, maxDf, dropsMetric)
       .withColumn(
         "jaccard",
         col("inter").cast("double") /
@@ -338,13 +343,22 @@ object Dedup {
       threshold: Double,
       tokenizer: Column => Column = TextAnalysis.shinglesOfWords(_),
       maxDf: Int = 1000,
-      dropObservation: Option[Observation] = None): DataFrame =
-    pairIntersections(df, idCol, textCol, blockCol, tokenizer, maxDf, dropObservation)
+      dropsMetric: Option[String] = None): DataFrame =
+    pairIntersections(df, idCol, textCol, blockCol, tokenizer, maxDf, dropsMetric)
       .withColumn(
         "containment",
         col("inter").cast("double") / least(col("na"), col("nb")).cast("double"))
       .filter(col("containment") >= threshold)
       .select("doc_a", "doc_b", "containment")
+
+  /** The `dropped_tokens` count observed under `name` by a
+    * [[jaccardPairs]] or [[containmentPairs]] call given
+    * `dropsMetric = Some(name)`, read from `ran`: the frame an action
+    * (`collect`, a write, `queryExecution.toRdd`) executed. `count()`
+    * runs a plan of its own and leaves `ran`'s metrics unfilled.
+    */
+  def droppedTokens(ran: DataFrame, name: String): Long =
+    ran.queryExecution.observedMetrics(name).getAs[Long]("dropped_tokens")
 
   /** Shared pairwise-intersection core of [[jaccardPairs]] /
     * [[containmentPairs]]: `(doc_a, doc_b, inter, na, nb)` for every
@@ -359,7 +373,7 @@ object Dedup {
       blockCol: String,
       tokenizer: Column => Column,
       maxDf: Int,
-      dropObservation: Option[Observation]): DataFrame = {
+      dropsMetric: Option[String]): DataFrame = {
     // Single tokenize pass: gather each token's (sorted, df-capped) posting
     // list and emit the pair combinations in-row — no self-join, so the
     // tokenize subtree is evaluated once and the only shuffles are the
@@ -379,9 +393,9 @@ object Dedup {
     val counted = toks
       .groupBy("blk", "tok")
       .agg(sort_array(collect_list(col("doc"))).as("ds"))
-    val observed = dropObservation match {
-      case Some(obs) => counted.observe(
-        obs, sum(when(size(col("ds")) > maxDf, 1L).otherwise(0L)).as("dropped_tokens"))
+    val observed = dropsMetric match {
+      case Some(name) => counted.observe(
+        name, sum(when(size(col("ds")) > maxDf, 1L).otherwise(0L)).as("dropped_tokens"))
       case None => counted
     }
     // sizes in the capped space: |doc| = #tokens of the doc with df <= maxDf

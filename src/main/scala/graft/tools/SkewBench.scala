@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SessionConf
@@ -261,29 +261,26 @@ object SkewBench {
     require(csW == csR, s"calibrate decomposition diverged from the window model: $csW vs $csR")
 
     // ---- jaccard df-cap on the boilerplate corpus ----
-    // Real DataFrame actions here (count/collect, not toRdd): Observation
-    // metrics are delivered via the query-execution listener, which RDD-level
-    // materialization bypasses — obs.get would block forever after a
-    // toRdd.count. The warm count() satisfies the observation; the timed
-    // run collects the (tiny) pair set, which doubles as the answer-equality
-    // check.
-    def pairRun(label: String, maxDf: Int, obs: Option[Observation]): Set[(Long, Long)] = {
+    // The warm count() runs the plan once untimed; the timed run collects
+    // the (tiny) pair set, which doubles as the answer-equality check, and
+    // its own execution carries the observed drop count.
+    def pairRun(
+        label: String, maxDf: Int, dropsMetric: Option[String]): (Set[(Long, Long)], DataFrame) = {
       val df = Dedup.jaccardPairs(documents, "doc_id", "text", "lang",
-          threshold = 0.8, maxDf = maxDf, dropObservation = obs)
+          threshold = 0.8, maxDf = maxDf, dropsMetric = dropsMetric)
         .select("doc_a", "doc_b")
-      df.count() // warm + observation delivery
+      df.count() // warm
       val t0 = System.nanoTime()
       val rows = df.collect()
       results += label -> (System.nanoTime() - t0) / 1e9
       System.err.println(f"[skewbench] $label%-24s ${results(label)}%7.2f s  (${rows.length} pairs)")
-      rows.map(r => (r.getLong(0), r.getLong(1))).toSet
+      (rows.map(r => (r.getLong(0), r.getLong(1))).toSet, df)
     }
-    val obs = Observation("skew_drops")
-    val capped = pairRun("jaccard_capped", 1000, Some(obs))
-    val droppedTokens = obs.get("dropped_tokens").asInstanceOf[Long]
+    val (capped, cappedRun) = pairRun("jaccard_capped", 1000, Some("skew_drops"))
+    val droppedTokens = Dedup.droppedTokens(cappedRun, "skew_drops")
     require(droppedTokens > 0,
       "fixture failed: the boilerplate posting lists must exceed maxDf=1000")
-    val uncapped = pairRun("jaccard_uncapped", 1000000, None)
+    val (uncapped, _) = pairRun("jaccard_uncapped", 1000000, None)
     // The cap is one-directional by construction: it can only REMOVE pairs
     // (those whose overlap is carried by hot tokens — here, short documents
     // whose similarity IS the shared boilerplate), never invent them. That

@@ -646,15 +646,14 @@ class OperatorsSpec extends SparkSpec {
       val grp = (i + 1) / 2 // docs 2k-1, 2k are near-dups of each other
       (i, s"$boiler document group $grp body text variant ${if (i % 2 == 0) "x" else "x"}", "en")
     }.toDF("doc_id", "text", "lang")
-    val obs = org.apache.spark.sql.Observation()
-    val pairs = Dedup.jaccardPairs(hot, "doc_id", "text", "lang", threshold = 0.9,
-      maxDf = 10, dropObservation = Some(obs))
-      .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
+    val ran = Dedup.jaccardPairs(hot, "doc_id", "text", "lang", threshold = 0.9,
+      maxDf = 10, dropsMetric = Some("jaccard_drops"))
+    val pairs = ran.collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     // the hot boilerplate shingles (df=40 > 10) are dropped from candidate
     // generation, yet the within-group duplicate pairs survive via their
     // rare group shingles
     assert((1L to 40L by 2).forall(i => pairs.contains((i, i + 1))))
-    val dropped = obs.get("dropped_tokens").asInstanceOf[Long]
+    val dropped = Dedup.droppedTokens(ran, "jaccard_drops")
     assert(dropped > 0, s"expected hot shingles to be dropped, observed $dropped")
   }
 
