@@ -164,6 +164,19 @@ object Bench {
     chosen
   }
 
+  /** Survive long driver stalls: in local mode driver + executor share
+    * one JVM, so a driver-side stall (GC, a slow page-fault path) starves
+    * the executor heartbeat thread too; a bench run once died mid-queries
+    * with ExecutorExitCode.HEARTBEAT_FAILURE (56) and every cached block
+    * gone. Space heartbeats out, tolerate many misses, and raise the
+    * network timeout they're judged against. Every long single-JVM main
+    * (Bench, ScaleProbe, SkewBench) sets these.
+    */
+  private[graft] val heartbeatTolerance: Map[String, String] = Map(
+    "spark.executor.heartbeatInterval" -> "60s",
+    "spark.network.timeout" -> "1200s",
+    "spark.executor.heartbeat.maxFailures" -> "1000")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scratch = pickScratch()
@@ -173,15 +186,7 @@ object Bench {
     // The engine's session (AQE, UTC, codegen cache sized to the working
     // set), with shuffle partitions at the core count.
     val builder = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      // Survive long driver stalls: in local mode driver + executor share
-      // one JVM, so a driver-side stall (GC, this host's slow page-fault
-      // path) starves the executor heartbeat thread too — round-2's bench
-      // died mid-queries with ExecutorExitCode.HEARTBEAT_FAILURE (56) and
-      // every cached block gone. Space heartbeats out, tolerate many
-      // misses, and raise the network timeout they're judged against.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "1200s")
-      .config("spark.executor.heartbeat.maxFailures", "1000")
+      .config(heartbeatTolerance)
     // The catalog's saveAsTable rows (q_s2_table_scan, q_sink_roundtrip's
     // bucketed copy) write through spark.sql.warehouse.dir, which defaults
     // to $PWD/spark-warehouse — the one ephemeral write the tmpdir move

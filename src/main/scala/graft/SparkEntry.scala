@@ -17,6 +17,6 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables; every catalog query carries one. */
   def oracleSql: Map[String, String] = Queries.oracleSql
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-sweep probe: time a NAMED SUBSET of the catalog at an arbitrary
   * scale directory — the tool behind multi-decade scaling ladders (sf0.1 →
   * sf1 → sf10) where running the FULL catalog would be dominated by the
@@ -157,7 +155,6 @@ object ScaleProbe {
     def die(msg: String): Nothing = {
       System.err.println(s"$msg\n$usage")
       sys.exit(2)
-      throw new IllegalStateException
     }
     // Validate the flag set strictly: a misspelled flag (--isolat) must
     // not silently fall through to driver-mode, and a flag-combination
@@ -207,14 +204,8 @@ object ScaleProbe {
     if (sys.env.getOrElse("SPARK_GRAFT_PRETOUCH", "1") != "0") graft.Bench.preTouchHeap()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "1200s")
-      .config("spark.executor.heartbeat.maxFailures", "1000")
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
+      .config(graft.Bench.heartbeatTolerance)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

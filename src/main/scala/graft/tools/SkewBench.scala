@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SessionConf
@@ -70,15 +70,8 @@ object SkewBench {
     if (sys.env.getOrElse("SPARK_GRAFT_PRETOUCH", "1") != "0") graft.Bench.preTouchHeap()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "1200s")
-      .config("spark.executor.heartbeat.maxFailures", "1000")
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
+      .config(graft.Bench.heartbeatTolerance)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

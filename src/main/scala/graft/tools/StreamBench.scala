@@ -61,24 +61,14 @@ object StreamBench {
         s""""state_bytes":${r.stateBytes}}""")
       .mkString("[", ",", "]")
 
-  private val RocksProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   private def buildSession(provider: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // state stores instantiate per shuffle partition per batch — size the
-      // sharding to the fixture exactly like the catalog's streaming rows
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // state stores instantiate per shuffle partition per batch — size the
+    // sharding to the fixture exactly like the catalog's streaming rows
+    val b = graft.GraftSession.builder(s"local[$cpus]", 8)
     val c = provider match {
-      case "rocksdb" => b
-        .config("spark.sql.streaming.stateStore.providerClass", RocksProvider)
-        .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          "true")
+      case "rocksdb" => b.config(graft.catalog.EventQueries.streamingStateConfs.toMap)
       case _ => b // "hdfs": Spark's default HDFSBackedStateStoreProvider
     }
     val spark = c.getOrCreate()
@@ -108,7 +98,7 @@ object StreamBench {
   }
 
   private def runScenario(
-      spark: SparkSession, work: String, name: String, df: DataFrame,
+      work: String, name: String, df: DataFrame,
       outputMode: String = "append"): Seq[BatchRow] = {
     val ckpt = s"$work/ckpt-${name.replace('/', '_')}"
     // append mode throughout (update only where the operator demands it):
@@ -161,7 +151,7 @@ object StreamBench {
         (StreamingOps.userRunningStats(spark, stream).toDF(), "update")
       case other => sys.error(s"unknown scenario: $other")
     }
-    val rows = runScenario(spark, work, s"$provider/$scenario/x$mult", df, mode)
+    val rows = runScenario(work, s"$provider/$scenario/x$mult", df, mode)
     // heap AFTER the run, post-GC: the HDFS provider retains every loaded
     // version map in executor memory (exactly what a long-running job
     // carries); RocksDB keeps state off-heap/on-disk. Peak catches the
@@ -227,7 +217,7 @@ object StreamBench {
       .schema(schema).option("maxFilesPerTrigger", 1).parquet(s"$work/src")
 
     def run(name: String, df: DataFrame): (String, Seq[BatchRow]) =
-      name -> runScenario(spark, work, name, df)
+      name -> runScenario(work, name, df)
 
     import graft.streaming.StreamingOps
     val scenarios = Seq(

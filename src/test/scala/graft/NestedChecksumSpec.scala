@@ -130,15 +130,15 @@ class NestedChecksumSpec extends SparkSpec {
   }
 
   test("generated code and the interpreted walk produce the same checksum bytes") {
-    def sums(dt: DataType, df: DataFrame): Seq[Seq[Byte]] =
+    def sums(df: DataFrame): Seq[Seq[Byte]] =
       df.select(kernel(col("l")), kernel(col("r"))).collect().toSeq
         .flatMap(r => Seq(r.getAs[Array[Byte]](0).toSeq, r.getAs[Array[Byte]](1).toSeq))
     types.zipWithIndex.foreach { case (dt, ti) =>
       val df = pairsFrame(dt, sample(Gen.listOfN(40, genPair(dt)), 3000L + ti))
-      val generated = sums(dt, df)
+      val generated = sums(df)
       val interpreted = SessionConf.scoped(spark,
           "spark.sql.codegen.wholeStage" -> "false",
-          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(sums(dt, df))
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(sums(df))
       assert(generated == interpreted, dt.simpleString)
     }
   }

@@ -15,6 +15,12 @@ class PlanSpec extends SparkSpec {
   private def plan(name: String): String =
     Queries.queries(name)(spark, sf).queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  /** Shuffle exchanges in a formatted plan: its `- Exchange` operator lines
+    * that are not broadcasts.
+    */
+  private def shuffleExchanges(p: String): Int =
+    p.linesIterator.count(l => l.contains("- Exchange") && !l.contains("BroadcastExchange"))
+
   test("filters and projections push down to the parquet scan") {
     val p = plan("q_s1_scan_filter")
     assert(p.contains("PushedFilters:"), "expected pushed filters in scan")
@@ -59,7 +65,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types.{BooleanType, LongType, StructType}
-    val (src, tgt) = Queries.compareScenario(spark, sf)
+    val (src, tgt) = catalog.CompareQueries.compareScenario(spark, sf)
     val res = graft.core.Comparison.compareDataFrames(spark, src, tgt,
       graft.config.DatasetParams("plan_audit", Seq("o_orderkey"),
         graft.config.TestParams(differenceTolerance = 0.01)))
@@ -422,7 +428,7 @@ class PlanSpec extends SparkSpec {
       s"bigram generation must run the codegen'd kernel, not an interpreted HOF:\n$p")
     assert(!p.contains("SortMergeJoin"),
       s"no shuffle join expected anywhere in the scoring pass:\n$p")
-    assert(p.linesIterator.count(l => l.contains("- Exchange") && !l.contains("BroadcastExchange")) == 1,
+    assert(shuffleExchanges(p) == 1,
       s"only the vocab aggregation may shuffle — scoring must stay in-row:\n$p")
   }
 
@@ -436,7 +442,7 @@ class PlanSpec extends SparkSpec {
     // collect_list fold (tiny by contract). The corpus side feeds the BNLJ
     // probe straight from the scan — Scan parquet → Project → join, no
     // exchange between them.
-    assert(p.linesIterator.count(l => l.contains("- Exchange") && !l.contains("BroadcastExchange")) == 1,
+    assert(shuffleExchanges(p) == 1,
       s"only the lexicon map-fold may shuffle — corpus scoring must stay in-row:\n$p")
     assert(p.contains("LocalTableScan") || p.contains("Scan parquet"),
       s"sanity: plan must show both sides:\n$p")
@@ -554,11 +560,15 @@ class PlanSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("every catalog query has an oracle — additions cannot silently skip the gate") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o).isEmpty, s"queries without an oracle: ${(q -- o).toSeq.sorted.mkString(", ")}")
-    assert((o -- q).isEmpty, s"orphan oracles: ${(o -- q).toSeq.sorted.mkString(", ")}")
+  test("the catalog index holds 159 distinct names; a name two families share throws") {
+    // every registration carries its oracle by type, so the index only has
+    // to keep names distinct: a plain toMap would drop one of two
+    // registrations that share a name
+    assert(SparkEntry.queries.size == 159 && SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+    val q = catalog.CatalogQuery((s, _) => s.range(1).toDF(), "SELECT 0 AS id")
+    val e = intercept[IllegalArgumentException](
+      Queries.index(Seq(Seq("q_a" -> q, "q_b" -> q), Seq("q_b" -> q))))
+    assert(e.getMessage.contains("q_b") && !e.getMessage.contains("q_a"), e.getMessage)
   }
 
   test("quantile gate: bounds broadcast back over the corpus — corpus side never shuffles") {
@@ -567,7 +577,7 @@ class PlanSpec extends SparkSpec {
       s"the per-group bounds must broadcast, not shuffle-join the corpus:\n$p")
     assert(!p.contains("SortMergeJoin"), s"no shuffle join expected:\n$p")
     // the only exchange feeds the grouped quantile aggregation (bounds side)
-    assert(p.linesIterator.count(l => l.contains("- Exchange") && !l.contains("BroadcastExchange")) == 1,
+    assert(shuffleExchanges(p) == 1,
       s"only the bounds aggregation may shuffle:\n$p")
   }
 
@@ -679,7 +689,7 @@ class PlanSpec extends SparkSpec {
     try {
       val p2 = plan("q_text_dupspans")
       assert(p2.contains("SortMergeJoin"), s"expected the SMJ fallback:\n$p2")
-      assert(p2.linesIterator.count(l => l.contains("- Exchange") && !l.contains("BroadcastExchange")) == 3,
+      assert(shuffleExchanges(p2) == 3,
         s"exactly three shuffles expected in the no-broadcast shape:\n$p2")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
@@ -702,7 +712,7 @@ class PlanSpec extends SparkSpec {
       s"no shuffle join or cross product expected anywhere:\n$p")
     // scoring shuffles only the (cand, subsp, code) aggregation and the
     // top-k window — the embedding scan feeds encode/LUT via broadcasts
-    assert(p.linesIterator.count(l => l.contains("- Exchange") && !l.contains("BroadcastExchange")) <= 4,
+    assert(shuffleExchanges(p) <= 4,
       s"too many shuffles for the ADC pipeline:\n$p")
   }
 

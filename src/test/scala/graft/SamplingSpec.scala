@@ -291,18 +291,18 @@ class SamplingSpec extends SparkSpec {
     def domOf(id: Long): (String, Long) =
       if (id < 400) ("A", 400L) else if (id < 500) ("B", 100L) else ("C", 25L)
     // exact membership replicated driver-side from the documented keep-rule
-    def expect(rate: Double, th: Long => Long): Set[Long] =
+    def expect(th: Long => Long): Set[Long] =
       (0L until 525L).filter(id => Sampling.hash60Jvm(id.toString, "t") % g < th(domOf(id)._2)).toSet
     val sqrtKept = kept(0.2, Sampling.Temperature.Sqrt)
-    assert(sqrtKept == expect(0.2,
+    assert(sqrtKept == expect(
       n => math.min(g.toLong, math.floor(2000.0 * math.sqrt(400.0 / n)).toLong)))
     val uniKept = kept(0.2, Sampling.Temperature.Uniform)
-    assert(uniKept == expect(0.2,
+    assert(uniKept == expect(
       n => math.min(g.toLong, math.floor(2000.0 * (400.0 / n)).toLong)))
     // uniform temperature at this rate keeps ALL of the smallest domain
     // (threshold 2000·16 caps at the full grid)
     assert((500L until 525L).toSet.subsetOf(uniKept))
-    assert(kept(0.2, Sampling.Temperature.Proportional) == expect(0.2, _ => 2000L))
+    assert(kept(0.2, Sampling.Temperature.Proportional) == expect(_ => 2000L))
     // nested: lowering the anchor rate only removes rows, never swaps them
     assert(kept(0.1, Sampling.Temperature.Sqrt).subsetOf(sqrtKept))
   }

@@ -384,7 +384,7 @@ class StreamingSpec extends SparkSpec {
 
   test("catalog streaming confs put keyed state in RocksDB changelog checkpoints") {
     // Pin the conf pair every catalog q_stream_* row runs under...
-    val confs = Queries.streamingStateConfs.toMap
+    val confs = catalog.EventQueries.streamingStateConfs.toMap
     assert(confs("spark.sql.streaming.stateStore.providerClass")
       .endsWith("RocksDBStateStoreProvider"))
     assert(confs(
