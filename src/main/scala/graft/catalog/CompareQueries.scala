@@ -60,7 +60,8 @@ private[graft] object CompareQueries {
     }
 
   // embeddings vs a copy with dropped keys and reversed vectors — the
-  // ARRAY-column (nested-type canonicalization) engine scenario, shared by
+  // ARRAY-column engine scenario (under canonicalizeNestedTypes, so the
+  // per-column predicate is the NestedChecksum kernel), shared by
   // q_compare_arrays and q_compare_multi.
   private def compareArraysResult(s: SparkSession, d: String) =
     memoizedCompare(s, d, "embeddings") {
@@ -112,11 +113,12 @@ private[graft] object CompareQueries {
   // orders reshaped with a MAP column whose TARGET side inserts the same
   // entries in the OPPOSITE order — the map key-order-insensitivity
   // scenario. Maps are unordered: only keys ≡ 0 (mod 11), whose 'a' value
-  // is genuinely perturbed, may report unmatched. Without the engine's
-  // key-sorted canonicalization every row's to_json text differs and the
-  // whole report flips — the closed-form oracle below needs no map
-  // support in DuckDB at all, which is the point: the expected verdict is
-  // arithmetic in the key.
+  // is genuinely perturbed, may report unmatched. The NestedChecksum
+  // kernel, which decides both the checksum and the per-column predicate
+  // of map columns, hashes entries in key order; without that every row
+  // would differ and the whole report flip — the closed-form oracle below
+  // needs no map support in DuckDB at all, which is the point: the
+  // expected verdict is arithmetic in the key.
   private def compareMapResult(s: SparkSession, d: String) =
     memoizedCompare(s, d, "orders_map") {
       val o = ord(s, d)
@@ -187,9 +189,9 @@ private[graft] object CompareQueries {
     }
 
   // orders reshaped with a STRUCT column (status, priority) vs a copy with
-  // dropped keys and perturbed struct fields — the struct-column
-  // (nested-type canonicalization) engine scenario: the checksum and the
-  // per-column predicate both go through to_json canonicalization.
+  // dropped keys and perturbed struct fields — the struct-column engine
+  // scenario, under canonicalizeNestedTypes: the checksum and the
+  // per-column predicate both compare the NestedChecksum kernel's output.
   private def compareStructResult(s: SparkSession, d: String) =
     memoizedCompare(s, d, "orders_struct") {
       val o = ord(s, d)
@@ -278,7 +280,8 @@ private[graft] object CompareQueries {
           |  ('o_orderdate'), ('o_orderpriority')) c(column_name)
           |GROUP BY c.column_name""".stripMargin)),
 
-    // engine end-to-end over ARRAY columns (nested-type canonicalization)
+    // engine end-to-end over ARRAY columns (kernel-compared under
+    // canonicalizeNestedTypes)
     "q_compare_arrays" -> CatalogQuery((s, d) => compareArraysResult(s, d).rowLvlTestReport,
       """WITH src AS (SELECT * FROM embeddings WHERE vec_id % 19 != 0),
         |tgt AS (SELECT vec_id,
@@ -294,14 +297,13 @@ private[graft] object CompareQueries {
         |    AND s.label IS NOT DISTINCT FROM t.label, FALSE) AS all_rows_matched
         |FROM src s FULL OUTER JOIN tgt t ON s.vec_id = t.vec_id""".stripMargin),
 
-    // engine end-to-end over a STRUCT column (to_json canonicalization in
+    // engine end-to-end over a STRUCT column (the NestedChecksum kernel in
     // both the row checksum and the per-column predicate)
     "q_compare_struct" -> CatalogQuery((s, d) => compareStructResult(s, d).rowLvlTestReport,
-      // replica of the struct-column engine scenario: to_json canonicalization
-      // is injective for a fixed struct schema (a null field is OMITTED from
-      // the json, never colliding with any non-null value), so checksum
-      // equality ≙ null-safe field-wise equality — which DuckDB states
-      // directly on the underlying fields
+      // replica of the struct-column engine scenario: the kernel marks a
+      // NULL field apart from every present value, so on these string
+      // fields kernel equality ≙ null-safe field-wise equality — which
+      // DuckDB states directly on the underlying fields
       """WITH src AS (SELECT o_orderkey, o_orderstatus AS status,
         |    o_orderpriority AS priority, o_custkey
         |  FROM orders WHERE o_orderkey % 19 != 0),

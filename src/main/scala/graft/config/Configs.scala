@@ -17,11 +17,13 @@ import graft.Constants
   *        precision/scale silently fall back to exact equality. Default
   *        `false` = idiomatic behavior (every `NumericType` gets tolerance);
   *        set `true` to reproduce the reference quirk bit-for-bit.
-  * @param canonicalizeNestedTypes extension beyond the reference: when
-  *        `true`, struct/map/array columns are canonicalized with `to_json`
-  *        before checksumming and comparison, so nested schemas (e.g. an
-  *        `array<float>` embedding column) become comparable instead of
-  *        failing in `concat_ws` (SURVEY §1.2).
+  * @param canonicalizeNestedTypes extension beyond the reference. Nested
+  *        columns are comparable either way: every struct, array and map
+  *        column feeds the row checksum through the canonical
+  *        `NestedChecksum` kernel, and map columns always compare by it.
+  *        When `true`, struct and array columns also compare by the kernel
+  *        instead of null-safe equality, so −0.0 and 0.0 differ and strings
+  *        compare by bytes rather than by their collation.
   */
 final case class TestParams(
     differenceTolerance: Double = 0.0,

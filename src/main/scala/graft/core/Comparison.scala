@@ -46,15 +46,15 @@ final case class ComparisonResult(
   *    order (deterministic; fixes the reference's latent crash when
   *    select/drop removes a column, `comparison_job.py:187` vs SURVEY
   *    §2.10.1 — observable behavior is unchanged on the default path);
-  *    nested struct/array columns compare STRUCTURALLY without the
-  *    canonicalization flag — the xxhash checksum and the null-safe
-  *    per-column predicate both take struct/array values natively (with an
-  *    isnull marker in the hash chain so NULL and empty containers stay
-  *    distinct), where the reference's string-concat checksum crashed on
-  *    structs; MAP-bearing columns are routed through `to_json`
-  *    automatically (Spark 4 can neither hash nor equality-compare maps)
-  *    and `canonicalizeNestedTypes` remains for JSON-canonical semantics
-  *    on everything nested;
+  *    nested struct, array and map columns compare without any flag (the
+  *    reference's string-concat checksum crashed on structs): each feeds
+  *    the row checksum through the [[NestedChecksum]] kernel, whose output
+  *    is equal exactly when the canonical forms are (NULL markers at every
+  *    level, container lengths, key-sorted map entries, sign-keeping float
+  *    bits). Map-bearing columns, which Spark 4 can neither hash nor
+  *    `<=>`, also compare the kernel output in the per-column predicate;
+  *    other nested columns compare with `<=>`, and
+  *    `canonicalizeNestedTypes` moves them onto the kernel predicate too;
   *  - the alignment is SLIM and COUNTED, not joined: only the primary keys,
   *    a 16-byte (two-long) row checksum and a side tag go through the one
   *    unavoidable wide shuffle — ONE hash(keys) exchange carrying both
@@ -131,25 +131,20 @@ object Comparison {
     case _ => false
   }
 
-  /** Column `c` must go through `to_json` everywhere the engine touches it:
-    * either the caller asked for JSON-canonical nested semantics, or the
-    * type carries a map ([[containsMap]]) Spark can neither hash nor
-    * equality-compare. Spark 4's `xxhash64` REJECTS maps (DATATYPE_MISMATCH
-    * unless the legacy allowHashOnMapType flag is set) and `<=>`/`=` reject
-    * them too (maps are unorderable), so the structural no-flag path cannot
-    * take map-bearing columns natively: their checksum goes through the
-    * [[NestedChecksum]] kernel, and their per-column predicate AND unmatched
-    * extracts (whose `distinct()` is a set operation maps are also banned
-    * from) through the canonical JSON text.
+  /** Column `c`'s per-column predicate compares [[NestedChecksum]] output
+    * instead of `<=>`: either the caller asked for canonical nested
+    * semantics, or the type carries a map ([[containsMap]]), which `<=>`
+    * rejects (maps are unorderable). On these columns the checksum and the
+    * predicate are one function, so the two can never disagree.
     */
-  private def jsonRouted(dt: DataType, params: TestParams): Boolean =
+  private def kernelCompared(dt: DataType, params: TestParams): Boolean =
     isNested(dt) && (params.canonicalizeNestedTypes || containsMap(dt))
 
   /** Key-order canonicalization for map-bearing values. Map equality is
     * SEMANTIC — `{a:1, b:2}` and `{b:2, a:1}` are the same map — but
     * `to_json` renders entries in physical insertion order, so without
-    * canonicalization the JSON route would report semantically-equal maps
-    * built in different orders as unmatched (and checksum-mismatched).
+    * canonicalization the extracts would render semantically-equal maps
+    * built in different orders as different text.
     * Entries sort by key via an explicit comparator (keys are unique and
     * non-null, so the order is total; the comparator ignores the value,
     * so unorderable VALUE types — nested maps — never break the sort),
@@ -178,27 +173,18 @@ object Comparison {
     case _ => c
   }
 
-  /** The engine's one JSON rendering: canonicalized (maps key-sorted) then
-    * `to_json` — per-column predicates and unmatched extracts agree on it.
-    * The ROW CHECKSUM of JSON-routed columns hashes the value with the
-    * [[NestedChecksum]] kernel instead: one codegen'd walk per row, at
-    * least as fine as this text, without materializing a string per row
-    * in the one unavoidable full-width scan.
-    *
-    * The finer-only direction is safe BY CONSTRUCTION: a checksum mismatch
-    * on JSON-equal values (a timestamp differing below the text's
-    * millisecond precision, say) only routes the key through the
-    * tolerance refetch, whose per-column predicate uses this text — the
-    * key comes back "rescued" and every report is unchanged. Only a false
-    * MATCH could alter results, and the kernel's per-slot NULL markers,
-    * container lengths, key-sorted map entries and sign-keeping float bits
-    * exist to rule exactly that out.
+  /** The engine's one JSON rendering, canonicalized (maps key-sorted) then
+    * `to_json`. Only the unmatched extracts use it, for map-bearing values
+    * (see [[unmatchedExtracts]]); matching never reads it. The text is
+    * coarser than the [[NestedChecksum]] kernel that decides matches: it
+    * renders timestamps at millisecond precision.
     */
   private[graft] def jsonCanonical(c: Column, dt: DataType): Column = to_json(canonMaps(c, dt))
 
   /** Per-column match predicate (`comparison_job.py:19-34`): numerics match
     * within tolerance (NULL-vs-NULL numeric pairs yield NULL, kept — SURVEY
-    * §2.10.4); everything else null-safe equality.
+    * §2.10.4); [[kernelCompared]] nested columns by their checksum's kernel;
+    * everything else null-safe equality.
     */
   private def matchedPredicate(field: StructField, params: TestParams): Column = {
     val s = col(srcCol(field.name))
@@ -215,8 +201,8 @@ object Comparison {
       if (refNumeric(field.dataType)) withinTol
       else (s <=> t) || withinTol
     }
-    else if (jsonRouted(field.dataType, params))
-      jsonCanonical(s, field.dataType) <=> jsonCanonical(t, field.dataType)
+    else if (kernelCompared(field.dataType, params))
+      NestedChecksum(s, ChkSaltA, ChkSaltB) <=> NestedChecksum(t, ChkSaltA, ChkSaltB)
     else s <=> t
   }
 
@@ -406,43 +392,23 @@ object Comparison {
     * reference's `"x"+""+"y"` = `"x"+"y"+""` does; the reports stay
     * reference-faithful on it.
     *
-    * Nested columns on the structural (no-flag) path additionally hash an
-    * `isnull(c)` MARKER before the value: Spark's hash contributes nothing
-    * for a NULL input and nothing for an empty container, so without the
-    * marker a NULL array vs an empty array (or a NULL struct vs an
-    * all-NULL-fields struct) would checksum-match while the per-column
-    * null-safe predicate calls them different — and checksum-matched rows
-    * never reach the per-column pass, making that a silent false match.
-    * The marker removes the NULL-vs-empty class (and, for nested columns
-    * only, the NULL-shift class above). Residual, documented: ambiguity
-    * WITHIN one container value — `[NULL]` vs `[]`, or a value shifting
-    * across a NULL struct field — still collides, because Spark's hash
-    * skips NULL elements/fields inside a container; set
-    * `canonicalizeNestedTypes` (JSON text renders NULL elements
-    * explicitly) where that class matters. JSON-routed columns (every
-    * map-bearing column, see [[jsonRouted]]) hash through the
-    * [[NestedChecksum]] kernel, which marks NULLs at every level and so has
-    * none of these collisions.
+    * Nested columns hash through the [[NestedChecksum]] kernel: Spark's
+    * own hash contributes nothing for a NULL or an empty container and
+    * skips NULL fields and elements inside one, so it would checksum-match
+    * NULL vs `[]`, `[NULL]` vs `[]` and a value shifting across a NULL
+    * struct field — pairs the per-column predicate calls different, and
+    * checksum-matched rows never reach it. The kernel's output is never
+    * NULL, so nested columns take no part in the NULL-shift class above.
     */
   private def transformSide(
       df: DataFrame,
       suffix: String => String,
-      nonKeyCols: Seq[String],
-      params: TestParams): DataFrame = {
+      nonKeyCols: Seq[String]): DataFrame = {
     val schemaByName = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val chkInputs = nonKeyCols.flatMap { c =>
-      val dt = schemaByName(c)
-      // JSON-routed columns hash through the codegen'd kernel: the
-      // checksum scan is the one unavoidable pass over the full-width
-      // table, and a JSON string (or a lambda-built canonical form) per row
-      // there costs several times the hashing; the kernel is at least as
-      // fine as the canonical text, so match classification — and every
-      // report — is unchanged. Both checksum halves hash the kernel's 16
-      // bytes, which subexpression elimination computes once per row.
-      // Predicates and extracts (mismatch-pruned, tiny) keep the JSON text.
-      if (jsonRouted(dt, params)) Seq(NestedChecksum(col(c), ChkSaltA, ChkSaltB))
-      else if (isNested(dt)) Seq(isnull(col(c)).cast(IntegerType), col(c))
-      else Seq(col(c))
+    // Both checksum halves hash the kernel's 16 bytes, which subexpression
+    // elimination computes once per row.
+    val chkInputs = nonKeyCols.map { c =>
+      if (isNested(schemaByName(c))) NestedChecksum(col(c), ChkSaltA, ChkSaltB) else col(c)
     }
     df.withColumn(suffix(ChkSumCol), struct(
         xxhash64(lit(ChkSaltA) +: chkInputs: _*).as("a"),
@@ -553,9 +519,9 @@ object Comparison {
     val typeByName = unmatchedRecords.schema.fields.map(f => f.name -> f.dataType).toMap
     offending.map { c =>
       // Map-bearing value columns are JSON-rendered in the extract: the
-      // dedup `distinct()` is a set operation Spark bans maps from (same
-      // ban as the checksum/predicate paths, see containsMap) — the JSON
-      // text keeps the extract materializable with the same column names.
+      // dedup `distinct()` is a set operation Spark bans maps from (as it
+      // bans them from `<=>`, see containsMap) — the JSON text keeps the
+      // extract materializable and readable with the same column names.
       def sideCol(name: String): Column =
         if (containsMap(typeByName(name)))
           jsonCanonical(col(name), typeByName(name)).as(name)
@@ -766,8 +732,8 @@ object Comparison {
     // exist, by the pruned refetch (a second, key-pruned scan). NOT
     // persisted: at 100 TB a full-width persist is exactly the scratch
     // footprint the slim alignment exists to avoid.
-    val srcFull = transformSide(projectedSrc, srcCol, nonKeyCols, params.testParams)
-    val tgtFull = transformSide(projectedTgt, tgtCol, nonKeyCols, params.testParams)
+    val srcFull = transformSide(projectedSrc, srcCol, nonKeyCols)
+    val tgtFull = transformSide(projectedTgt, tgtCol, nonKeyCols)
 
     // Slim rows: (keys, 16-byte checksum, side tag) of BOTH sides, one
     // union, so the whole alignment is ONE hash(keys) exchange.

@@ -10,9 +10,11 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Codegen'd 128-bit checksum of a nested value, for the compare engine's
-  * row checksum over JSON-routed columns (map-bearing columns, and every
-  * nested column under `canonicalizeNestedTypes`).
+/** Codegen'd 128-bit checksum of a nested value: the compare engine's one
+  * canonical form for nested values. Every struct, array and map column
+  * feeds the row checksum through it, and the per-column predicate of a
+  * map-bearing column (of every nested column under
+  * `canonicalizeNestedTypes`) compares its output.
   *
   * The kernel walks the value once per row and feeds one token stream into
   * two XXH64 chains seeded with different salts; the result is the two
@@ -32,10 +34,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - float and double leaves hash their bit pattern: all NaNs collapse to
   *    one, and the sign bit marks -0.0 apart from 0.0.
   *
-  * That is at least as fine as the engine's canonical JSON text (key-sorted
-  * maps through `to_json`), which is what keeps every report equal to the
-  * text-based checksum it replaces; `NestedChecksumSpec` checks both
-  * directions on generated values.
+  * That is at least as fine as null-safe equality `<=>` (which also equates
+  * −0.0 with 0.0, and strings equal under their collation), so a checksum
+  * match never hides a difference the predicate would see. It is also at
+  * least as fine as the key-sorted JSON text that renders map-bearing
+  * extract values, and finer on timestamps, which the text rounds to
+  * milliseconds; `NestedChecksumSpec` checks both on generated values.
   *
   * It replaces a lambda tree of `transform` and comparator `array_sort`,
   * both `CodegenFallback`: the generated code is one function per container

@@ -372,10 +372,11 @@ class ComparisonSpec extends SparkSpec {
       .map(r => r.getAs[Long]("id") -> r.getAs[Boolean]("all_rows_matched")).toMap
     assert(byId == Map(1L -> true, 2L -> false))
     // structs: the reference's concat_ws checksum REJECTED them without the
-    // flag (AnalysisException — concat_ws takes no structs); the xxhash
-    // checksum hashes nested values natively and the per-column predicate's
-    // null-safe equality is struct-valid, so a no-flag struct compare now
-    // WORKS, comparing structurally instead of crashing
+    // flag (AnalysisException — concat_ws takes no structs); the checksum
+    // hashes nested values through the NestedChecksum kernel and the
+    // per-column predicate's null-safe equality is struct-valid, so a
+    // no-flag struct compare WORKS, comparing structurally instead of
+    // crashing
     val srcS = Seq((1L, ("x", 1.0)), (2L, ("y", 3.0))).toDF("id", "payload")
       .select(col("id"), struct(col("payload._1").as("a"), col("payload._2").as("b")).as("payload"))
     val tgtS = Seq((1L, ("x", 2.0)), (2L, ("y", 3.0))).toDF("id", "payload")
@@ -428,10 +429,10 @@ class ComparisonSpec extends SparkSpec {
     res.unpersist(); res2.unpersist()
   }
 
-  test("NULL vs empty containers checksum-mismatch (isnull marker in the hash chain)") {
+  test("NULL vs empty containers checksum-mismatch") {
     import org.apache.spark.sql.functions.{col, struct, lit, when}
     // NULL array vs empty array: Spark's hash contributes nothing for
-    // either, so without the marker these rows silently report matched
+    // either, so a native hash would silently report these rows matched
     // while the per-column null-safe predicate calls them different.
     val srcA = Seq((1L, Some(Seq(1, 2)), "k"), (2L, None, "k"), (3L, None, "k"))
       .toDF("id", "arr", "pad")
@@ -443,7 +444,7 @@ class ComparisonSpec extends SparkSpec {
       .map(r => r.getAs[Long]("id") -> r.getAs[Boolean]("all_rows_matched")).toMap
     assert(byIdA == Map(1L -> true, 2L -> false, 3L -> true),
       s"NULL-vs-empty array must mismatch only id=2: $byIdA")
-    // NULL struct vs all-NULL-fields struct: same hash blindness, same fix
+    // NULL struct vs all-NULL-fields struct: the same hash blindness
     def structSide(nullWhole: Boolean) = Seq((1L, "x")).toDF("id", "v").select(
       col("id"),
       when(lit(!nullWhole),
@@ -454,6 +455,58 @@ class ComparisonSpec extends SparkSpec {
     assert(!resS.rowLvlTestReport.collect().head.getAs[Boolean]("all_rows_matched"),
       "NULL struct vs all-NULL-fields struct must mismatch")
     resA.unpersist(); resS.unpersist()
+  }
+
+  test("default path: a value shifting across a NULL struct field, and [NULL] vs [], FAIL") {
+    import org.apache.spark.sql.functions.{col, struct}
+    // Spark's own hash skips NULL fields and elements inside a container,
+    // so it would checksum-match these pairs and PASS them without the
+    // per-column predicate ever seeing them; the kernel marks every NULL
+    // slot
+    val src = Seq((1L, Option("x"), Option.empty[String], Seq(Option.empty[String])),
+      (2L, Some("y"), Some("z"), Seq(Some("p"))))
+      .toDF("id", "a", "b", "arr")
+      .select(col("id"), struct(col("a"), col("b")).as("st"), col("arr"))
+    val tgt = Seq((1L, Option.empty[String], Option("x"), Seq.empty[Option[String]]),
+      (2L, Some("y"), Some("z"), Seq(Some("p"))))
+      .toDF("id", "a", "b", "arr")
+      .select(col("id"), struct(col("a"), col("b")).as("st"), col("arr"))
+    val res = Comparison.compareDataFrames(spark, src, tgt, DatasetParams("null_shift", Seq("id")))
+    try {
+      val o = res.overallTestReport.collect().head
+      assert(o.getAs[String]("test_status") == "FAILED" && o.getAs[Long]("matched_count") == 1L)
+      val byId = res.rowLvlTestReport.collect()
+        .map(r => r.getAs[Long]("id") -> r.getAs[Boolean]("all_rows_matched")).toMap
+      assert(byId == Map(1L -> false, 2L -> true), s"only id=1 may mismatch: $byId")
+      val colLvl = res.colLvlTestReport.collect()
+        .map(r => r.getAs[String]("column_name") -> r.getAs[Long]("unmatched_rows_count")).toMap
+      assert(colLvl == Map("st" -> 1L, "arr" -> 1L), s"both columns must be blamed: $colLvl")
+    } finally res.unpersist()
+  }
+
+  test("map and flagged struct columns tell timestamps under 1 ms apart apart") {
+    import org.apache.spark.sql.functions.{col, expr, map, lit, struct}
+    // 500 µs apart: the JSON text renders both as the same millisecond,
+    // the kernel that decides these predicates keeps the microseconds
+    def side(ts: String) = Seq((1L, "k")).toDF("id", "pad").select(
+      col("id"),
+      map(lit("t"), expr(s"timestamp'$ts'")).as("m"),
+      struct(expr(s"timestamp'$ts'").as("t")).as("st"))
+    val (src, tgt) = (side("2024-01-01 00:00:00.123456"), side("2024-01-01 00:00:00.123956"))
+    val runs = Seq(
+      "map" -> (src.select("id", "m"), tgt.select("id", "m"), TestParams()),
+      "flagged struct" -> (src.select("id", "st"), tgt.select("id", "st"),
+        TestParams(canonicalizeNestedTypes = true)))
+    for ((label, (s, t, tp)) <- runs) {
+      val res = Comparison.compareDataFrames(spark, s, t, DatasetParams("ts_sub_ms", Seq("id"), tp))
+      try {
+        val o = res.overallTestReport.collect().head
+        assert(o.getAs[String]("test_status") == "FAILED" && o.getAs[Long]("matched_count") == 0L,
+          s"$label: ${o.mkString(", ")}")
+        assert(res.colLvlTestReport.collect().map(_.getAs[Long]("unmatched_rows_count")).toSeq ==
+          Seq(1L), label)
+      } finally res.unpersist()
+    }
   }
 
   test("native JSON-route checksum classifies exactly like the canonical JSON text (r16)") {

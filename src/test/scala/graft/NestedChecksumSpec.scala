@@ -129,6 +129,25 @@ class NestedChecksumSpec extends SparkSpec {
     }
   }
 
+  test("timestamp and timestamp_ntz leaves: the kernel tells values under 1 ms apart apart, the JSON text does not") {
+    import org.apache.spark.sql.functions.expr
+    // the one known place where the kernel is strictly finer than the text:
+    // to_json renders both timestamp types at millisecond precision
+    def value(micros: String) = expr(s"array(named_struct(" +
+      s"'t', timestamp'2024-01-01 00:00:00.$micros', " +
+      s"'n', timestamp_ntz'2024-01-01 00:00:00.$micros'))")
+    val pairs = spark.range(1).select(value("123456").as("l"), value("123956").as("r"))
+    val dt = pairs.schema("l").dataType
+    assert(dt.simpleString == "array<struct<t:timestamp,n:timestamp_ntz>>", dt.simpleString)
+    val Row(kernelEq: Boolean, textEq: Boolean, sameKernel: Boolean) = pairs.select(
+      kernel(col("l")) === kernel(col("r")),
+      Comparison.jsonCanonical(col("l"), dt) <=> Comparison.jsonCanonical(col("r"), dt),
+      kernel(col("l")) === kernel(value("123456"))).head()
+    assert(!kernelEq, "the kernel must keep the microseconds")
+    assert(textEq, "the JSON text renders both values as the same millisecond")
+    assert(sameKernel, "equal timestamps must keep equal kernel output")
+  }
+
   test("generated code and the interpreted walk produce the same checksum bytes") {
     def sums(df: DataFrame): Seq[Seq[Byte]] =
       df.select(kernel(col("l")), kernel(col("r"))).collect().toSeq

@@ -232,6 +232,102 @@ class PlanSpec extends SparkSpec {
       "checksum scan should prune to key + checksummed columns")
   }
 
+  test("one checksum route for nested columns: no xxhash64 hashes a nested value, every nested column reaches it as nested_checksum") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, XxHash64}
+    import org.apache.spark.sql.functions.{array, col, lit, map, struct}
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    import graft.functions.NestedHash
+    val df = spark.range(4).select(col("id"),
+      struct(col("id").cast("string").as("a"), lit(null).cast("string").as("b")).as("st"),
+      array(col("id").cast("string"), lit(null).cast("string")).as("arr"),
+      map(lit("k"), col("id")).as("m"),
+      col("id").cast("string").as("flat"))
+    val res = graft.core.Comparison.compareDataFrames(spark, df, df,
+      graft.config.DatasetParams("nested_route_audit", Seq("id")))
+    try {
+      val exprs = res.cachedFrames.head.queryExecution.analyzed.flatMap(_.expressions)
+      val hashes = exprs.flatMap(_.collect { case h: XxHash64 => h })
+      assert(hashes.size == 4, s"two checksum halves per side: $hashes")
+      val nestedInputs = hashes.flatMap(_.children).filter(_.dataType match {
+        case _: StructType | _: ArrayType | _: MapType => true
+        case _ => false
+      })
+      assert(nestedInputs.isEmpty, s"xxhash64 must not hash nested values: $nestedInputs")
+      val kernelInputs = exprs.flatMap(_.collect {
+        case NestedHash(a: AttributeReference, _, _) => a.name
+      }).toSet
+      assert(kernelInputs == Set("st", "arr", "m"), s"kernel inputs: $kernelInputs")
+    } finally res.unpersist()
+  }
+
+  test("the checksum projection stays whole-stage codegen'd on a 5-level, 50-column nested schema") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.types._
+    // each column nests five containers (single-field structs, arrays,
+    // string-keyed maps) over one leaf; at most 45 maps keep the schema
+    // within spark.sql.codegen.maxFields, past which Spark plans no
+    // whole-stage codegen over the scan whatever the expressions are
+    val rng = new scala.util.Random(5)
+    var mapsLeft = 45
+    def level(inner: DataType): DataType = rng.nextInt(3) match {
+      case 0 => StructType(Seq(StructField("f", inner)))
+      case 1 => ArrayType(inner)
+      case _ if mapsLeft > 0 => mapsLeft -= 1; MapType(StringType, inner)
+      case _ => ArrayType(inner)
+    }
+    val types = Seq.fill(50)((1 to 5).foldLeft(
+      Seq[DataType](StringType, IntegerType, DoubleType)(rng.nextInt(3)))((t, _) => level(t)))
+    val schema = StructType(StructField("id", LongType) +:
+      types.zipWithIndex.map { case (t, i) => StructField(s"c$i", t) })
+    assert(!WholeStageCodegenExec.isTooManyFields(spark.sessionState.conf, schema))
+    def value(t: DataType, i: Int): Any = t match {
+      case s: StructType => Row(value(s.fields.head.dataType, i))
+      case a: ArrayType => Seq(value(a.elementType, i), null)
+      case m: MapType => Map(s"k$i" -> value(m.valueType, i))
+      case StringType => s"v$i"
+      case IntegerType => i
+      case _ => i * 0.5
+    }
+    val rows = (0 until 6).map(i => Row.fromSeq(i.toLong +: types.map(value(_, i))))
+    // an RDD source, so the projection is planned rather than folded into a
+    // local relation on the driver
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val res = graft.core.Comparison.compareDataFrames(spark, df, df,
+      graft.config.DatasetParams("deep_wide_audit", Seq("id")))
+    try {
+      assert(res.overallTestReport.head().getAs[String]("test_status") == "PASSED")
+      val cachedPlan = res.cachedFrames.head.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r.cachedPlan
+      }.getOrElse(fail("the count frame must be cached"))
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => nodes(q.plan)
+        case other => other +: other.children.flatMap(nodes)
+      }
+      def checksums(p: SparkPlan): Boolean = p match {
+        case proj: ProjectExec => proj.projectList.exists(_.toString.contains("nested_checksum"))
+        case _ => false
+      }
+      val all = nodes(cachedPlan)
+      val stages = all.collect {
+        case w: WholeStageCodegenExec if w.child.collect { case p if checksums(p) => p }.nonEmpty => w
+      }
+      assert(stages.size == 2 && all.count(checksums) == 2,
+        s"each side's checksum projection must sit inside a codegen stage:\n$cachedPlan")
+      // a stage whose largest compiled method passes the huge-method limit
+      // falls back to interpreted execution at run time
+      stages.foreach { w =>
+        val (_, stats) = CodeGenerator.compile(w.doCodeGen()._2)
+        assert(stats.maxMethodCodeSize <= spark.sessionState.conf.hugeMethodLimit,
+          s"largest generated method: ${stats.maxMethodCodeSize} bytes")
+      }
+    } finally res.unpersist()
+  }
+
   test("bucketed tables join co-located: zero exchanges in the plan") {
     import graft.sources.IoUtils
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_buckets LOCATION '/tmp/graft-bucket-wh'")
