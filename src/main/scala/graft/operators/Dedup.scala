@@ -1086,7 +1086,13 @@ object Dedup {
     * stress in [[graft.tools.SkewBench]] and OperatorsSpec).
     *
     * The edge list is a MATERIALIZED columnar cache hash-partitioned +
-    * sorted on `dst` (the step-(a) join key): under Spark's default
+    * sorted on `dst` (the step-(a) join key) into
+    * [[Graphs.layoutPartitions]] partitions — one count per call, from
+    * the input's size estimate and AQE's coalescing rule, the
+    * shuffle-partition count at scale — and the initial labels and every
+    * round's neighbour-min are keyed at the same count. Where that count
+    * is 1 the local contraction is a union-find over the whole graph and
+    * the loop converges in one round. Under Spark's default
     * `canChangeCachedPlanOutputPartitioning=false` every round's
     * neighbor-min join then needs neither exchange nor sort on the 2|E|-row
     * side — a lazy localCheckpoint surfaces UnknownPartitioning and
@@ -1105,11 +1111,16 @@ object Dedup {
       smallGraphEdges: Long = 65536L): (DataFrame, Int) = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types.{StructField, StructType}
-    // undirected, deduped edge list — reused every round
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+    // undirected, deduped edge list — reused every round. Its layout, the
+    // initial labels and every round's neighbour-min are keyed at one
+    // partition count (see Graphs.layoutPartitions).
+    val parts = Graphs.layoutPartitions(pairs)
+    val edges = Graphs.keyed(
+        pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+          .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst"))),
+        parts, "src", "dst")
       .distinct()
-      .repartition(col("dst"))
+      .repartition(parts, col("dst"))
       .sortWithinPartitions("dst")
       .persist()
     val edgeCount = Graphs.fill(edges) // materialize: an empty cache still plans the exchange
@@ -1148,10 +1159,12 @@ object Dedup {
           .mapPartitions(rows =>
             minRootLabels(rows.map(r => (r.get(0), r.get(1))), lt).map { case (n, c) => Row(n, c) }
           )(Encoders.row(labelSchema))
+          .transform(Graphs.keyed(_, parts, "node"))
           .groupBy(col("node"))
           .agg(min(col("component")).as("component"))
       case None =>
-        edges.select(col("src").as("node")).distinct().withColumn("component", col("node"))
+        Graphs.keyed(edges.select(col("src").as("node")), parts, "node")
+          .distinct().withColumn("component", col("node"))
     }
     var labels = initial.localCheckpoint(false)
     var round = 0
@@ -1160,6 +1173,7 @@ object Dedup {
       // (a) min over self + neighbors
       val nbrMin = edges
         .join(labels.select(col("node").as("dst"), col("component").as("nbr")), Seq("dst"))
+        .transform(Graphs.keyed(_, parts, "src"))
         .groupBy(col("src").as("node"))
         .agg(min(col("nbr")).as("nbr_min"))
       val stepped = labels

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Distributed undirected-graph analytics beyond the connected components
   * in [[Dedup.connectedComponents]] — the structural profile of a pair
@@ -13,14 +14,17 @@ object Graphs {
 
   /** Canonical undirected edge list: self-loops dropped, reversed
     * duplicates collapsed onto `(lo, hi)` with lo < hi. The one place edge
-    * normalization lives — both profile and PageRank build on it.
+    * normalization lives — both profile and PageRank build on it. The
+    * deduplicating exchange lands on `parts` partitions (see [[keyed]]).
     */
-  private def canonicalEdges(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
-    pairs
-      .filter(col(aCol).isNotNull && col(bCol).isNotNull && col(aCol) =!= col(bCol))
-      .select(
-        least(col(aCol), col(bCol)).as("lo"),
-        greatest(col(aCol), col(bCol)).as("hi"))
+  private def canonicalEdges(pairs: DataFrame, aCol: String, bCol: String, parts: Int): DataFrame =
+    keyed(
+      pairs
+        .filter(col(aCol).isNotNull && col(bCol).isNotNull && col(aCol) =!= col(bCol))
+        .select(
+          least(col(aCol), col(bCol)).as("lo"),
+          greatest(col(aCol), col(bCol)).as("hi")),
+      parts, "lo", "hi")
       .distinct()
 
   /** Both orientations of every canonical edge as `(src, dst)`, built in
@@ -30,10 +34,59 @@ object Graphs {
     * and need a side cache to keep the upstream pair pipeline from running
     * twice.
     */
-  private def bidirectional(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
-    canonicalEdges(pairs, aCol, bCol).select(inline(array(
+  private def bidirectional(pairs: DataFrame, aCol: String, bCol: String, parts: Int): DataFrame =
+    canonicalEdges(pairs, aCol, bCol, parts).select(inline(array(
       struct(col("lo").as("src"), col("hi").as("dst")),
       struct(col("hi").as("src"), col("lo").as("dst")))))
+
+  /** Partition count of one graph call's cached layouts and of every
+    * round exchange keyed like them: the size rule AQE coalesces shuffles
+    * by, applied up front to the layouts it may not coalesce. Under
+    * Spark's default `canChangeCachedPlanOutputPartitioning=false` a cache
+    * keeps its layout (which is what lets every round read it in place),
+    * so a layout at the shuffle-partition count ran one task per partition
+    * in every stage of every round: 278 tasks per 2k-edge bench unit.
+    *
+    * The estimate is the optimizer's `sizeInBytes` of `pairs` (the
+    * statistic the broadcast choice reads), doubled for the two
+    * orientations the layouts hold. As in AQE's `CoalesceShufflePartitions`,
+    * the target partition size is the estimate spread over the minimum
+    * partition count (`spark.sql.adaptive.coalescePartitions.minPartitionNum`,
+    * else the default parallelism under `parallelismFirst`, Spark's
+    * default, else 1), clamped to `[minPartitionSize,
+    * advisoryPartitionSizeInBytes]`; the count is the estimate over that
+    * target, clamped to `[1, spark.sql.shuffle.partitions]`. So a graph
+    * under `minPartitionSize` (1 MB) gets one partition, a larger one
+    * keeps every core busy, and unknown statistics (Spark's
+    * `defaultSizeInBytes`), any estimate above `shuffle partitions ×
+    * advisory size`, or coalescing switched off give the shuffle-partition
+    * count: the layouts and plans of a graph at scale are unchanged.
+    */
+  private[graft] def layoutPartitions(pairs: DataFrame): Int = {
+    val conf = pairs.sparkSession.sessionState.conf
+    val estimate = pairs.queryExecution.optimizedPlan.stats.sizeInBytes * 2
+    val advisory = BigInt(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    val minCount = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM).getOrElse(
+      if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+        pairs.sparkSession.sparkContext.defaultParallelism
+      else 1)
+    val minSize = BigInt(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)).min(advisory)
+    val target = ((estimate + minCount - 1) / minCount).min(advisory).max(minSize)
+    if (!conf.coalesceShufflePartitionsEnabled) conf.numShufflePartitions
+    else ((estimate + target - 1) / target).max(1).min(conf.numShufflePartitions).toInt
+  }
+
+  /** `df` hash-partitioned on `keys` into `parts` partitions, in front of
+    * an aggregate or distinct on `keys`. Left to itself that operator
+    * exchanges at the shuffle-partition count, and where its output meets
+    * a `parts`-partition layout the planner re-exchanges one side. At the
+    * shuffle-partition count `df` is returned as it is: the planner's own
+    * exchange lands on the same layout and keeps the aggregate's map-side
+    * partial step.
+    */
+  private[operators] def keyed(df: DataFrame, parts: Int, keys: String*): DataFrame =
+    if (parts >= df.sparkSession.sessionState.conf.numShufflePartitions) df
+    else df.repartition(parts, keys.map(col): _*)
 
   /** Fill the cache of a persisted `df` and return its row count, in the
     * jobs that run its own plan: `Dataset.count()` would plan a global
@@ -76,7 +129,9 @@ object Graphs {
     * Scale shape — INCREMENTAL degree maintenance, so total aggregation
     * work across all peel rounds is O(|E|), not rounds × O(|E|): the
     * canonical edge set is cached ONCE (columnar persist, the PageRank
-    * adjacency discipline) and degrees are aggregated ONCE up front; every
+    * adjacency discipline, at the [[layoutPartitions]] count every degree
+    * generation and decrement aggregate is keyed at) and degrees are
+    * aggregated ONCE up front; every
     * round then (1) filters the |V|-row degree frame for sub-k nodes,
     * (2) probes the cached base with the removed set BROADCAST (two
     * narrow codegen'd hash-join scans, no base shuffle) to emit one
@@ -149,12 +204,15 @@ object Graphs {
     // columnar cache, materialized before any round plans against it (see
     // buildPrGraph for why persist, not localCheckpoint): the degree
     // checkpoint below is its only reader, so that job fills it
-    val base = canonicalEdges(pairs, aCol, bCol).persist()
+    val parts = layoutPartitions(pairs)
+    val base = canonicalEdges(pairs, aCol, bCol, parts).persist()
     // Degrees aggregated ONCE; every later generation is survivors minus
     // decrements. Eager checkpoint truncates the round-deep lineage —
     // without it round r's plan would stack r joins over the original
     // aggregation. The same job counts the nodes (the shrink trigger).
-    val (degs0, nodes0) = checkpointCounting(degrees(base))
+    // Every degree generation and every round's decrements are aggregated
+    // on the node at `parts` partitions, the count of the base's layout.
+    val (degs0, nodes0) = checkpointCounting(degrees(base, parts))
     var degs = degs0
     // An eager checkpoint is a LogicalRDD — size-UNKNOWN to the planner —
     // so the per-round removed set gets an explicit broadcast hint while
@@ -235,13 +293,15 @@ object Graphs {
         // endpoint; decrements aimed at nodes removed this round or
         // earlier vanish at the join with the surviving degree frame, so
         // no edge is ever subtracted twice.
-        val dec = liveBase
-          .join(lowB.withColumnRenamed("n", "lo"), Seq("lo"))
-          .select(col("hi").as("n"))
-          .unionByName(
-            liveBase
-              .join(lowB.withColumnRenamed("n", "hi"), Seq("hi"))
-              .select(col("lo").as("n")))
+        val dec = keyed(
+          liveBase
+            .join(lowB.withColumnRenamed("n", "lo"), Seq("lo"))
+            .select(col("hi").as("n"))
+            .unionByName(
+              liveBase
+                .join(lowB.withColumnRenamed("n", "hi"), Seq("hi"))
+                .select(col("lo").as("n"))),
+          parts, "n")
           .groupBy(col("n"))
           .agg(count(lit(1)).as("__dec"))
         val next = degs
@@ -309,8 +369,10 @@ object Graphs {
     * accumulated distance set) against the bidirectional adjacency —
     * frontier size bounds the shuffled probe side and AQE broadcasts a
     * dwindling frontier — then one anti-join against the accumulated
-    * distances to keep only first visits. The adjacency is built once and
-    * `persist`ed (each hop re-reads it; re-deriving would re-run the whole
+    * distances to keep only first visits. The adjacency is built once,
+    * hash-partitioned by `src` into [[layoutPartitions]] partitions (the
+    * count each hop's reached set is deduplicated at), and `persist`ed
+    * (each hop re-reads it; re-deriving would re-run the whole
     * upstream pair pipeline per hop, and lineage-backed persist lets an
     * evicted partition recompute where a checkpoint could not). Each hop's
     * new level is `localCheckpoint`ed once, which truncates the lineage;
@@ -338,23 +400,27 @@ object Graphs {
     // per hop). With the layout visible only the dwindling frontier moves
     // per hop, at every scale. A session that sets the key "true" gets the
     // same distances, but the adjacency may then be re-exchanged every hop.
-    val adj = bidirectional(pairs, aCol, bCol)
-      .repartition(col("src"))
+    val parts = layoutPartitions(pairs)
+    val adj = bidirectional(pairs, aCol, bCol, parts)
+      .repartition(parts, col("src"))
       .sortWithinPartitions("src")
       .persist()
     fill(adj) // materialize so hops plan against the cached layout
-    var dist = seeds
-      .filter(col(seedCol).isNotNull)
-      .select(col(seedCol).as("node")).distinct()
+    // every level is deduplicated at `parts` partitions, the count the
+    // frontier's probe of the adjacency runs at
+    var dist = keyed(seeds.filter(col(seedCol).isNotNull).select(col(seedCol).as("node")),
+        parts, "node")
+      .distinct()
       .withColumn("hops", lit(0L))
       .localCheckpoint()
     var frontier = dist
     var hop = 0L
     var exhausted = false
     while (hop < maxHops && !exhausted) {
-      val (next, size) = checkpointCounting(frontier.select(col("node").as("src"))
+      val reached = frontier.select(col("node").as("src"))
         .join(adj, Seq("src"))
-        .select(col("dst").as("node")).distinct()
+        .select(col("dst").as("node"))
+      val (next, size) = checkpointCounting(keyed(reached, parts, "node").distinct()
         .join(dist.select("node"), Seq("node"), "left_anti")
         .withColumn("hops", lit(hop + 1L)))
       if (size == 0L) { exhausted = true; releaseCheckpoint(next) }
@@ -369,9 +435,8 @@ object Graphs {
   }
 
   // (n, deg) over the canonical undirected edge relation
-  private def degrees(edges: DataFrame): DataFrame =
-    edges.select(col("lo").as("n"))
-      .union(edges.select(col("hi").as("n")))
+  private def degrees(edges: DataFrame, parts: Int): DataFrame =
+    keyed(edges.select(col("lo").as("n")).union(edges.select(col("hi").as("n"))), parts, "n")
       .groupBy("n").agg(count(lit(1)).as("deg"))
 
   /** Closing-join strategy gate for [[graphProfile]]: at or below this many
@@ -418,7 +483,8 @@ object Graphs {
     // re-runs the whole upstream pair pipeline — a traced sf0.1 run spent
     // 4 identical self-join stages on it. The checkpoint fills on the
     // eager count below and every later stage reads it.
-    val edges = canonicalEdges(pairs, aCol, bCol).localCheckpoint(false)
+    val edges = canonicalEdges(pairs, aCol, bCol,
+      pairs.sparkSession.sessionState.conf.numShufflePartitions).localCheckpoint(false)
     // One bounded eager action (a scalar count over the checkpoint — this
     // also fills the edge cache before any consumer plans against it).
     // Plan-time size knowledge is what the closing-join gate needs; the
@@ -512,12 +578,13 @@ object Graphs {
   }
 
   /** The materialized PageRank graph state: cached adjacency, cached node
-    * frame, and the base rank `b0 = scale div n` as a driver-side literal.
-    * Exposed `private[graft]` so PlanSpec can audit a raw (un-checkpointed)
-    * iteration frame — the zero-exchange property of the adjacency side
-    * must be pinned by a test, not assumed.
+    * frame (the initial ranks), the base rank `b0 = scale div n` as a
+    * driver-side literal, and the layout's partition count `parts` (see
+    * [[layoutPartitions]]). Exposed `private[graft]` so PlanSpec can audit
+    * a raw (un-checkpointed) iteration frame — the zero-exchange property
+    * of the adjacency side must be pinned by a test, not assumed.
     */
-  private[graft] final case class PrGraph(adj: DataFrame, nodes: DataFrame, b0: Long)
+  private[graft] final case class PrGraph(adj: DataFrame, nodes: DataFrame, b0: Long, parts: Int)
 
   /** Build + MATERIALIZE the adjacency/node caches (see [[pageRank]]'s
     * scaladoc for why eager, why persist-not-checkpoint, and why the
@@ -535,9 +602,11 @@ object Graphs {
     // clustering+ordering requirement is already satisfied — no degree
     // aggregation exchange, no degree join). Sorted before the columnar
     // cache, so no iteration ever exchanges or sorts this side (see
-    // scaladoc for why persist, not localCheckpoint).
-    val adj = bidirectional(pairs, aCol, bCol)
-      .repartition(col("src"))
+    // scaladoc for why persist, not localCheckpoint). Laid out at the
+    // input-sized partition count every rank frame is keyed at.
+    val parts = layoutPartitions(pairs)
+    val adj = bidirectional(pairs, aCol, bCol, parts)
+      .repartition(parts, col("src"))
       .sortWithinPartitions("src")
       .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
       .persist()
@@ -552,8 +621,8 @@ object Graphs {
     // from construction-time laziness, deliberately.
     fill(adj)
     // (node, deg): aggregation over adj's cached hash(src) distribution —
-    // no exchange; cached because every iteration's rank rebuild reads it
-    // (a 2|E|-row adj rescan per use would dwarf the |V|-row result).
+    // no exchange; the initial rank frame, filled here by the job that
+    // counts the nodes.
     val nodes = adj.groupBy(col("src").as("node"))
       .agg(min(col("deg")).as("deg"))
       .persist()
@@ -562,30 +631,38 @@ object Graphs {
     // embedded in every iteration plan as a literal: no per-iteration
     // aggregate or broadcast. An empty edge list has no nodes and yields
     // an empty result; its b0 of 0 is never read.
-    PrGraph(adj, nodes, if (n == 0L) 0L else scale / n)
+    PrGraph(adj, nodes, if (n == 0L) 0L else scale / n, parts)
   }
 
   /** Initial rank frame: every node at `scale div n`. */
   private[graft] def prInit(g: PrGraph): DataFrame =
     g.nodes.select(col("node"), col("deg"), lit(g.b0).as("rank_scaled"))
 
-  /** One un-checkpointed rank iteration — the frame PlanSpec audits. */
-  private[graft] def prStep(ranks: DataFrame, g: PrGraph, dampPpm: Long): DataFrame = {
-    val contrib = ranks
-      .select(col("node").as("src"), expr("rank_scaled div deg").as("c"))
-      .join(g.adj.select(col("src"), col("dst")), Seq("src"))
+  /** One un-checkpointed rank iteration — the frame PlanSpec audits. Its
+    * rank aggregate is its output: the adjacency is symmetric and
+    * deduplicated and every node has an edge, so every node receives
+    * exactly `deg` contributions and the aggregate's row count per node IS
+    * its degree. No join with the node cache rebuilds the frame. Where the
+    * layout has more than one partition and the join does not broadcast
+    * the adjacency, a round exchanges twice, both times at the layout's
+    * partition count (PlanSpec pins it): the checkpointed rank frame (a checkpoint under AQE reports no
+    * partitioning) onto the adjacency's layout, and the contributions onto
+    * their receiving node.
+    */
+  private[graft] def prStep(ranks: DataFrame, g: PrGraph, dampPpm: Long): DataFrame =
+    keyed(
+      ranks
+        .select(col("node").as("src"), expr("rank_scaled div deg").as("c"))
+        .join(g.adj.select(col("src"), col("dst")), Seq("src")),
+      g.parts, "dst")
       .groupBy(col("dst").as("node"))
-      .agg(sum(col("c")).as("__in"))
-    // `div`, never `/`: Spark's `/` on longs returns DOUBLE (rounding),
-    // while `div` truncates like every other engine's integer division
-    g.nodes
-      .join(contrib, Seq("node"), "left")
+      .agg(count(lit(1)).as("deg"), sum(col("c")).as("__in"))
+      // `div`, never `/`: Spark's `/` on longs returns DOUBLE (rounding),
+      // while `div` truncates like every other engine's integer division
       .select(col("node"), col("deg"),
         call_function("div",
-          lit(1000000L - dampPpm) * lit(g.b0) +
-            lit(dampPpm) * coalesce(col("__in"), lit(0L)),
+          lit(1000000L - dampPpm) * lit(g.b0) + lit(dampPpm) * col("__in"),
           lit(1000000L)).as("rank_scaled"))
-  }
 
   /** [[pageRank]] with a CONVERGENCE early exit instead of a fixed
     * iteration count: iterate until the max per-node rank movement
@@ -654,7 +731,9 @@ object Graphs {
     * `r'(u) = ((10⁶ − damp)·r₀ + damp·Σ_{v∼u} (r(v) div deg(v))) div 10⁶`.
     * Scale shape — built so the per-iteration cost is proportional to
     * NODES moved, not edges re-shuffled: the bidirectional adjacency is
-    * hash-partitioned by `src`, sorted within partitions, given its
+    * hash-partitioned by `src` into [[layoutPartitions]] partitions (one
+    * count per call, from the input's size estimate and AQE's coalescing
+    * rule; the shuffle-partition count at scale), sorted within partitions, given its
     * source degree by a count-over-src window INSIDE that one exchange
     * (no degree aggregation, no degree join), and `persist`ed as a
     * COLUMNAR cache. The cache, not a localCheckpoint, is load-bearing
@@ -671,12 +750,12 @@ object Graphs {
     * Spark 4.1's default (pinned by PlanSpec); the operator never writes
     * the key. A session that sets it "true" gets the same ranks, but AQE
     * may then re-plan the cached layouts and re-exchange the adjacency
-    * every iteration. Only the |V|-row rank frame (which
-    * carries its node's degree, so no per-iteration degree join exists)
-    * shuffles per iteration; the contribution aggregation partial-combines
-    * map-side before its |V|-bounded shuffle, and the rank rebuild joins
-    * the cached node frame and aggregate output on their shared hash(node)
-    * distribution (sorts only). Per-round `localCheckpoint` truncates the
+    * every iteration. Only the contributions shuffle per iteration, keyed
+    * on the receiving node at the layout's partition count; the rank
+    * frame carries its node's degree, and the contribution aggregate IS
+    * the next rank frame (it counts each node's `deg` contributions), so
+    * no per-iteration degree or node join exists; the |V|-row rank frame
+    * is shuffled onto the adjacency's layout. Per-round `localCheckpoint` truncates the
     * k-deep rank lineage (|V| rows cached per round; Bench releases these
     * orphaned checkpoints between queries). The adjacency/node caches are
     * SESSION-SCOPED like any persisted index frame — a long-lived session

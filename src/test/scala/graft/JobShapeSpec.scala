@@ -151,6 +151,25 @@ class JobShapeSpec extends SparkSpec {
         Dedup.connectedComponents(pairs, "a", "b", smallGraphEdges = 0L).collect()))
   }
 
+  test("graph layouts are sized from the input: one partition at 200 edges, today's count past the advisory size or without statistics") {
+    val (edges, _) = GraphFixtures.clusterGraph(200, seed = 7L)
+    val pairs = edges.toDF("a", "b")
+    assert(Graphs.layoutPartitions(pairs) == 1, "a 200-edge graph fits one partition")
+    val shufflePartitions = spark.sessionState.conf.numShufflePartitions
+    val estimate = pairs.queryExecution.optimizedPlan.stats.sizeInBytes * 2
+    val s = spark.newSession()
+    def withAdvisory(bytes: BigInt): Int = {
+      s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", bytes.toString)
+      Graphs.layoutPartitions(s.createDataFrame(edges).toDF("a", "b"))
+    }
+    assert(withAdvisory((estimate + 1) / 2) == 2, "twice the advisory size: two partitions")
+    assert(withAdvisory(estimate / (shufflePartitions + 1)) == shufflePartitions,
+      "past shuffle partitions × advisory size: the shuffle-partition count")
+    // an RDD-backed frame has no size statistics: Spark's defaultSizeInBytes
+    assert(Graphs.layoutPartitions(spark.createDataFrame(pairs.rdd, pairs.schema)) == shufflePartitions,
+      "unknown statistics: the shuffle-partition count")
+  }
+
   test("graph loops run a pinned number of Spark jobs") {
     // Each loop reads its per-round counter from an observed metric on the
     // checkpoint job that materializes the round, PageRank's base rank is a
@@ -158,10 +177,14 @@ class JobShapeSpec extends SparkSpec {
     // probe added back per round, or a per-iteration aggregate, breaks the
     // ceiling. Counts include the action that consumes the result.
     val jobs = graphLoops.map { case (op, run) => op -> jobsOf(run()) }.toMap
+    info(s"jobs per loop: ${jobs.view.mapValues(_.size).toMap}")
     // 28, 26, 29 and 37 jobs before the observed counters, the literal
-    // base rank, the one-pass adjacency and the contraction
-    val ceilings = Map("pageRank" -> 16, "kCoreReleased" -> 15, "bfsHops" -> 20,
-      "connectedComponents" -> 18)
+    // base rank, the one-pass adjacency and the contraction; 16, 15, 20
+    // and 18 before the input-sized layouts (one partition here, where
+    // CC's contraction solves the graph before its first round) and
+    // PageRank's rank aggregate taking the place of its node join
+    val ceilings = Map("pageRank" -> 13, "kCoreReleased" -> 15, "bfsHops" -> 20,
+      "connectedComponents" -> 11)
     val over = ceilings.filter { case (op, ceiling) => jobs(op).size > ceiling }
     assert(over.isEmpty, over.keys.map(op => s"$op ran ${jobs(op).size} jobs " +
       s"(ceiling ${ceilings(op)}): ${jobs(op).mkString(", ")}").mkString("\n"))

@@ -1,13 +1,26 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
-import graft.operators.{Dedup, Similarity, Skew}
+import graft.operators.{Dedup, Graphs, Similarity, Skew}
 
 /** Unit specs for the dedup / similarity / text extension operators. */
 class OperatorsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** A session whose graph layouts keep `partitions` partitions: the
+    * shuffle-partition count is set, and the advisory partition size is
+    * one byte, so no input is small enough for [[Graphs.layoutPartitions]]
+    * to size a layout below it.
+    */
+  private def layoutSession(partitions: Int): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
+    s
+  }
 
   private lazy val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog", "en"),
@@ -973,8 +986,12 @@ class OperatorsSpec extends SparkSpec {
     // a 1024-node path: diameter 1023 — plain label propagation would need
     // ~1023 rounds; pointer jumping doubles reach per round, so convergence
     // must land near log2 (with slack for the min-label interleaving).
-    // This is the small twin of SkewBench's 400k-node chain case.
-    val chain = spark.range(1023).select(col("id").as("a"), (col("id") + 1).as("b"))
+    // This is the small twin of SkewBench's 400k-node chain case. Laid
+    // out in one partition, the loop's local contraction would solve the
+    // chain before the first round, so the layout keeps 4 partitions.
+    val s = layoutSession(4)
+    val chain = s.range(1023).select(col("id").as("a"), (col("id") + 1).as("b"))
+    assert(Graphs.layoutPartitions(chain) == 4)
     // smallGraphEdges = 0 forces the distributed loop — this test PINS the
     // loop's round count, which the driver fast path would short-circuit
     val (labels, rounds) = Dedup.connectedComponentsWithRounds(chain, "a", "b",
@@ -1072,8 +1089,8 @@ class OperatorsSpec extends SparkSpec {
       val driver = rows(Dedup.connectedComponents(frame(spark), "a", "b"))
       assert(driver.toSet == want, s"$name: driver union-find diverged from the model")
       for (partitions <- Seq(1, 4, 16)) {
-        val s = spark.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+        val s = layoutSession(partitions)
+        assert(Graphs.layoutPartitions(frame(s)) == partitions, s"$name at $partitions")
         val got = rows(Dedup.connectedComponents(frame(s), "a", "b", smallGraphEdges = 0L))
         assert(got.size == got.distinct.size, s"$name at $partitions: a node labelled twice")
         assert(got.toSet == want, s"$name at $partitions partitions: ${(got.toSet -- want).take(5)}")
@@ -1089,13 +1106,88 @@ class OperatorsSpec extends SparkSpec {
     // rings and circulants under a seeded id permutation, 8 partitions:
     // label propagation alone needs 5 rounds here
     val (edges, clusters) = GraphFixtures.clusterGraph(2000, seed = 1L)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val s = layoutSession(8)
+    val pairs = s.createDataFrame(edges).toDF("a", "b")
+    assert(Graphs.layoutPartitions(pairs) == 8)
     val (labels, rounds) = Dedup.connectedComponentsWithRounds(
-      s.createDataFrame(edges).toDF("a", "b"), "a", "b", smallGraphEdges = 0L)
+      pairs, "a", "b", smallGraphEdges = 0L)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == clusters.flatMap(c => c.map(_ -> c.min)).toMap)
     assert(rounds <= 3, s"contracted loop took $rounds rounds")
+  }
+
+  test("graph loops return the same results with the sized layout and with 8 and 16 partitions") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    // The layout's partition count follows the input's size, so the four
+    // loops must not depend on it. The random graph carries self-loops,
+    // duplicate and reversed pairs and null endpoints.
+    val (cluster, clusters) = GraphFixtures.clusterGraph(300, seed = 3L)
+    val rnd = new scala.util.Random(20261021L)
+    val base = Seq.fill(360)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong)) ++
+      Seq.tabulate(8)(i => (i.toLong, i.toLong))
+    val random = rnd.shuffle(base ++ base.take(40) ++ base.slice(40, 80).map(_.swap))
+      .map { case (a, b) =>
+        rnd.nextInt(30) match {
+          case 0 => (Option.empty[Long], Some(b))
+          case 1 => (Some(a), Option.empty[Long])
+          case _ => (Some(a), Some(b))
+        }
+      }
+    val graphs = Seq[(String, SparkSession => DataFrame, Seq[Long])](
+      ("cluster graph", _.createDataFrame(cluster).toDF("a", "b"),
+        clusters.indices.filter(_ % 4 == 0).map(clusters(_).head)),
+      ("random graph", _.createDataFrame(random).toDF("a", "b"), Seq(0L, 7L, 50L)))
+    def results(s: SparkSession, pairs: DataFrame, seeds: Seq[Long]): Map[String, Set[Row]] = {
+      val seedFrame = s.createDataFrame(seeds.map(Tuple1(_))).toDF("s")
+      Map(
+        "pageRank" -> Graphs.pageRank(pairs, "a", "b", iters = 3),
+        "kCoreReleased" -> Graphs.kCoreReleased(pairs, "a", "b", k = 3),
+        "bfsHops" -> Graphs.bfsHops(pairs, "a", "b", seedFrame, "s", maxHops = 3),
+        "connectedComponents" -> Dedup.connectedComponents(pairs, "a", "b", smallGraphEdges = 0L)
+      ).map { case (op, df) => op -> df.collect().toSet }
+    }
+    for ((name, frame, seeds) <- graphs) {
+      val sizedPairs = frame(spark)
+      assert(Graphs.layoutPartitions(sizedPairs) == 1, name)
+      val sized = results(spark, sizedPairs, seeds)
+      assert(sized.values.forall(_.nonEmpty), s"$name: $sized")
+      for (partitions <- Seq(8, 16)) {
+        val s = layoutSession(partitions)
+        val pairs = frame(s)
+        assert(Graphs.layoutPartitions(pairs) == partitions, s"$name at $partitions")
+        val forced = results(s, pairs, seeds)
+        for (op <- sized.keys)
+          assert(forced(op) == sized(op), s"$name, $op: $partitions partitions differ from the sized layout")
+      }
+    }
+  }
+
+  test("every graph loop's returned frame reads the same twice, after every other loop ran") {
+    import org.apache.spark.sql.DataFrame
+    // The loops release the checkpoints and caches they no longer need
+    // (kCore's superseded degree generations and removed sets, BFS's empty
+    // last level, pageRankConverged's superseded ranks, CC's edge cache).
+    // A returned frame whose plan still read one of them would fail, or
+    // differ, on a later read. All loops run first, so every release has
+    // happened before any frame is read.
+    val (edges, clusters) = GraphFixtures.clusterGraph(200, seed = 9L)
+    val pairs = edges.toDF("a", "b")
+    val seeds = clusters.map(_.head).toDF("s")
+    val (kCore, _, releaseKCore) = Graphs.kCoreManaged(pairs, "a", "b", k = 3)
+    val frames: Seq[(String, DataFrame)] = Seq(
+      "pageRank" -> Graphs.pageRank(pairs, "a", "b", iters = 3),
+      "pageRankConverged" -> Graphs.pageRankConverged(pairs, "a", "b")._1,
+      "kCoreManaged" -> kCore,
+      "kCoreReleased" -> Graphs.kCoreReleased(pairs, "a", "b", k = 3),
+      "bfsHops" -> Graphs.bfsHops(pairs, "a", "b", seeds, "s", maxHops = 50),
+      "connectedComponents" -> Dedup.connectedComponents(pairs, "a", "b", smallGraphEdges = 0L))
+    val first = frames.map { case (op, df) => op -> df.collect().toSet }
+    val second = frames.map { case (op, df) => op -> df.collect().toSet }
+    for (((op, a), (_, b)) <- first.zip(second)) {
+      assert(a.nonEmpty, op)
+      assert(a == b, s"$op read differently the second time")
+    }
+    releaseKCore()
   }
 
   test("repetitionStats: hand-computed dup line/n-gram fractions; empty inputs are 0") {

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ColumnarToRowExec, ExplainMode, FilterExec, InputAdapter, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 /** Physical-plan audits: the properties the 100 TB design depends on must
   * be visible in the plan, not assumed — filter/column pushdown into the
@@ -20,6 +23,43 @@ class PlanSpec extends SparkSpec {
     */
   private def shuffleExchanges(p: String): Int =
     p.linesIterator.count(l => l.contains("- Exchange") && !l.contains("BroadcastExchange"))
+
+  /** Every node of an executed plan, through adaptive wrappers, query
+    * stages and reused exchanges.
+    */
+  private def collectPlans(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => collectPlans(a.executedPlan)
+    case q: QueryStageExec => q +: collectPlans(q.plan)
+    case r: ReusedExchangeExec => r +: collectPlans(r.child)
+    case other => other +: other.children.flatMap(collectPlans)
+  }
+
+  /** The child of a node that changes neither keys nor cardinality
+    * (projections, filters, sorts, codegen and stage wrappers).
+    */
+  private def narrowChild(p: SparkPlan): Option[SparkPlan] = p match {
+    case w: WholeStageCodegenExec => Some(w.child)
+    case i: InputAdapter => Some(i.child)
+    case q: QueryStageExec => Some(q.plan)
+    case r: ReusedExchangeExec => Some(r.child)
+    case pr: ProjectExec => Some(pr.child)
+    case f: FilterExec => Some(f.child)
+    case s: SortExec => Some(s.child)
+    case c: ColumnarToRowExec => Some(c.child)
+    case _ => None
+  }
+
+  /** A plan that only re-reads a cached frame: an exchange over it
+    * re-exchanges the cache.
+    */
+  @scala.annotation.tailrec
+  private def reachesCache(p: SparkPlan): Boolean = p match {
+    case _: InMemoryTableScanExec => true
+    case other => narrowChild(other) match {
+      case Some(n) => reachesCache(n)
+      case None => false
+    }
+  }
 
   test("filters and projections push down to the parquet scan") {
     val p = plan("q_s1_scan_filter")
@@ -596,10 +636,8 @@ class PlanSpec extends SparkSpec {
     assert(spark.newSession().conf.get(cachedLayoutKey) == "false",
       "Spark's default for the cached-layout conf changed")
     assert(spark.conf.get(cachedLayoutKey) == "false")
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val pairs = spark.range(4000).selectExpr("id % 500 AS pa", "(id * 7 + 1) % 500 AS pb")
       .filter("pa != pb")
     val g = graft.operators.Graphs.buildPrGraph(pairs, "pa", "pb", 1000000000000L)
@@ -609,12 +647,6 @@ class PlanSpec extends SparkSpec {
     val step = graft.operators.Graphs.prStep(
       graft.operators.Graphs.prInit(g).localCheckpoint(false), g, dampPpm = 850000L)
     step.queryExecution.toRdd.count() // final AQE plan
-    def collectPlans(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => collectPlans(a.executedPlan)
-      case q: QueryStageExec => q +: collectPlans(q.plan)
-      case r: ReusedExchangeExec => r +: collectPlans(r.child)
-      case other => other +: other.children.flatMap(collectPlans)
-    }
     val all = collectPlans(step.queryExecution.executedPlan)
     val cachedScans = all.collect { case s: InMemoryTableScanExec => s }
     assert(cachedScans.nonEmpty, "iteration must read the adjacency/node caches")
@@ -623,27 +655,7 @@ class PlanSpec extends SparkSpec {
     // or cardinality) ends at a cached scan; the contribution
     // aggregation's exchange above the join is legitimate (it ships
     // |V|-bounded partial aggregates), so subtree containment alone
-    // would over-flag
-    import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, SortExec, WholeStageCodegenExec}
-    def narrowChild(p: SparkPlan): Option[SparkPlan] = p match {
-      case w: WholeStageCodegenExec => Some(w.child)
-      case i: InputAdapter => Some(i.child)
-      case q: QueryStageExec => Some(q.plan)
-      case r: ReusedExchangeExec => Some(r.child)
-      case pr: ProjectExec => Some(pr.child)
-      case f: FilterExec => Some(f.child)
-      case s: SortExec => Some(s.child)
-      case c: ColumnarToRowExec => Some(c.child)
-      case _ => None
-    }
-    @scala.annotation.tailrec
-    def reachesCache(p: SparkPlan): Boolean = p match {
-      case _: InMemoryTableScanExec => true
-      case other => narrowChild(other) match {
-        case Some(n) => reachesCache(n)
-        case None => false
-      }
-    }
+    // would over-flag (see [[reachesCache]])
     all.collect { case e: ShuffleExchangeExec => e }.foreach { e =>
       assert(!reachesCache(e.child),
         s"cached adjacency/node frame re-exchanged in the iteration plan:\n$e")
@@ -654,6 +666,50 @@ class PlanSpec extends SparkSpec {
     assert(all.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
       s"iteration plan cross-joins a base-rank frame:\n${step.queryExecution.executedPlan}")
     spark.catalog.clearCache()
+  }
+
+  test("pagerank iteration at an intermediate layout: both round exchanges land on the adjacency's layout") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.operators.Graphs
+    // 1 < n < shuffle partitions: the advisory size set to a third of the
+    // input estimate gives 3 of 8. Broadcasts are off, so the contribution
+    // join must meet the cached adjacency on its layout.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val pairs = s.range(4000).selectExpr("id % 500 AS pa", "(id * 7 + 1) % 500 AS pb")
+      .filter("pa != pb")
+    val estimate = pairs.queryExecution.optimizedPlan.stats.sizeInBytes * 2
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", ((estimate + 2) / 3).toString)
+    val g = Graphs.buildPrGraph(pairs, "pa", "pb", 1000000000000L)
+    try {
+      assert(g.parts == 3, s"layout of ${g.parts} partitions")
+      // the second step: its rank input is a checkpointed step, as in the loop
+      val ranks = Graphs.prStep(Graphs.prInit(g).localCheckpoint(false), g, 850000L)
+        .localCheckpoint(false)
+      val step = Graphs.prStep(ranks, g, 850000L)
+      step.queryExecution.toRdd.count() // final AQE plan
+      val all = collectPlans(step.queryExecution.executedPlan)
+      val exchanges = all.collect { case e: ShuffleExchangeExec => e }
+      exchanges.foreach(e => assert(!reachesCache(e.child), s"adjacency re-exchanged:\n$e"))
+      // two exchanges, both at the layout's count: the checkpointed rank
+      // frame (a checkpoint under AQE reports no partitioning) onto the
+      // adjacency's layout, and the contributions onto their receiving
+      // node. At the shuffle-partition count the first would re-exchange
+      // the adjacency too, and no join with the node cache sits above the
+      // round aggregate.
+      assert(exchanges.map(_.outputPartitioning.numPartitions) == Seq(3, 3),
+        s"exchanges:\n${exchanges.mkString("\n")}")
+      assert(all.collect { case j: BaseJoinExec => j }.size == 1,
+        s"one join per round:\n${step.queryExecution.executedPlan}")
+      val scans = all.collect { case t: InMemoryTableScanExec => t }
+      assert(scans.nonEmpty && scans.forall(_.output.map(_.name).contains("dst")),
+        s"the round reads the adjacency cache and no other:\n${step.queryExecution.executedPlan}")
+    } finally {
+      g.adj.unpersist(false)
+      g.nodes.unpersist(false)
+    }
   }
 
   test("the catalog index holds 159 distinct names; a name two families share throws") {
